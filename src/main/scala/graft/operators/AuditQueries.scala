@@ -664,19 +664,7 @@ object AuditQueries {
     */
   private[graft] def cboPrepare(spark: SparkSession, dir: String): Unit =
     Seq("orders", "customer", "nation").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS graft_cbo_$t")
-      // the in-memory catalog forgets tables between JVMs but their files
-      // remain — clear the physical location too (join_bucketed's rule)
-      val loc = java.nio.file.Paths.get(
-        new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath match {
-          case "" => spark.conf.get("spark.sql.warehouse.dir")
-          case p => p
-        }, s"graft_cbo_$t")
-      if (java.nio.file.Files.exists(loc)) {
-        java.nio.file.Files.walk(loc)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
-      }
+      StoredLayout.drop(spark, s"graft_cbo_$t")
       graft.Tables.t(spark, dir, t).write.mode("overwrite")
         .saveAsTable(s"graft_cbo_$t")
       spark.sql(s"ANALYZE TABLE graft_cbo_$t COMPUTE STATISTICS")

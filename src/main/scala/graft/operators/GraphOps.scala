@@ -1485,7 +1485,7 @@ object GraphOps {
     * exchanges only the frontier — benched SLOWER at sf0.1 (walk_pairs
     * 4.4 → 5.9-6.7 s) because the hop joins are O(walkers)-tiny here
     * and AQE coalesces both checkpoint-side exchanges to a handful of
-    * tasks, while the pinned cache forces 32-partition stages per hop
+    * tasks, while the pinned cache forces full-width stages per hop
     * (task-dispatch cost > the ~26 MB shuffle it saves; contrast
     * biasedWalkLoop, whose per-step frames are ~75× larger and DO pay
     * for pinned edge-role caches). At a scale where the edge re-shuffle
@@ -1701,34 +1701,35 @@ object GraphOps {
         element_at(col("nbrs"), col("jstar").cast("int")).as("cur"))
   }
 
-  private def biasedWalkLoop(edgesIn: DataFrame,
+  private[graft] def biasedWalkLoop(edgesIn: DataFrame,
       steps: Int, retP: Double, outQ: Double): DataFrame = {
     val adj = biasedNeighborRole(edgesIn)
-    // step 1: first-order uniform (no prev yet) — the graphRandomWalk
-    // pick. rn = row_number over (src, dst asc) is exactly the 1-based
-    // index into the sorted nbrs array, so the rank join is a
-    // projection over the cached role (deg checkpoint + two joins + a
-    // ranking window, deleted).
-    var state = adj.select(col("src").as("start"), col("src").as("cur"),
-        element_at(col("nbrs"), (conv(substring(
-            md5(concat_ws("|", col("src"), lit(1), col("src"))), 1, 8),
-          16, 10).cast("long") % size(col("nbrs")) + 1).cast("int")).as("nxt"))
-      .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"))
-      .localCheckpoint()
-    // slice 0 reads off the step-1 CHECKPOINT (prev = start = src there),
-    // not off `adj`: the role is unpersisted before the caller's action,
-    // so a lazy projection over it would recompute the groupBy
-    val slices = scala.collection.mutable.ArrayBuffer(
-      state.select(col("start"), lit(0).as("step"), col("prev").as("node")),
-      state.select(col("start"), lit(1).as("step"), col("cur").as("node")))
-    for (t <- 2 to steps) {
-      state = biasedStepDraw(state, adj, t, retP, outQ).localCheckpoint()
-      slices += state.select(col("start"), lit(t).as("step"), col("cur").as("node"))
-    }
-    adj.unpersist()
-    slices.reduce(_ unionByName _)
-      .select(col("start").as("start_id"), col("step"), col("node"))
-      .orderBy("start_id", "step")
+    try {
+      // step 1: first-order uniform (no prev yet) — the graphRandomWalk
+      // pick. rn = row_number over (src, dst asc) is exactly the 1-based
+      // index into the sorted nbrs array, so the rank join is a
+      // projection over the cached role (deg checkpoint + two joins + a
+      // ranking window, deleted).
+      var state = adj.select(col("src").as("start"), col("src").as("cur"),
+          element_at(col("nbrs"), (conv(substring(
+              md5(concat_ws("|", col("src"), lit(1), col("src"))), 1, 8),
+            16, 10).cast("long") % size(col("nbrs")) + 1).cast("int")).as("nxt"))
+        .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"))
+        .localCheckpoint()
+      // slice 0 reads off the step-1 CHECKPOINT (prev = start = src there),
+      // not off `adj`: the role is unpersisted before the caller's action,
+      // so a lazy projection over it would recompute the groupBy
+      val slices = scala.collection.mutable.ArrayBuffer(
+        state.select(col("start"), lit(0).as("step"), col("prev").as("node")),
+        state.select(col("start"), lit(1).as("step"), col("cur").as("node")))
+      for (t <- 2 to steps) {
+        state = biasedStepDraw(state, adj, t, retP, outQ).localCheckpoint()
+        slices += state.select(col("start"), lit(t).as("step"), col("cur").as("node"))
+      }
+      slices.reduce(_ unionByName _)
+        .select(col("start").as("start_id"), col("step"), col("node"))
+        .orderBy("start_id", "step")
+    } finally adj.unpersist() // also when a step throws
   }
 
   /** Skip-gram PAIR generation over the walk corpus — the step that
@@ -1784,32 +1785,18 @@ object GraphOps {
     // Same multiset of pair instances, same census counts (§2.4: one
     // exchange where two + two sorts stood).
     val walks = walkCensusCorpus(orders, lineitem, steps)
-    // ABA dial (the stageSlices precedent): GRAFT_CENSUS_SELFJOIN=true
-    // restores the r14 self-join census so both forms can run back to
-    // back on the same box. Default: the pivot form.
-    if (sys.env.get("GRAFT_CENSUS_SELFJOIN").contains("true")) {
-      val a = walks.select(col("start_id"), col("step").as("i"),
-        col("node").as("center"))
-      val b = walks.select(col("start_id"), col("step").as("j"),
-        col("node").as("context"))
-      a.join(b, Seq("start_id"))
-        .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= window)
-        .groupBy(col("center"), col("context"))
-        .agg(count(lit(1)).as("n_pairs"))
-    } else {
-      val pivotAggs = (0 to steps).map(t =>
-        max(when(col("step") === t, col("node"))).as(s"n$t"))
-      val pairCols = for {
-        i <- 0 to steps
-        j <- 0 to steps
-        if i != j && math.abs(i - j) <= window
-      } yield struct(col(s"n$i").as("center"), col(s"n$j").as("context"))
-      walks.groupBy(col("start_id"))
-        .agg(pivotAggs.head, pivotAggs.tail: _*)
-        .select(explode(array(pairCols: _*)).as("p"))
-        .groupBy(col("p.center").as("center"), col("p.context").as("context"))
-        .agg(count(lit(1)).as("n_pairs"))
-    }
+    val pivotAggs = (0 to steps).map(t =>
+      max(when(col("step") === t, col("node"))).as(s"n$t"))
+    val pairCols = for {
+      i <- 0 to steps
+      j <- 0 to steps
+      if i != j && math.abs(i - j) <= window
+    } yield struct(col(s"n$i").as("center"), col(s"n$j").as("context"))
+    walks.groupBy(col("start_id"))
+      .agg(pivotAggs.head, pivotAggs.tail: _*)
+      .select(explode(array(pairCols: _*)).as("p"))
+      .groupBy(col("p.center").as("center"), col("p.context").as("context"))
+      .agg(count(lit(1)).as("n_pairs"))
   }
 
   /** Degree ASSORTATIVITY — Pearson correlation of endpoint degrees over
@@ -1872,11 +1859,9 @@ object GraphOps {
 
   // ---- stored adjacency layout (round 8) -------------------------------
 
-  private def adjTableName(sfDir: String): String =
-    "graft_adj_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Build-or-reuse the STORED adjacency: the chunked per-src adjacency
-    * rows written ONCE as a `bucketBy(32, "src")` table — the
+    * rows written ONCE as a src-bucketed table at the session's shuffle
+    * width ([[StoredLayout]]) — the
     * sink_ann_index stance applied to graphs. The bucketed scan reports
     * the src HashPartitioning straight from storage, so every iterative
     * consumer joins against it with only the O(V) rank-side exchange and
@@ -1884,32 +1869,14 @@ object GraphOps {
     * pagerank entry, re-run identically by all five graph entries per
     * sweep — the round-7 verdict's finding) becomes a once-per-ingest
     * write. Table name is keyed by sfDir so layouts from different scale
-    * factors never collide; the in-memory catalog forgets tables between
-    * JVMs while their files remain, so a (re)build clears the physical
-    * location first (the join_bucketed lesson).
+    * factors never collide.
     */
   private[graft] def ensureAdjacencyTable(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rebuild: Boolean = false): String = {
-    val name = adjTableName(sfDir)
-    if (!rebuild && spark.catalog.tableExists(name)) return name
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath match {
-        case "" => spark.conf.get("spark.sql.warehouse.dir")
-        case p => p
-      }, name)
-    if (java.nio.file.Files.exists(loc)) {
-      java.nio.file.Files.walk(loc)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    adjacencyFrame(orders, lineitem)
-      .write.bucketBy(32, "src").sortBy("src")
-      .mode("overwrite").saveAsTable(name)
-    name
-  }
+      rebuild: Boolean = false): String =
+    StoredLayout.ensure(spark, "adj", sfDir, "src", rebuild)(
+      adjacencyFrame(orders, lineitem))
 
   /** The stored-layout WRITE entry + its content audit: (re)build the
     * bucketed adjacency table, then read it back and fold it to a
@@ -1954,9 +1921,6 @@ object GraphOps {
 
   // ---- stored co-purchase layout (round 8 continuation) ----------------
 
-  private def coTableName(sfDir: String): String =
-    "graft_copurchase_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Build-or-reuse the STORED co-purchase edge layout — the
     * sink_graph_adjacency stance applied to the PROJECTED graph: the
     * deg²-capped, percentile-thresholded supplier co-purchase edges
@@ -1968,25 +1932,9 @@ object GraphOps {
   private[graft] def ensureCoPurchaseTable(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rebuild: Boolean = false): String = {
-    val name = coTableName(sfDir)
-    if (!rebuild && spark.catalog.tableExists(name)) return name
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath match {
-        case "" => spark.conf.get("spark.sql.warehouse.dir")
-        case p => p
-      }, name)
-    if (java.nio.file.Files.exists(loc)) {
-      java.nio.file.Files.walk(loc)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    coPurchaseEdges(orders, lineitem)
-      .write.bucketBy(8, "src").sortBy("src")
-      .mode("overwrite").saveAsTable(name)
-    name
-  }
+      rebuild: Boolean = false): String =
+    StoredLayout.ensure(spark, "copurchase", sfDir, "src", rebuild)(
+      coPurchaseEdges(orders, lineitem))
 
   /** The stored co-purchase WRITE entry + content audit — per logical
     * bucket (src % 8): edge count, distinct sources, id extrema. Layout

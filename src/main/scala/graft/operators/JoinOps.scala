@@ -192,30 +192,12 @@ object JoinOps {
     */
   def bucketed(orders: DataFrame, customer: DataFrame): DataFrame = {
     val spark = orders.sparkSession
-    val nb = 8
-    Seq("graft_bkt_orders", "graft_bkt_customer").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      // the in-memory catalog forgets tables between JVMs but their files
-      // remain — clear the physical location too
-      val loc = java.nio.file.Paths.get(
-        new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath match {
-          case "" => spark.conf.get("spark.sql.warehouse.dir")
-          case p => p
-        }, t)
-      if (java.nio.file.Files.exists(loc)) {
-        java.nio.file.Files.walk(loc)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.delete(f))
-      }
-    }
-    orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .write.bucketBy(nb, "o_custkey").sortBy("o_custkey")
-      .mode("overwrite").saveAsTable("graft_bkt_orders")
-    customer.select(col("c_custkey"), col("c_mktsegment"))
-      .write.bucketBy(nb, "c_custkey").sortBy("c_custkey")
-      .mode("overwrite").saveAsTable("graft_bkt_customer")
-    val o = spark.table("graft_bkt_orders")
-    val c = spark.table("graft_bkt_customer")
+    val o = spark.table(StoredLayout.ensure(spark, "bkt_orders", "", "o_custkey",
+      rebuild = true)(
+      orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))))
+    val c = spark.table(StoredLayout.ensure(spark, "bkt_customer", "", "c_custkey",
+      rebuild = true)(
+      customer.select(col("c_custkey"), col("c_mktsegment"))))
     // merge hint: at test scale AQE would pick broadcast (also shuffle-
     // free); the hint pins the sort-merge path so the plan demonstrates
     // what bucketing buys when BOTH sides are too big to broadcast —

@@ -737,9 +737,6 @@ object SimOps {
     */
   // ---- stored kNN-graph layout (round 8 continuation) ------------------
 
-  private def knnTableName(sfDir: String): String =
-    "graft_knngraph_" + sfDir.replaceAll("[^a-zA-Z0-9]", "_")
-
   /** Build-or-reuse the STORED kNN graph — the sink_graph_adjacency
     * stance applied to the SIMILARITY graph: the learned-cell nprobe
     * build (the two most expensive sim entries each re-paid it per
@@ -749,25 +746,9 @@ object SimOps {
   private[graft] def ensureKnnGraphTable(
       spark: org.apache.spark.sql.SparkSession,
       embeddings: DataFrame, sfDir: String,
-      rebuild: Boolean = false): String = {
-    val name = knnTableName(sfDir)
-    if (!rebuild && spark.catalog.tableExists(name)) return name
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val loc = java.nio.file.Paths.get(
-      new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath match {
-        case "" => spark.conf.get("spark.sql.warehouse.dir")
-        case p => p
-      }, name)
-    if (java.nio.file.Files.exists(loc)) {
-      java.nio.file.Files.walk(loc)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
-    simKnnGraph(embeddings)
-      .write.bucketBy(32, "src").sortBy("src")
-      .mode("overwrite").saveAsTable(name)
-    name
-  }
+      rebuild: Boolean = false): String =
+    StoredLayout.ensure(spark, "knngraph", sfDir, "src", rebuild)(
+      simKnnGraph(embeddings))
 
   /** The stored kNN-graph WRITE entry + content audit — per logical
     * bucket (src % 8): edge count, distinct anchors, cosine extrema.

@@ -1071,6 +1071,68 @@ class OperatorSpec extends SparkTestBase {
     assert(a2 === b2, s"hard negatives differ")
   }
 
+  test("stored adjacency: the layout is bucketed at the session's shuffle width") {
+    val name = GraphOps.ensureAdjacencyTable(spark,
+      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001), sf0001)
+    val spec = spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .bucketSpec
+    assert(spec.map(_.numBuckets) ===
+      Some(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      s"$name bucket spec $spec")
+  }
+
+  test("graph_random_walk_biased_stored: same rows in order at widths 4 and 8, each from its own layout") {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    def at(width: Int): (String, Seq[Row]) = {
+      spark.conf.set("spark.sql.shuffle.partitions", width.toString)
+      val name = GraphOps.ensureAdjacencyTable(spark,
+        Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001), sf0001)
+      val rows = SparkEntry.queries("graph_random_walk_biased_stored")(spark, sf0001)
+        .collect().toSeq
+      (name, rows)
+    }
+    val (name4, rows4) = try at(4) finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val (name8, rows8) = try at(8) finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try {
+      assert(name4 != name8, s"widths 4 and 8 share the layout $name4")
+      assert(rows4.nonEmpty)
+      assert(rows4 === rows8, "biased walk output depends on the layout width")
+    } finally StoredLayout.drop(spark, name8)
+  }
+
+  test("biased walk: a loop that throws at its step-1 checkpoint leaves no cache behind") {
+    spark.catalog.clearCache()
+    // the neighbor role is persisted before the loop; the failing dst
+    // surfaces only when the step-1 checkpoint computes it
+    val edges = spark.range(8).select(col("id").as("src"),
+      when(col("id") === 5, raise_error(lit("edge 5 is broken")))
+        .otherwise(col("id") + 1).as("dst"))
+    val e = intercept[Exception](GraphOps.biasedWalkLoop(edges, 4, 2.0, 0.5))
+    assert(e.toString.contains("edge 5 is broken") ||
+      Option(e.getCause).exists(_.toString.contains("edge 5 is broken")), e.toString)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the biased walk's neighbor role is still cached after the loop threw")
+  }
+
+  test("walk pair census: pivot form matches the start_id self-join census row for row (r15)") {
+    val walks = GraphOps.walkCensusCorpus(
+      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001))
+    val a = walks.select(col("start_id"), col("step").as("i"),
+      col("node").as("center"))
+    val b = walks.select(col("start_id"), col("step").as("j"),
+      col("node").as("context"))
+    val oldCensus = a.join(b, Seq("start_id"))
+      .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= 2)
+      .groupBy(col("center"), col("context"))
+      .agg(count(lit(1)).as("n_pairs"))
+    val newCensus = GraphOps.walkPairsRaw(
+      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001))
+    val diff = oldCensus.exceptAll(newCensus).count() +
+      newCensus.exceptAll(oldCensus).count()
+    assert(diff == 0, s"pivot census diverged from the self-join census on $diff rows")
+  }
+
   test("graph_bfs_stored serves identical distance rings from the bucketed layout") {
     val a = SparkEntry.queries("graph_bfs")(spark, sf0001).collect().toSeq
     val b = SparkEntry.queries("graph_bfs_stored")(spark, sf0001).collect().toSeq

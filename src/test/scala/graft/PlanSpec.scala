@@ -716,10 +716,13 @@ class PlanSpec extends SparkTestBase {
       val adj = spark.table(name).persist()
       val ids = adj.select(col("src").as("id")).distinct()
       val n = ids.count()
-      // aligned to the layout's BUCKET count (32), not the session's
-      // shuffle width: co-location is against storage partitioning here
+      // aligned to the layout's BUCKET count as the catalog records it:
+      // co-location is against storage partitioning here
+      val buckets = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+        .bucketSpec.get.numBuckets
       val ranks = ids.select(col("id"), lit(1.0 / n).as("rank"))
-        .repartition(32, col("id")).persist()
+        .repartition(buckets, col("id")).persist()
       ranks.count()
       val step = GraphOps.superstepPartitioned(adj, ranks, n, 0.85)
       val root = step.queryExecution.executedPlan match {
@@ -1145,25 +1148,6 @@ class PlanSpec extends SparkTestBase {
     assert(sorts.isEmpty, s"hash-agg pivot needs no sort, saw ${sorts.length}:\n$p")
     assert(!p.contains("transform("),
       s"pair fanout must be a literal struct array, not a HOF:\n$p")
-  }
-
-  test("walk pair census: pivot form matches the start_id self-join census row for row (r15)") {
-    import org.apache.spark.sql.functions._
-    val walks = GraphOps.walkCensusCorpus(
-      orders(spark, sf0001), lineitem(spark, sf0001))
-    val a = walks.select(col("start_id"), col("step").as("i"),
-      col("node").as("center"))
-    val b = walks.select(col("start_id"), col("step").as("j"),
-      col("node").as("context"))
-    val oldCensus = a.join(b, Seq("start_id"))
-      .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= 2)
-      .groupBy(col("center"), col("context"))
-      .agg(count(lit(1)).as("n_pairs"))
-    val newCensus = GraphOps.walkPairsRaw(
-      orders(spark, sf0001), lineitem(spark, sf0001))
-    val diff = oldCensus.exceptAll(newCensus).count() +
-      newCensus.exceptAll(oldCensus).count()
-    assert(diff == 0, s"pivot census diverged from the self-join census on $diff rows")
   }
 
   test("probe cells: native top_cells_l2 kernel matches the crossJoin+window ranking row for row (r15)") {
