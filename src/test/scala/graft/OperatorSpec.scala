@@ -1115,24 +1115,6 @@ class OperatorSpec extends SparkTestBase {
       "the biased walk's neighbor role is still cached after the loop threw")
   }
 
-  test("walk pair census: pivot form matches the start_id self-join census row for row (r15)") {
-    val walks = GraphOps.walkCensusCorpus(
-      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001))
-    val a = walks.select(col("start_id"), col("step").as("i"),
-      col("node").as("center"))
-    val b = walks.select(col("start_id"), col("step").as("j"),
-      col("node").as("context"))
-    val oldCensus = a.join(b, Seq("start_id"))
-      .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= 2)
-      .groupBy(col("center"), col("context"))
-      .agg(count(lit(1)).as("n_pairs"))
-    val newCensus = GraphOps.walkPairsRaw(
-      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001))
-    val diff = oldCensus.exceptAll(newCensus).count() +
-      newCensus.exceptAll(oldCensus).count()
-    assert(diff == 0, s"pivot census diverged from the self-join census on $diff rows")
-  }
-
   test("graph_bfs_stored serves identical distance rings from the bucketed layout") {
     val a = SparkEntry.queries("graph_bfs")(spark, sf0001).collect().toSeq
     val b = SparkEntry.queries("graph_bfs_stored")(spark, sf0001).collect().toSeq

@@ -1150,6 +1150,25 @@ class PlanSpec extends SparkTestBase {
       s"pair fanout must be a literal struct array, not a HOF:\n$p")
   }
 
+  test("walk pair census: pivot form matches the start_id self-join census row for row (r15)") {
+    import org.apache.spark.sql.functions._
+    val walks = GraphOps.walkCensusCorpus(
+      orders(spark, sf0001), lineitem(spark, sf0001))
+    val a = walks.select(col("start_id"), col("step").as("i"),
+      col("node").as("center"))
+    val b = walks.select(col("start_id"), col("step").as("j"),
+      col("node").as("context"))
+    val oldCensus = a.join(b, Seq("start_id"))
+      .filter(col("i") =!= col("j") && abs(col("i") - col("j")) <= 2)
+      .groupBy(col("center"), col("context"))
+      .agg(count(lit(1)).as("n_pairs"))
+    val newCensus = GraphOps.walkPairsRaw(
+      orders(spark, sf0001), lineitem(spark, sf0001))
+    val diff = oldCensus.exceptAll(newCensus).count() +
+      newCensus.exceptAll(oldCensus).count()
+    assert(diff == 0, s"pivot census diverged from the self-join census on $diff rows")
+  }
+
   test("probe cells: native top_cells_l2 kernel matches the crossJoin+window ranking row for row (r15)") {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
