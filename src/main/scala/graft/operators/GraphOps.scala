@@ -1172,7 +1172,8 @@ object GraphOps {
       // vs 5.5 s for this form — the broadcast subtree shares the
       // matvec's Exchange via ReusedExchange, so the "double compute"
       // this split would save doesn't exist, while the extra per-round
-      // actions it adds are pure fixed cost (~0.16 s each, MicroProbe).
+      // actions it adds are pure fixed cost (~0.16 s each,
+      // OPTIMIZATION_r14.md "Driver-overhead constants").
       // (r15 probe #3, reverted: fusing BOTH matvecs into ONE per-round
       // checkpoint — lazy anorm streaming into the radj hub join, the
       // a/h pair materialized as one tagged union — halves the action

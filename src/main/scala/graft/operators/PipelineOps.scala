@@ -1149,7 +1149,8 @@ object PipelineOps {
       ((col("node") * 37 + lit(i * 101)) % 2001 - 1000) * 1000
     // init embeddings stay LAZY: a trivial projection over the `ranked`
     // checkpoint — round 1 evaluates it once per join side, cheaper than
-    // the checkpoint action it replaces (r14, the MicroProbe constant)
+    // the checkpoint action it replaces (~0.45 s per one-shuffle checkpoint,
+    // OPTIMIZATION_r14.md "Driver-overhead constants")
     var emb = ranked.select(
       col("node") +: (1 to dim).map(i => initCol(i).as(s"e$i")): _*)
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]

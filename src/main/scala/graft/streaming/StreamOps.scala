@@ -52,22 +52,9 @@ object StreamOps {
   private def drain(df: DataFrame, name: String, mode: String): DataFrame = {
     val spark = df.sparkSession
     spark.catalog.dropTempView(name)
-    // Trigger dial (r9 verdict item 6): `availableNow` plans the whole
-    // backlog upfront and self-terminates, vs the default interval-0
-    // processing-time loop + processAllAvailable() polling. A/B'd at
-    // sf0.1 under no external load: statistically equal (BASELINE.md
-    // r10) — the dial exists so a loaded box can be re-measured without
-    // a code change.
-    val availableNow = spark.conf
-      .getOption("spark.graft.stream.availableNow")
-      .orElse(sys.env.get("GRAFT_STREAM_AVAILABLE_NOW"))
-      .exists(_.toBoolean)
-    val w = df.writeStream.format("memory").queryName(name).outputMode(mode)
-    val q =
-      if (availableNow)
-        w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      else w.start()
-    if (availableNow) q.awaitTermination() else q.processAllAvailable()
+    // processAllAvailable, not AvailableNow: equal at sf0.1 (BASELINE.md r10 A/B)
+    val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    q.processAllAvailable()
     q.stop()
     spark.table(name)
   }
@@ -93,20 +80,9 @@ object StreamOps {
       sfDir: String, tag: String, srcDir: Path,
       prefix: String = "quarter"): Unit = {
     val tmp = scratch(sfDir, s"${tag}_stageall")
-    // measurement dial (r15, the sign-flip adjudication the r14 verdict
-    // asked for): GRAFT_STAGE_SLICES_LOOP=true stages with the r13
-    // per-slice filter→coalesce(1)→write loop so both staging forms can
-    // be A/B'd on the SAME box/session; default stays the single
-    // partitionBy write job
-    val loopStage = sys.env.get("GRAFT_STAGE_SLICES_LOOP").exists(_.toBoolean)
-    if (loopStage) {
-      for (i <- 0 until n)
-        df.filter(sliceCol === i).coalesce(1)
-          .write.mode(SaveMode.Overwrite).parquet(tmp.resolve(s"__q=$i").toString)
-    } else
-      df.withColumn("__q", sliceCol)
-        .repartition(col("__q"))
-        .write.partitionBy("__q").mode(SaveMode.Overwrite).parquet(tmp.toString)
+    df.withColumn("__q", sliceCol)
+      .repartition(col("__q"))
+      .write.partitionBy("__q").mode(SaveMode.Overwrite).parquet(tmp.toString)
     // fail loudly if any slice value fell outside 0 until n (an unmatched
     // otherwise(-1) default would otherwise be written to __q=-1 and
     // silently dropped from the staged arrival sequence)
@@ -161,8 +137,8 @@ object StreamOps {
     * that value in the tuned regime and GROWS shards with state beyond
     * it, so the 32-shard-style cliff (shard count wildly misfit to state)
     * cannot return at 100× keys: per-shard state stays ≈ keysPerShard no
-    * matter the corpus. `keysPerShard` (default 250k) is the conf dial
-    * `spark.graft.stream.keysPerShard`; estimated keys come from the
+    * matter the corpus. `keysPerShard` defaults to 250k (kept by the
+    * OPTIMIZATION_r15.md §6 sweep); estimated keys come from the
     * source's row count (a parquet-metadata read — an upper bound on
     * distinct state keys, which is the safe side: over-estimating keys
     * over-shards mildly, under-estimating concentrates state).
@@ -181,14 +157,7 @@ object StreamOps {
   private def withStateShardsFor[T](
       spark: SparkSession, sfDir: String)(body: => T): T = {
     val estKeys = spark.read.parquet(s"$sfDir/events.parquet").count()
-    // env mirror of the conf dial (the GRAFT_STREAM_AVAILABLE_NOW
-    // precedent) so the r15 shard sweep can re-measure the r8 rule on a
-    // loaded/idle box without a code change per point
-    val perShard =
-      spark.conf.getOption("spark.graft.stream.keysPerShard")
-        .orElse(sys.env.get("GRAFT_STREAM_KEYS_PER_SHARD"))
-        .map(_.toLong).getOrElse(250000L)
-    withStateShards(spark, stateShardsFor(estKeys, perShard))(body)
+    withStateShards(spark, stateShardsFor(estKeys))(body)
   }
 
   /** Incremental file ingestion (the polled API stand-in): per-type counts
@@ -422,10 +391,7 @@ object StreamOps {
         col("doc_id"), col("mh"), col("arrival_ts").as("ats"))
       .as[BandDocT]
     val pairs = nearPairsOf(banded, cap, stateTtlMs(spark))
-    val perShard = spark.conf.getOption("spark.graft.stream.keysPerShard")
-      .orElse(sys.env.get("GRAFT_STREAM_KEYS_PER_SHARD"))
-      .map(_.toLong).getOrElse(250000L)
-    withStateShards(spark, stateShardsFor(nDocs * 8, perShard)) {
+    withStateShards(spark, stateShardsFor(nDocs * 8)) {
       drain(pairs.toDF(), "graft_stream_dedup_near", "append")
     }
       // a pair can surface in several bands — collapse to one row

@@ -18,6 +18,25 @@ class ContractSpec extends SparkTestBase {
     assert(missing.isEmpty, s"headline entries missing from queries: $missing")
   }
 
+  test("Bench compact line: 105 results fit in 1900 chars, failures kept as -1") {
+    val failed = Set(3, 100)
+    val results = (0 until 105).map { i =>
+      val t = 0.5 + (i * 37 % 105) / 10.0
+      val reps = if (failed(i)) Seq(-1.0, t) else Seq(t, t * 1.1)
+      f"headline_entry_synthetic_$i%03d" -> reps
+    }
+    val line = Bench.compactLine(results, "/data/sf0.1", "4", 4096L, "/tmp/graft_bench.json")
+    assert(line.length <= 1900, s"compact line is ${line.length} chars")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    val queries = json.get("queries")
+    failed.foreach { i =>
+      val q = queries.get(f"headline_entry_synthetic_$i%03d")
+      assert(q != null && q.asDouble == -1.0, s"failed entry $i not reported as -1: $q")
+    }
+    assert(queries.size < 105, "105 entries should not fit, so some must be omitted")
+    assert(json.get("queries_omitted").asInt == 105 - queries.size)
+  }
+
   test("entry (flagship) returns rows at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

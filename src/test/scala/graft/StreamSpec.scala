@@ -410,13 +410,47 @@ class StreamSpec extends SparkTestBase {
     assert(StreamOps.stateShardsFor(1_000_000_000L) === 4000)
     // bounded above: delta-file commit overhead is linear in shards
     assert(StreamOps.stateShardsFor(10_000_000_000L) === 4096)
-    // the keysPerShard dial rescales the whole curve
+    // the keysPerShard parameter rescales the whole curve
     assert(StreamOps.stateShardsFor(1_000_000L, keysPerShard = 100_000L) === 10)
     // monotone in estimated keys (sampled)
     val samples = Seq(1L, 100L, 10_000L, 1_000_000L, 50_000_000L,
       2_000_000_000L, 20_000_000_000L)
     val shards = samples.map(StreamOps.stateShardsFor(_))
     assert(shards === shards.sorted, s"rule not monotone: $shards")
+  }
+
+  test("stageSlices: one file per slice, rows equal the slice filter, mtimes in slice order") {
+    import scala.jdk.CollectionConverters._
+    // duplicate (k, v) rows, so the per-file compare is a multiset compare
+    val df = spark.range(0, 60)
+      .select((col("id") % 10).as("k"), (col("id") % 2).cast("string").as("v"))
+    val n = 3
+    val sliceCol = col("k") % n
+    val srcDir = java.nio.file.Files.createTempDirectory("graft_stage_slices_spec")
+    StreamOps.stageSlices(df, sliceCol, n, "stage_slices_spec", "spec", srcDir,
+      prefix = "part")
+    val names = {
+      val s = java.nio.file.Files.list(srcDir)
+      try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    }
+    assert(names === (0 until n).map(i => s"part-$i.parquet").toSet)
+    def rows(frame: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      frame.as[(Long, String)].collect().toSeq.sorted
+    val mtimes = (0 until n).map { i =>
+      val f = srcDir.resolve(s"part-$i.parquet")
+      assert(rows(spark.read.parquet(f.toString)) === rows(df.filter(sliceCol === i)),
+        s"slice $i rows differ from df.filter(sliceCol === $i)")
+      java.nio.file.Files.getLastModifiedTime(f).toMillis
+    }
+    assert(mtimes.sliding(2).forall { case Seq(a, b) => a < b },
+      s"mtimes not strictly increasing in slice order: $mtimes")
+    // a slice value outside [0, n) fails instead of being dropped
+    val badDir = java.nio.file.Files.createTempDirectory("graft_stage_slices_spec_bad")
+    val err = intercept[IllegalArgumentException] {
+      StreamOps.stageSlices(df, col("k") % (n + 1), n, "stage_slices_spec", "spec_bad",
+        badDir, prefix = "part")
+    }
+    assert(err.getMessage.contains(s"outside [0, $n)"), err.getMessage)
   }
 
   test("stream_anomaly output is bit-identical to the batch detector") {
