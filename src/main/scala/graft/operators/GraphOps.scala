@@ -482,15 +482,6 @@ object GraphOps {
     betweennessOf(adj, nodes, seedMod, nSeeds, maxRounds)
   }
 
-  /** A/B hook for the backward-phase checkpoint cadence (see
-    * betweennessOf's `lazyBackward`): same output either mode.
-    */
-  private[graft] def betweennessProbe(orders: DataFrame, lineitem: DataFrame,
-      lazyBackward: Boolean): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    betweennessOf(adj, nodes, 64, 8, 6, lazyBackward)
-  }
-
   /** Betweenness served from the stored bucketed adjacency — the new
     * family member keeps the invariant that EVERY iterative algorithm
     * has a loop-only serving path off the one layout (same oracle as
@@ -601,22 +592,18 @@ object GraphOps {
   }
 
   private def betweennessOf(adj: DataFrame, nodes: DataFrame,
-      seedMod: Int, nSeeds: Int, maxRounds: Int,
-      lazyBackward: Boolean = true): DataFrame = {
+      seedMod: Int, nSeeds: Int, maxRounds: Int): DataFrame = {
     val (rings, deepest, seeds) =
       forwardRings(adj, nodes, seedMod, nSeeds, maxRounds)
     // ---- backward: dependency layers from the deepest ring in ----
     // Unlike the forward phase (whose per-ring Observation read IS an
     // action), the backward layer count is fixed — no per-layer
     // decision — so its checkpoints can be LAZY (materialize inside the
-    // first consuming job instead of one eager job barrier per layer).
-    // A/B'd at sf0.1 (BASELINE.md r11); `lazyBackward` keeps both modes
-    // measurable without a code change.
-    def ckpt(df: DataFrame): DataFrame =
-      if (lazyBackward) df.localCheckpoint(eager = false)
-      else df.localCheckpoint()
-    var layerAbove = ckpt(rings(deepest)
-      .select(col("seed"), col("id"), lit(0.0).as("delta")))
+    // first consuming job instead of one eager job barrier per layer;
+    // A/B'd against eager checkpoints at sf0.1, BASELINE.md r11).
+    var layerAbove = rings(deepest)
+      .select(col("seed"), col("id"), lit(0.0).as("delta"))
+      .localCheckpoint(eager = false)
     var acc = layerAbove
     // the O(E) edge fan-out feeds every layer join: materialize it once
     val edges = adj.select(col("src"), explode(col("dsts")).as("dst"))
@@ -636,7 +623,7 @@ object GraphOps {
         .groupBy(col("seed"), col("id"))
         .agg(round(coalesce(sum(col("sigma") * col("wterm")), lit(0.0)), 9)
           .as("delta"))
-      val layerC = ckpt(layerR)
+      val layerC = layerR.localCheckpoint(eager = false)
       acc = acc.unionByName(layerC)
       layerAbove = layerC
     }

@@ -142,15 +142,6 @@ object SimOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Exact n-gram Jaccard dedup with inverted-index blocking: candidates
-    * are pairs sharing at least TWO low-frequency shingles (document
-    * frequency ≤ 10 — rare-token prefix filtering; the two-shingle
-    * co-occurrence floor is counted on the cheap pair stream and keeps
-    * the expensive array-verify join ~25× smaller on this corpus for
-    * <1% recall loss); exact Jaccard ≥ 0.8 verifies. The blocking is
-    * approximate by construction (a pair sharing only frequent shingles
-    * was never a candidate); the verify step is exact.
-    */
   /** Shared rare-shingle blocking + shingle-set join: candidate pairs
     * sharing ≥ 2 shingles of document frequency ≤ 10, each pair carrying
     * both shingle sets (`sh_a`, `sh_b`) for an exact verify. One home
@@ -181,6 +172,15 @@ object SimOps {
       .join(withSh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
   }
 
+  /** Exact n-gram Jaccard dedup with inverted-index blocking: candidates
+    * are pairs sharing at least TWO low-frequency shingles (document
+    * frequency ≤ 10 — rare-token prefix filtering; the two-shingle
+    * co-occurrence floor is counted on the cheap pair stream and keeps
+    * the expensive array-verify join ~25× smaller on this corpus for
+    * <1% recall loss); exact Jaccard ≥ 0.8 verifies. The blocking is
+    * approximate by construction (a pair sharing only frequent shingles
+    * was never a candidate); the verify step is exact.
+    */
   def dedupNgramJaccard(documents: DataFrame): DataFrame = {
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val jac = inter.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - inter)
@@ -256,17 +256,6 @@ object SimOps {
       .orderBy("vec_id", "dim")
   }
 
-  /** Recall audit of the projection: per probe, how many of the exact
-    * cosine top-10 survive in the PROJECTED-space cosine top-10, and
-    * whether a PLANTED near-dup partner (the probe with dim 32 zeroed,
-    * cos ≈ 0.99 — the dedup_embedding de-vacuation precedent) is found.
-    * The synthetic corpus is isotropic (background neighbors are barely
-    * separated, so background overlap floors by construction); the
-    * planted partner is the real signal a projection must keep, and the
-    * audit measures both. Both arms are the capped-probe broadcast scan
-    * (`sim_join`'s shape); projected vectors are the ROUNDED 6-decimal
-    * sketches so both engines rank identical values.
-    */
   /** The rounded 8-dim sketch table of a (vec_id, v) frame — shared by
     * the recall audit and the two-stage rerank so the sketches cannot
     * drift between the audit and the serving path.
@@ -306,6 +295,17 @@ object SimOps {
       .select("probe_id", "vec_id")
   }
 
+  /** Recall audit of the projection: per probe, how many of the exact
+    * cosine top-10 survive in the PROJECTED-space cosine top-10, and
+    * whether a PLANTED near-dup partner (the probe with dim 32 zeroed,
+    * cos ≈ 0.99 — the dedup_embedding de-vacuation precedent) is found.
+    * The synthetic corpus is isotropic (background neighbors are barely
+    * separated, so background overlap floors by construction); the
+    * planted partner is the real signal a projection must keep, and the
+    * audit measures both. Both arms are the capped-probe broadcast scan
+    * (`sim_join`'s shape); projected vectors are the ROUNDED 6-decimal
+    * sketches so both engines rank identical values.
+    */
   def simRpRecall(embeddings: DataFrame): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = rpPlantedCorpus(embeddings)
@@ -1159,7 +1159,19 @@ object SimOps {
     * array<int> first — the storage contract — and only widened at the
     * kernel boundary.
     */
-  def simQuantized(embeddings: DataFrame): DataFrame = {
+  def simQuantized(embeddings: DataFrame): DataFrame =
+    int8Scan(embeddings)
+      .select(col("vec_id"), col("qdot"),
+        round(cosine(col("v"), col("pv")), 6).as("cos_exact"))
+      .orderBy(desc("qdot"), asc("vec_id"))
+      .limit(10)
+
+  /** The int8 scan both quantized entries share: the corpus scale, the
+    * int8 codes, and each vector's integer dot `qdot` against vec 0's
+    * codes. Returns (vec_id, v, pv, qdot), `pv` being vec 0's float
+    * vector for the exact cosine.
+    */
+  private def int8Scan(embeddings: DataFrame): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
     val scale = e.agg(max(array_max(transform(col("v"), x => abs(x)))).as("s"))
@@ -1168,15 +1180,12 @@ object SimOps {
       .select(col("vec_id"), col("v"), q8.as("q"))
     val probe = quant.filter(col("vec_id") === 0)
       .select(col("q").as("pq"), col("v").as("pv"))
-    val dot = graft.plans.VectorFunctions.vectorDot _
     quant.crossJoin(broadcast(probe))
       .select(
-        col("vec_id"),
-        dot(col("q").cast("array<double>"), col("pq").cast("array<double>"))
-          .cast("long").as("qdot"),
-        round(cosine(col("v"), col("pv")), 6).as("cos_exact"))
-      .orderBy(desc("qdot"), asc("vec_id"))
-      .limit(10)
+        col("vec_id"), col("v"), col("pv"),
+        graft.plans.VectorFunctions.vectorDot(
+          col("q").cast("array<double>"), col("pq").cast("array<double>"))
+          .cast("long").as("qdot"))
   }
 
   /** Two-stage ANN — prefilter-then-rerank, the production serving shape
@@ -1190,29 +1199,14 @@ object SimOps {
     * bounded by the quantization error only at the top-M boundary — the
     * spec pins it against exact brute force.
     */
-  def simRerank(embeddings: DataFrame, m: Int = 50, k: Int = 10): DataFrame = {
-    graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val scale = e.agg(max(array_max(transform(col("v"), x => abs(x)))).as("s"))
-    val q8 = transform(col("v"), x => round(x * lit(127.0) / col("s")).cast("int"))
-    val quant = e.crossJoin(broadcast(scale))
-      .select(col("vec_id"), col("v"), q8.as("q"))
-    val probe = quant.filter(col("vec_id") === 0)
-      .select(col("q").as("pq"), col("v").as("pv"))
-    val dot = graft.plans.VectorFunctions.vectorDot _
-    val candidates = quant.crossJoin(broadcast(probe))
-      .select(
-        col("vec_id"), col("v"), col("pv"),
-        dot(col("q").cast("array<double>"), col("pq").cast("array<double>"))
-          .cast("long").as("qdot"))
+  def simRerank(embeddings: DataFrame, m: Int = 50, k: Int = 10): DataFrame =
+    int8Scan(embeddings)
       .orderBy(desc("qdot"), asc("vec_id"))
       .limit(m)
-    candidates
       .select(col("vec_id"), col("qdot"),
         round(cosine(col("v"), col("pv")), 6).as("cos_exact"))
       .orderBy(desc("cos_exact"), asc("vec_id"))
       .limit(k)
-  }
 
   /** Matryoshka two-stage ANN (Kusupati et al. 2022, MRL) — coarse rank
     * on the embedding PREFIX (first 16 of 64 dims; MRL-trained encoders
@@ -1260,36 +1254,46 @@ object SimOps {
     * sequential fold order), so DuckDB replicates it bit-for-bit.
     */
   def simPq(embeddings: DataFrame): DataFrame = {
-    val S = 8  // subspaces
-    val D = 8  // dims per subspace
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cb = e.filter(col("vec_id") < 16)
+    adcScan(e, firstPqCodebook(e), firstPqScores)
+  }
+
+  private val PqS = 8 // subspaces
+  private val PqD = 8 // dims per subspace
+
+  /** The first-16 PQ codebook row: the cid-ordered centroids (`cents`)
+    * and their per-subspace cut in the kernel's shape (`cbs`, S × k × D),
+    * a 1-row reshape of the same cents.
+    */
+  private def firstPqCodebook(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 16)
       .agg(transform(
         array_sort(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv")))),
         s => s.getField("cv")).as("cents"))
-    // per (row, subspace, centroid) L2² scores — sequential fold, so the
-    // oracle's list_sum reproduces the exact doubles
-    val scoreTables = transform(sequence(lit(0), lit(S - 1)), s =>
+      .select(col("cents"),
+        transform(sequence(lit(0), lit(PqS - 1)), s =>
+          transform(col("cents"), c => slice(c, s * PqD + 1, lit(PqD)))).as("cbs"))
+
+  /** The query's distance table over [[firstPqCodebook]]: per (subspace,
+    * centroid) L2² — sequential fold, so the oracle's list_sum reproduces
+    * the exact doubles.
+    */
+  private def firstPqScores: Column =
+    transform(sequence(lit(0), lit(PqS - 1)), s =>
       transform(col("cents"), c =>
         aggregate(
           zip_with(
-            slice(col("v"), s * D + 1, lit(D)), slice(c, s * D + 1, lit(D)),
+            slice(col("v"), s * PqD + 1, lit(PqD)), slice(c, s * PqD + 1, lit(PqD)),
             (x, y) => (x - y) * (x - y)),
           lit(0.0), (acc, z) => acc + z)))
-    // per-subspace codebooks in the kernel's shape (S × k × D) — a 1-row
-    // reshape of the same cents
-    val cbs = cb.select(col("cents"),
-      transform(sequence(lit(0), lit(S - 1)), s =>
-        transform(col("cents"), c => slice(c, s * D + 1, lit(D)))).as("cbs"))
-    adcScan(e, cbs, scoreTables, S, D)
-  }
 
   /** The shared ADC tail: encode every vector against the per-subspace
     * codebooks, build the query's distance table, rank by the 8-lookup
     * approximate L2². Bit-identical whether the codebook is the fixed
     * first-16 (`simPq`) or Lloyd-learned (`simPqKmeans`) — only `st`
     * changes. `cbRow` must expose a `cbs` column (S × k × D per-subspace
-    * centroid subvectors).
+    * centroid subvectors). `candidates` narrows the encoded corpus
+    * before the scan (`simIvfPq`'s cell join); the default scans it all.
     *
     * r15 (§4): the CORPUS-side encode is the native pq_encode_l2 kernel
     * (one fused loop per row — first-argmin codes, index-order sums,
@@ -1300,21 +1304,21 @@ object SimOps {
     * interpreted fold over `sequence` (0.0 + x = x for the non-negative
     * first term, so the add chain is unchanged).
     */
-  private def adcScan(e: DataFrame, cbRow: DataFrame, st: Column, S: Int,
-      D: Int): DataFrame = {
+  private def adcScan(e: DataFrame, cbRow: DataFrame, st: Column,
+      candidates: DataFrame => DataFrame = identity): DataFrame = {
     graft.plans.VectorFunctions.register(e.sparkSession)
     val enc = e.crossJoin(broadcast(cbRow)).select(
       col("vec_id"), col("v"),
       graft.plans.VectorFunctions.pqEncodeL2(
-        col("v"), col("cbs"), lit(D)).as("codes"))
+        col("v"), col("cbs"), lit(PqD)).as("codes"))
     val qt = e.filter(col("vec_id") === 0).crossJoin(broadcast(cbRow))
       .select(st.as("dt"), col("v").as("qv"))
-    val lookup = (0 until S).map(s =>
+    val lookup = (0 until PqS).map(s =>
       element_at(
         element_at(col("dt"), lit(s + 1)),
         element_at(col("codes"), lit(s + 1)).cast("int")))
       .reduce(_ + _)
-    enc.crossJoin(broadcast(qt))
+    candidates(enc).crossJoin(broadcast(qt))
       .select(
         col("vec_id"),
         round(lookup, 6).as("adc_dist"),
@@ -1378,24 +1382,22 @@ object SimOps {
     * identical in DuckDB); everything downstream is the shared `adcScan`.
     */
   def simPqKmeans(embeddings: DataFrame): DataFrame = {
-    val S = 8
-    val D = 8
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
     val eq = embeddings.select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
-    val cb = pqCodebooks(eq, S, D, k = 16, rounds = 3)
+    val cb = pqCodebooks(eq, PqS, PqD, k = 16, rounds = 3)
       .groupBy(col("s"))
       .agg(transform(array_sort(collect_list(struct(col("cid"), col("cvec")))),
         t => transform(t.getField("cvec"), x => x / lit(1000.0))).as("cents"))
       .groupBy()
       .agg(transform(array_sort(collect_list(struct(col("s"), col("cents")))),
         t => t.getField("cents")).as("cbs"))
-    val scoreTables = transform(sequence(lit(0), lit(S - 1)), s =>
+    val scoreTables = transform(sequence(lit(0), lit(PqS - 1)), s =>
       transform(element_at(col("cbs"), (s + 1).cast("int")), c =>
         aggregate(
-          zip_with(slice(col("v"), s * D + 1, lit(D)), c,
+          zip_with(slice(col("v"), s * PqD + 1, lit(PqD)), c,
             (x, y) => (x - y) * (x - y)),
           lit(0.0), (acc, z) => acc + z)))
-    adcScan(e, cb, scoreTables, S, D)
+    adcScan(e, cb, scoreTables)
   }
 
   /** IVF-style pruned ANN: a coarse quantizer assigns every vector to its
@@ -1411,27 +1413,99 @@ object SimOps {
   def simIvf(embeddings: DataFrame): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    ivfScan(e, cents)
+    ivfScan(e, firstCells(e))
   }
 
-  /** IVF over the k-means codebook: centroids learned in the exact
+  // ---- IVF stages: one function per index decision, for every IVF entry ----
+
+  /** The first-16 codebook: vectors 0..15 of a (vec_id, v) frame as (cid, cv). */
+  private def firstCells(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("cid"), col("v").as("cv"))
+
+  /** The learned codebook: 16 centroids from 3 Lloyd rounds in the exact
     * integer domain (see `kmeansCentroids`), widened back to doubles at
     * the scan boundary (component/1000.0 — one IEEE division, identical
-    * in DuckDB). Same pruned-scan plan as `simIvf`; only the codebook
-    * quality changes — which is the point: on clustered data the learned
-    * cells are balanced, so nprobe pruning keeps its selectivity instead
-    * of degrading toward a full scan (the spec shows the balance win).
+    * in DuckDB). Same (cid, cv) shape as [[firstCells]].
+    */
+  private def learnedCells(embeddings: DataFrame): DataFrame = {
+    val eq = embeddings.select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
+    kmeansCentroids(eq, k = 16, rounds = 3)
+      .select(col("cid").cast("long").as("cid"),
+        transform(col("cvec"), x => x / lit(1000.0)).as("cv"))
+  }
+
+  /** The cell rule: every row of `rows` joins its `n` nearest centroids
+    * of `cents` (cid, cv) by cosine of its `vcol` vector, rounded to 9
+    * places, ties to the lowest cid. One broadcast of the codebook and a
+    * window over each `key`'s k codebook rows. Keeps the row's columns
+    * and adds `cell`, one row per assigned cell.
+    */
+  private[graft] def nearestCells(rows: DataFrame, key: String, vcol: String,
+      cents: DataFrame, n: Int = 1): DataFrame = {
+    val keep = rows.columns.toSeq.map(col)
+    val w = Window.partitionBy(key).orderBy(desc("ccos"), asc("cid"))
+    rows.crossJoin(broadcast(cents))
+      .select(keep :+ col("cid") :+ round(cosine(col(vcol), col("cv")), 9).as("ccos"): _*)
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= n)
+      .select(keep :+ col("cid").as("cell"): _*)
+  }
+
+  /** The query probe: the `nprobe` cells nearest the 1-row query `q`
+    * (qv) — the cell rule of [[nearestCells]] as one top-k over the
+    * codebook. Returns (cell).
+    */
+  private[graft] def queryCells(cents: DataFrame, q: DataFrame, nprobe: Int): DataFrame =
+    cents.crossJoin(broadcast(q))
+      .select(col("cid"), round(cosine(col("cv"), col("qv")), 9).as("ccos"))
+      .orderBy(desc("ccos"), asc("cid"))
+      .limit(nprobe)
+      .select(col("cid").as("cell"))
+
+  /** The audits' query: vec 0 of a (vec_id, v) frame, as (qv). */
+  private def query0(e: DataFrame): DataFrame =
+    e.filter(col("vec_id") === 0).select(col("v").as("qv"))
+
+  /** The exact baseline: the `k` rows of `e` (vec_id, v) nearest the query
+    * `q` by cosine rounded to 9 places, ties to the lowest vec_id — one
+    * broadcast scan and a TakeOrderedAndProject. Returns (vec_id, c9).
+    */
+  private def exactTop(e: DataFrame, q: DataFrame, k: Int): DataFrame =
+    e.crossJoin(broadcast(q))
+      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 9).as("c9"))
+      .orderBy(desc("c9"), asc("vec_id")).limit(k)
+
+  /** The shared IVF scan: assign (broadcast codebook, one corpus pass),
+    * probe selection (nprobe=4), pruned exact top-10.
+    * `qSrc`: where the query vector lives — defaults to the corpus, but a
+    * FILTERED search must still draw the query from the unfiltered table.
+    * `excludeQueryId`: drop the query's own row BEFORE the top-k cut (the
+    * ranking-metrics audit wants k real neighbors, not the self hit).
+    */
+  private def ivfScan(
+      e: DataFrame, cents: DataFrame, qSrc: Option[DataFrame] = None,
+      nprobe: Int = 4, excludeQueryId: Option[Long] = None): DataFrame = {
+    val q = query0(qSrc.getOrElse(e))
+    val pruned = nearestCells(e, "vec_id", "v", cents)
+      .join(broadcast(queryCells(cents, q, nprobe)), "cell") // prune: scan only probed cells
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos"))
+    excludeQueryId.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
+      .orderBy(desc("cos"), asc("vec_id"))
+      .limit(10)
+  }
+
+  /** IVF over the learned k-means codebook ([[learnedCells]]). Same
+    * pruned-scan plan as `simIvf`; only the codebook quality changes —
+    * which is the point: on clustered data the learned cells are
+    * balanced, so nprobe pruning keeps its selectivity instead of
+    * degrading toward a full scan (the spec shows the balance win).
     */
   def simIvfKmeans(embeddings: DataFrame): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val eq = embeddings.select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
-    val cents = kmeansCentroids(eq, k = 16, rounds = 3)
-      .select(col("cid").cast("long").as("cid"),
-        transform(col("cvec"), x => x / lit(1000.0)).as("cv"))
-    ivfScan(e, cents)
+    ivfScan(e, learnedCells(embeddings))
   }
 
   /** IVF+PQ COMPOSED — the production ANN stack (the FAISS IVFPQ shape):
@@ -1449,58 +1523,13 @@ object SimOps {
     */
   def simIvfPq(embeddings: DataFrame): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val S = 8
-    val D = 8
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("cid"),
-        round(cosine(col("v"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wAssign)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("cid").as("cell"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val probes = cents.crossJoin(broadcast(q))
-      .select(col("cid"), round(cosine(col("cv"), col("qv")), 9).as("ccos"))
-      .orderBy(desc("ccos"), asc("cid")).limit(4)
-      .select(col("cid").as("cell"))
-    val cb = e.filter(col("vec_id") < 16)
-      .agg(transform(
-        array_sort(collect_list(struct(col("vec_id").as("cid"), col("v").as("cv")))),
-        s => s.getField("cv")).as("cents"))
-      // per-subspace kernel shape, reshaped once on the 1-row codebook
-      .select(col("cents"),
-        transform(sequence(lit(0), lit(S - 1)), s =>
-          transform(col("cents"), c => slice(c, s * D + 1, lit(D)))).as("cbs"))
-    val scoreTables = transform(sequence(lit(0), lit(S - 1)), s =>
-      transform(col("cents"), c =>
-        aggregate(
-          zip_with(
-            slice(col("v"), s * D + 1, lit(D)), slice(c, s * D + 1, lit(D)),
-            (x, y) => (x - y) * (x - y)),
-          lit(0.0), (acc, z) => acc + z)))
-    // r15 (§4): native corpus-side encode; the HOF score table evaluates
-    // only for the query row's distance table; static codegen ADC sum
-    // (the adcScan treatment — see there for the bit-identity argument)
-    val enc = e.crossJoin(broadcast(cb))
-      .select(col("vec_id"), col("v"),
-        graft.plans.VectorFunctions.pqEncodeL2(
-          col("v"), col("cbs"), lit(D)).as("codes"))
-    val qt = e.filter(col("vec_id") === 0).crossJoin(broadcast(cb))
-      .select(scoreTables.as("dt"), col("v").as("qv"))
-    val lookup = (0 until S).map(s =>
-      element_at(
-        element_at(col("dt"), lit(s + 1)),
-        element_at(col("codes"), lit(s + 1)).cast("int")))
-      .reduce(_ + _)
-    enc.join(assigned, "vec_id")
-      .join(broadcast(probes), "cell")
-      .crossJoin(broadcast(qt))
-      .select(col("vec_id"), round(lookup, 6).as("adc_dist"),
-        round(cosine(col("v"), col("qv")), 6).as("cos_exact"))
-      .orderBy(asc("adc_dist"), asc("vec_id"))
-      .limit(10)
+    val cents = firstCells(e)
+    val assigned = nearestCells(e, "vec_id", "v", cents)
+      .select(col("vec_id"), col("cell"))
+    val probes = queryCells(cents, query0(e), nprobe = 4)
+    adcScan(e, firstPqCodebook(e), firstPqScores,
+      _.join(assigned, "vec_id").join(broadcast(probes), "cell"))
   }
 
   /** FILTERED vector search — ANN under a metadata predicate, the query
@@ -1519,11 +1548,9 @@ object SimOps {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select(col("vec_id"), col("label"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
     val filtered = e.filter(col("label") % 3 === 0)
       .select(col("vec_id"), col("v"))
-    ivfScan(filtered, cents, Some(e))
+    ivfScan(filtered, firstCells(e), Some(e))
   }
 
   /** BITEXT MINING — margin-scored cross-corpus nearest-neighbor pairs
@@ -1546,24 +1573,13 @@ object SimOps {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings
       .select(col("vec_id"), col("label"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cents = firstCells(e)
     val src = e.filter(col("label") === 0)
       .select(col("vec_id").as("src_id"), col("v").as("sv"))
     val tgt = e.filter(col("label") === 1)
       .select(col("vec_id").as("tgt_id"), col("v").as("tv"))
-    val wT = Window.partitionBy("tgt_id").orderBy(desc("ccos"), asc("cid"))
-    val tgtCell = tgt.crossJoin(broadcast(cents))
-      .select(col("tgt_id"), col("tv"), col("cid"),
-        round(cosine(col("tv"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wT)).filter(col("rn") === 1)
-      .select(col("tgt_id"), col("tv"), col("cid").as("cell"))
-    val wS = Window.partitionBy("src_id").orderBy(desc("ccos"), asc("cid"))
-    val probes = src.crossJoin(broadcast(cents))
-      .select(col("src_id"), col("sv"), col("cid"),
-        round(cosine(col("sv"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wS)).filter(col("rn") <= 4)
-      .select(col("src_id"), col("sv"), col("cid").as("cell"))
+    val tgtCell = nearestCells(tgt, "tgt_id", "tv", cents)
+    val probes = nearestCells(src, "src_id", "sv", cents, n = 4)
     // each target lives in exactly ONE cell and probe cells are distinct,
     // so the candidate stream is duplicate-free by construction
     val wC = Window.partitionBy("src_id").orderBy(desc("cos"), asc("tgt_id"))
@@ -1608,37 +1624,20 @@ object SimOps {
     graft.plans.VectorFunctions.register(spark)
     val embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val eq = embeddings.select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
-    val cents = kmeansCentroids(eq, k = 16, rounds = 3)
-      .select(col("cid").cast("long").as("cid"),
-        transform(col("cvec"), x => x / lit(1000.0)).as("cv"))
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cid"),
-        round(cosine(col("v"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("cid").as("cell"))
+    val cents = learnedCells(embeddings)
     val dir = graft.sources.EtlOps.freshDir(sfDir, "ann_index").toString
-    assigned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+    nearestCells(e, "vec_id", "v", cents)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(dir)
     val index = spark.read.parquet(dir)
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val probes = cents.crossJoin(broadcast(q))
-      .select(col("cid"), round(cosine(col("cv"), col("qv")), 9).as("ccos"))
-      .orderBy(desc("ccos"), asc("cid"))
-      .limit(4)
-      .select(col("cid").as("cell"))
-    index.join(broadcast(probes), "cell")
+    val q = query0(e)
+    index.join(broadcast(queryCells(cents, q, nprobe = 4)), "cell")
       .crossJoin(broadcast(q))
       .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos"))
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(10)
   }
 
-  /** The shared IVF scan: assign (broadcast codebook, one corpus pass),
-    * probe selection (nprobe=4), pruned exact top-10.
-    */
   /** Streaming ANN-index INGEST — the maintenance half of `sinkAnnIndex`:
     * vectors ARRIVE as a stream and each micro-batch is assigned to its
     * IVF cell against the FROZEN broadcast codebook (the layout stays
@@ -1655,31 +1654,23 @@ object SimOps {
     * CTEs as the sim_ivf oracle, aggregated per cell.
     */
   def streamAnnIngest(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
     graft.plans.VectorFunctions.register(spark)
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val schema = all.schema
-    val cents = all.select(col("vec_id"), toVec(col("embedding")).as("v"))
-      .filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cents = firstCells(all.select(col("vec_id"), toVec(col("embedding")).as("v")))
     val store = graft.sources.EtlOps.freshDir(sfDir, "ann_ingest_store").toString
     val srcDir = graft.sources.EtlOps.freshDir(sfDir, "ann_ingest_src")
     graft.streaming.StreamOps.stageSlices(
       all, pmod(col("vec_id"), lit(2)).cast("int"), 2,
       sfDir, "ann_ingest", srcDir, prefix = "load")
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
     val q = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
       .writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.select(col("vec_id"), toVec(col("embedding")).as("v"))
-          .crossJoin(broadcast(cents))
-          .select(col("vec_id"), col("cid"),
-            round(cosine(col("v"), col("cv")), 9).as("ccos"))
-          .withColumn("rn", row_number().over(wAssign))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid").as("cell"))
+        nearestCells(batch.select(col("vec_id"), toVec(col("embedding")).as("v")),
+            "vec_id", "v", cents)
+          .select(col("vec_id"), col("cell"))
           .write.mode(org.apache.spark.sql.SaveMode.Append)
           .partitionBy("cell").parquet(store)
         ()
@@ -1718,22 +1709,14 @@ object SimOps {
     * over all 8 queries at once.
     */
   def streamAnnSearch(spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame = {
-    import java.nio.file.Files
     graft.plans.VectorFunctions.register(spark)
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val schema = all.schema
     val e = all.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
+    val cents = firstCells(e)
     // the stored index: frozen-codebook assignment, cell-partitioned
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
     val store = graft.sources.EtlOps.freshDir(sfDir, "ann_search_store").toString
-    e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cid"),
-        round(cosine(col("v"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("cid").as("cell"))
+    nearestCells(e, "vec_id", "v", cents)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(store)
     val index = spark.read.parquet(store)
@@ -1750,13 +1733,7 @@ object SimOps {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val q = batch.select(col("vec_id").as("qid"), toVec(col("embedding")).as("qv"))
-        val wProbe = Window.partitionBy("qid").orderBy(desc("ccos"), asc("cid"))
-        val probes = q.crossJoin(broadcast(cents))
-          .select(col("qid"), col("qv"), col("cid"),
-            round(cosine(col("cv"), col("qv")), 9).as("ccos"))
-          .withColumn("rn", row_number().over(wProbe))
-          .filter(col("rn") <= 4)
-          .select(col("qid"), col("qv"), col("cid").as("cell"))
+        val probes = nearestCells(q, "qid", "qv", cents, n = 4)
         val wTop = Window.partitionBy("qid").orderBy(desc("cos"), asc("vec_id"))
         index.join(broadcast(probes), "cell") // prune: probed cells only
           .select(col("qid"), col("vec_id"),
@@ -1782,48 +1759,6 @@ object SimOps {
       .orderBy("query_id", "rank")
   }
 
-  // `qSrc`: where the query vector lives — defaults to the corpus, but a
-  // FILTERED search must still draw the query from the unfiltered table.
-  // `excludeQueryId`: drop the query's own row BEFORE the top-k cut (the
-  // ranking-metrics audit wants k real neighbors, not the self hit).
-  private def ivfScan(
-      e: DataFrame, cents: DataFrame, qSrc: Option[DataFrame] = None,
-      nprobe: Int = 4, excludeQueryId: Option[Long] = None): DataFrame = {
-    val wAssign = Window.partitionBy("vec_id").orderBy(desc("ccos"), asc("cid"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cid"),
-        round(cosine(col("v"), col("cv")), 9).as("ccos"))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("v"), col("cid").as("cell"))
-    val q = qSrc.getOrElse(e).filter(col("vec_id") === 0)
-      .select(col("v").as("qv"))
-    val probes = cents.crossJoin(broadcast(q))
-      .select(col("cid"), round(cosine(col("cv"), col("qv")), 9).as("ccos"))
-      .orderBy(desc("ccos"), asc("cid"))
-      .limit(nprobe)
-      .select(col("cid").as("cell"))
-    val pruned = assigned
-      .join(broadcast(probes), "cell") // prune: scan only probed cells
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 6).as("cos"))
-    excludeQueryId.fold(pruned)(id => pruned.filter(col("vec_id") =!= id))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(10)
-  }
-
-  /** Rank-aware retrieval evaluation — MRR and nDCG@10 of the IVF-pruned
-    * scan against the exact cosine ranking (the metrics a retrieval
-    * deployment actually reports; `sim_ivf_recall` counts set overlap,
-    * this scores ORDER). Relevance is graded by exact rank (rel = k+1 −
-    * exact_rank, 0 off-list); both lists exclude the query's own row so
-    * the self-hit can't inflate either metric. All metrics land as exact
-    * integer micro-units: per-term round-before-sum for DCG/IDCG (log2
-    * spelled ln(x)/ln(2) in both engines), integer division for MRR and
-    * the final nDCG ratio. Cost: the two k-row rankings (one pruned scan,
-    * one exact scan — a query-sample audit in production) plus k-row
-    * joins; every window runs on a k-row frame.
-    */
   /** The rank-metric SWEEP along the probe dial: MRR/nDCG@10 at nprobe ∈
     * {1,2,4,8} in one audit (the simIvfNprobeSweep stance applied to
     * ORDER-aware metrics) — the curve that says how many cells a serving
@@ -1839,6 +1774,18 @@ object SimOps {
           col("dcg_u"), col("idcg_u"), col("ndcg_u"))
     }.reduce(_ unionByName _).orderBy("nprobe")
 
+  /** Rank-aware retrieval evaluation — MRR and nDCG@10 of the IVF-pruned
+    * scan against the exact cosine ranking (the metrics a retrieval
+    * deployment actually reports; `sim_ivf_recall` counts set overlap,
+    * this scores ORDER). Relevance is graded by exact rank (rel = k+1 −
+    * exact_rank, 0 off-list); both lists exclude the query's own row so
+    * the self-hit can't inflate either metric. All metrics land as exact
+    * integer micro-units: per-term round-before-sum for DCG/IDCG (log2
+    * spelled ln(x)/ln(2) in both engines), integer division for MRR and
+    * the final nDCG ratio. Cost: the two k-row rankings (one pruned scan,
+    * one exact scan — a query-sample audit in production) plus k-row
+    * joins; every window runs on a k-row frame.
+    */
   def simEvalRank(embeddings: DataFrame, k: Int = 10): DataFrame =
     simEvalRankAt(embeddings, k, nprobe = 4)
 
@@ -1846,18 +1793,12 @@ object SimOps {
       nprobe: Int): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val exact = e.filter(col("vec_id") =!= 0).crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cosine(col("v"), col("qv")), 9).as("c9"))
-      .orderBy(desc("c9"), asc("vec_id")).limit(k)
-    val er = exact
+    val er = exactTop(e.filter(col("vec_id") =!= 0), query0(e), k)
       .withColumn("erank",
         row_number().over(Window.orderBy(desc("c9"), asc("vec_id"))))
       .select(col("vec_id"), col("erank"))
       .localCheckpoint() // k-row frame feeds three consumers
-    val ar = ivfScan(e, cents, nprobe = nprobe, excludeQueryId = Some(0L))
+    val ar = ivfScan(e, firstCells(e), nprobe = nprobe, excludeQueryId = Some(0L))
       .withColumn("arank",
         row_number().over(Window.orderBy(desc("cos"), asc("vec_id"))))
       .select(col("vec_id"), col("arank"))
@@ -2112,15 +2053,8 @@ object SimOps {
     */
   def simIvfRecall(embeddings: DataFrame, k: Int = 10): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val dot = LlmOps.dot _
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val cos = dot(col("v"), col("qv")) /
-      (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("qv"), col("qv"))))
-    val exact = e.crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cos, 9).as("c9"))
-      .orderBy(desc("c9"), asc("vec_id")).limit(k)
-      .select(col("vec_id"))
+    val exact = exactTop(e, query0(e), k).select(col("vec_id"))
     val approx = simIvf(embeddings).select(col("vec_id")).withColumn("hit", lit(1L))
     exact.join(approx, Seq("vec_id"), "left")
       .agg(
@@ -2167,17 +2101,9 @@ object SimOps {
   def simIvfNprobeSweep(embeddings: DataFrame,
       probeCounts: Seq[Int] = Seq(1, 2, 4, 8), k: Int = 10): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val dot = LlmOps.dot _
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val cos = dot(col("v"), col("qv")) /
-      (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("qv"), col("qv"))))
-    val exact = e.crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cos, 9).as("c9"))
-      .orderBy(desc("c9"), asc("vec_id")).limit(k)
-      .select(col("vec_id"))
+    val cents = firstCells(e)
+    val exact = exactTop(e, query0(e), k).select(col("vec_id"))
       .localCheckpoint() // one baseline serves every sweep point
     probeCounts.map { np =>
       val approx = ivfScan(e, cents, nprobe = np)
@@ -2206,7 +2132,6 @@ object SimOps {
       terms: Seq[String] = Seq("hash", "join"), k: Int = 10,
       rrfK: Int = 60): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val dot = LlmOps.dot _
     // lexical leg: Σ_terms tf · ln(N/df)
     val toks = documents
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("w"))
@@ -2223,19 +2148,13 @@ object SimOps {
       .select(col("doc_id"), round(col("score"), 6).as("s6"))
       .orderBy(desc("s6"), asc("doc_id")).limit(k)
       .withColumn("lex_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(desc("s6"), asc("doc_id")))) // k-row frame, bounded
+        Window.orderBy(desc("s6"), asc("doc_id")))) // k-row frame, bounded
     // vector leg: exact cosine top-k against the vec-0 query
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val cos = dot(col("v"), col("qv")) /
-      (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("qv"), col("qv"))))
-    val vecTop = e.crossJoin(broadcast(q))
-      .select(col("vec_id").as("doc_id"), round(cos, 9).as("c9"))
-      .orderBy(desc("c9"), asc("doc_id")).limit(k)
+    val vecTop = exactTop(e, query0(e), k)
+      .select(col("vec_id").as("doc_id"), col("c9"))
       .withColumn("vec_rank", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(desc("c9"), asc("doc_id"))))
+        Window.orderBy(desc("c9"), asc("doc_id"))))
     lexTop.select(col("doc_id"), col("lex_rank"))
       .join(vecTop.select(col("doc_id"), col("vec_rank")), Seq("doc_id"), "full")
       .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
@@ -2260,18 +2179,9 @@ object SimOps {
   def simIvfRecallCurve(embeddings: DataFrame,
       ks: Seq[Int] = Seq(1, 3, 5, 10)): DataFrame = {
     graft.plans.VectorFunctions.register(embeddings.sparkSession)
-    val dot = LlmOps.dot _
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
-    val q = e.filter(col("vec_id") === 0).select(col("v").as("qv"))
-    val cos = dot(col("v"), col("qv")) /
-      (sqrt(dot(col("v"), col("v"))) * sqrt(dot(col("qv"), col("qv"))))
-    val kmax = ks.max
-    val exact = e.crossJoin(broadcast(q))
-      .select(col("vec_id"), round(cos, 9).as("c9"))
-      .orderBy(desc("c9"), asc("vec_id")).limit(kmax)
-    val ranked = exact.withColumn("rnk",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .orderBy(desc("c9"), asc("vec_id")))) // kmax-row frame, bounded
+    val ranked = exactTop(e, query0(e), ks.max).withColumn("rnk",
+      row_number().over(Window.orderBy(desc("c9"), asc("vec_id")))) // kmax-row frame, bounded
     val approx = simIvf(embeddings).select(col("vec_id"))
       .withColumn("hit", lit(1L))
     ranked.join(approx, Seq("vec_id"), "left")
@@ -2318,39 +2228,6 @@ object SimOps {
       .orderBy(desc("ip"), asc("vec_id"))
   }
 
-  /** LEARNED linear projection — top principal component of the embedding
-    * corpus via deterministic INTEGER power iteration, the data-aware
-    * sibling of the JL random projection above (random projection needs
-    * no training pass but is direction-blind; PCA spends one corpus scan
-    * to learn where the variance actually lives — the classic
-    * dimensionality-reduction pair every embedding pipeline chooses
-    * between).
-    *
-    * Exact-integer end to end (the kmeans/SGNS parity discipline):
-    *  - second moments from ONE corpus scan: each row's 64×64 outer
-    *    product flattens into a 4096-long array and partial aggregation
-    *    accumulates it per partition (the declarative spelling of "keep a
-    *    local scatter matrix per task, merge 4096-long states") — the
-    *    only corpus-sized stage, map-side combined, compact-key shuffle;
-    *  - the scatter matrix is the exact integer M = n·Σxxᵀ − (Σx)(Σx)ᵀ
-    *    over the ×1000-quantized embeddings (no division, no float mean;
-    *    exact up to ~2M rows in 64 dims — beyond that the quantized-
-    *    division variant applies, same shape);
-    *  - M rescales once to ≤10⁶ magnitude by integer division and the
-    *    8-round power iteration runs on the 4096-row table: matvec =
-    *    one broadcast join + 64-group aggregate per round, renormalized
-    *    to ≤10⁶ by sign·(|w| DIV (max|w| DIV 10⁶ + 1)) — all divisions
-    *    on non-negative operands so Spark DIV and DuckDB // agree by
-    *    construction;
-    *  - sign convention: flip so the largest-|component| dim (tie →
-    *    smallest index) is positive — a total-order rule both engines
-    *    replay.
-    * Convergence is NOT part of the contract — the output is defined as
-    * "8 rounds of this iteration", bit-identical on both engines; the
-    * explained-variance audit is what tells a user whether 8 sufficed.
-    * Returns (scaled scatter table m(i,j,m), component v(i,v), quantized
-    * corpus eq).
-    */
   /** The exact-integer MOMENT stage of the PCA trainer — the scatter
     * matrix M = n·Σxxᵀ − (Σx)(Σx)ᵀ over the quantized corpus `eq`, in
     * long form (i, j, bigm). This is the trainer's only corpus-sized
@@ -2391,6 +2268,39 @@ object SimOps {
     pcaMoments(embeddings.select(col("vec_id"),
       quantize1000(toVec(col("embedding"))).as("xq")))
 
+  /** LEARNED linear projection — top principal component of the embedding
+    * corpus via deterministic INTEGER power iteration, the data-aware
+    * sibling of the JL random projection above (random projection needs
+    * no training pass but is direction-blind; PCA spends one corpus scan
+    * to learn where the variance actually lives — the classic
+    * dimensionality-reduction pair every embedding pipeline chooses
+    * between).
+    *
+    * Exact-integer end to end (the kmeans/SGNS parity discipline):
+    *  - second moments from ONE corpus scan: each row's 64×64 outer
+    *    product flattens into a 4096-long array and partial aggregation
+    *    accumulates it per partition (the declarative spelling of "keep a
+    *    local scatter matrix per task, merge 4096-long states") — the
+    *    only corpus-sized stage, map-side combined, compact-key shuffle;
+    *  - the scatter matrix is the exact integer M = n·Σxxᵀ − (Σx)(Σx)ᵀ
+    *    over the ×1000-quantized embeddings (no division, no float mean;
+    *    exact up to ~2M rows in 64 dims — beyond that the quantized-
+    *    division variant applies, same shape);
+    *  - M rescales once to ≤10⁶ magnitude by integer division and the
+    *    8-round power iteration runs on the 4096-row table: matvec =
+    *    one broadcast join + 64-group aggregate per round, renormalized
+    *    to ≤10⁶ by sign·(|w| DIV (max|w| DIV 10⁶ + 1)) — all divisions
+    *    on non-negative operands so Spark DIV and DuckDB // agree by
+    *    construction;
+    *  - sign convention: flip so the largest-|component| dim (tie →
+    *    smallest index) is positive — a total-order rule both engines
+    *    replay.
+    * Convergence is NOT part of the contract — the output is defined as
+    * "8 rounds of this iteration", bit-identical on both engines; the
+    * explained-variance audit is what tells a user whether 8 sufficed.
+    * Returns (scaled scatter table m(i,j,m), component v(i,v), quantized
+    * corpus eq).
+    */
   private[graft] def pcaComponent(embeddings: DataFrame, rounds: Int = 8)
       : (DataFrame, DataFrame, DataFrame) = {
     val spark = embeddings.sparkSession

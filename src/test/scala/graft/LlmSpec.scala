@@ -466,6 +466,28 @@ class LlmSpec extends SparkTestBase {
       s"result leaked vectors outside the predicate: $got")
   }
 
+  test("IVF cell rule: cosine ties go to the lowest cid in nearestCells and queryCells") {
+    // cids 3 and 7 are the SAME centroid, so every row ties on them (listed
+    // 7 first, so input order cannot fake the rule); cid 5 never wins
+    graft.plans.VectorFunctions.register(spark)
+    val cents = Seq((7L, Array(1.0, 1.0)), (5L, Array(-1.0, 0.5)), (3L, Array(1.0, 1.0)))
+      .toDF("cid", "cv")
+    val rows = Seq((10L, Array(2.0, 1.0)), (11L, Array(1.0, 3.0))).toDF("vec_id", "v")
+    def cells(n: Int): Map[Long, Set[Long]] = {
+      val out = operators.SimOps.nearestCells(rows, "vec_id", "v", cents, n)
+      assert(out.columns.toSeq === Seq("vec_id", "v", "cell"))
+      out.select("vec_id", "cell").as[(Long, Long)].collect().toSeq
+        .groupBy(_._1).map { case (id, cs) => id -> cs.map(_._2).toSet }
+    }
+    assert(cells(1) === Map(10L -> Set(3L), 11L -> Set(3L)))
+    assert(cells(2) === Map(10L -> Set(3L, 7L), 11L -> Set(3L, 7L)))
+    val q = Seq(Tuple1(Array(2.0, 1.0))).toDF("qv")
+    def probe(n: Int): Set[Long] =
+      operators.SimOps.queryCells(cents, q, n).as[Long].collect().toSet
+    assert(probe(1) === Set(3L))
+    assert(probe(2) === Set(3L, 7L))
+  }
+
   test("sim_kmeans: Lloyd rounds rebalance a degenerate first-k codebook") {
     // 4 well-separated clusters of 16 vectors (spike dim = 2*cluster),
     // deterministic per-vector jitter in dim 8. The first k=4 vectors ALL
