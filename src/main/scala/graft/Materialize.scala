@@ -1,0 +1,47 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+import java.util.Comparator
+
+import scala.util.Using
+
+import org.apache.spark.sql.DataFrame
+
+/** The one owner of cache lifetimes and scratch space. The code that
+  * persists a frame releases it here, also when its body throws; every
+  * scratch directory lives under one root and every tree delete is the
+  * one below.
+  */
+object Materialize {
+
+  /** Runs `body` over the persisted `cached` and unpersists it when the
+    * body returns or throws. A frame `body` returns must not read the
+    * cache lazily: checkpoint what outlives it.
+    */
+  def releasing[T](cached: DataFrame)(body: DataFrame => T): T =
+    try body(cached) finally cached.unpersist()
+
+  /** `<java.io.tmpdir>/graft_etl/<sfKey>/<tag>`: the scratch location of
+    * `tag` for the inputs in `sfDir` (sfKey is sfDir with every
+    * non-alphanumeric character replaced by `_`).
+    */
+  def scratchPath(sfDir: String, tag: String): Path =
+    Paths.get(sys.props("java.io.tmpdir"), "graft_etl",
+      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), tag)
+
+  /** [[scratchPath]], emptied and created — recreated per call so query
+    * results are deterministic run-over-run.
+    */
+  def scratchDir(sfDir: String, tag: String): Path = {
+    val p = scratchPath(sfDir, tag)
+    deleteTree(p)
+    Files.createDirectories(p)
+  }
+
+  /** Deletes `p` and everything under it; a missing `p` is a no-op. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Using.resource(Files.walk(p)) { files =>
+        files.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
+      }
+}

@@ -40,10 +40,7 @@ object ScaleProbe {
       // entries read "<dir>/<table>.parquet" — a directory at that exact
       // path serves the same spark.read; rename for the expected layout
       val target = outP.resolve(s"$name.parquet")
-      if (Files.exists(target)) {
-        Files.walk(target).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-      }
+      Materialize.deleteTree(target)
       Files.move(outP.resolve(s"$name.parquet.dir"), target,
         StandardCopyOption.ATOMIC_MOVE)
     }
@@ -73,13 +70,9 @@ object ScaleProbe {
     val part = Files.list(evTmp).filter(_.toString.endsWith(".parquet"))
       .findFirst().get()
     val evTarget = outP.resolve("events.parquet")
-    if (Files.isDirectory(evTarget)) {
-      Files.walk(evTarget).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-    }
-    Files.move(part, evTarget, StandardCopyOption.REPLACE_EXISTING)
-    Files.walk(evTmp).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => if (Files.exists(f)) Files.delete(f))
+    Materialize.deleteTree(evTarget)
+    Files.move(part, evTarget)
+    Materialize.deleteTree(evTmp)
     val documents = spark.read.parquet(s"$base/documents.parquet")
     write(copies(spark) { i =>
       documents.withColumn("doc_id", col("doc_id") + i * Shift)

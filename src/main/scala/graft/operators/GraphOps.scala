@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Graph analytics over the relational tables — the §2.11 extension
   * family's "iterate a join + aggregate to a fixed depth" workload.
   * PageRank is the archetype: the same shape (message join on src,
@@ -39,9 +41,8 @@ object GraphOps {
     * fans back out to edges MAP-SIDE via explode — measured ~3× off the
     * whole 10-round loop at sf0.1 vs the flat cached edge list. The
     * groupBy(src)'s own shuffle IS the src pre-partitioning — one
-    * shuffle builds layout, degrees, and adjacency together. Callers
-    * unpersist via the handle after their final ranks are
-    * checkpoint-materialized.
+    * shuffle builds layout, degrees, and adjacency together. The caller
+    * releases the returned cache; the entries take it from `withGraph`.
     *
     * An undirected edge (both directions materialized) links a customer
     * to every supplier whose parts they ordered; node ids are disjoint by
@@ -95,11 +96,38 @@ object GraphOps {
       orders: DataFrame, lineitem: DataFrame,
       chunkSize: Int = 65536): (DataFrame, DataFrame, Long) = {
     val adj = adjacencyFrame(orders, lineitem, chunkSize).persist()
-    // distinct because a hub spanning several chunk rows repeats its src;
-    // the cache's src HashPartitioning makes this exchange-free
-    val nodes = adj.select(col("src").as("id")).distinct()
-    val n = nodes.count() // also materializes the adjacency cache
-    (adj, nodes, n)
+    val nodes = nodesOf(adj)
+    (adj, nodes, nodes.count())
+  }
+
+  // distinct because a hub spanning several chunk rows repeats its src;
+  // the cache's src HashPartitioning makes this exchange-free
+  private def nodesOf(adj: DataFrame): DataFrame =
+    adj.select(col("src").as("id")).distinct()
+
+  /** Runs `body` over the cached in-query adjacency, its node set and the
+    * node count (whose `count()` materializes the cache), releasing the
+    * cache when `body` returns or throws.
+    */
+  private def withGraph[T](orders: DataFrame, lineitem: DataFrame)(
+      body: (DataFrame, DataFrame, Long) => T): T =
+    Materialize.releasing(adjacencyFrame(orders, lineitem).persist()) { adj =>
+      val nodes = nodesOf(adj)
+      body(adj, nodes, nodes.count())
+    }
+
+  /** Runs `body` over the stored adjacency layout (built here if this
+    * session lacks it), pinned in the cache, and its node set; the cache
+    * is released when `body` returns or throws.
+    */
+  private def withStoredAdjacency[T](
+      spark: org.apache.spark.sql.SparkSession,
+      orders: DataFrame, lineitem: DataFrame, sfDir: String)(
+      body: (DataFrame, DataFrame) => T): T = {
+    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
+    Materialize.releasing(spark.table(name).persist()) { adj =>
+      body(adj, nodesOf(adj))
+    }
   }
 
   private def finish(ranks: DataFrame): DataFrame =
@@ -129,9 +157,7 @@ object GraphOps {
     * cached adjacency + the dst aggregate shuffle — no broadcast, no
     * coalesce(1), nothing O(E) in motion. (PlanSpec separately pins that
     * a superstep over partitioned inputs co-locates with a SINGLE
-    * exchange and no broadcast — the at-scale join shape itself.) The
-    * final ranks are already checkpoint-materialized, so the adjacency
-    * cache is released before returning.
+    * exchange and no broadcast — the at-scale join shape itself.)
     */
   private[graft] def loopPartitioned(adj: DataFrame, nodes: DataFrame, n: Long,
       rounds: Int, damping: Double): DataFrame = {
@@ -153,7 +179,6 @@ object GraphOps {
       // lineage — the cadence keeps that property at half the barriers)
       if (r % 2 == 0 || r == rounds) ranks = ranks.localCheckpoint()
     }
-    adj.unpersist()
     finish(ranks)
   }
 
@@ -197,10 +222,8 @@ object GraphOps {
     * per stage.)
     */
   def graphPagerank(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 10, damping: Double = 0.85): DataFrame = {
-    val (adj, nodes, n) = buildGraph(orders, lineitem)
-    loopPartitioned(adj, nodes, n, rounds, damping)
-  }
+      rounds: Int = 10, damping: Double = 0.85): DataFrame =
+    withGraph(orders, lineitem)(loopPartitioned(_, _, _, rounds, damping))
 
   /** PageRank with CONVERGENCE-DETECTED early exit — the at-scale form
     * of `graphPagerank` (r8/r9 verdict carry-over): fixed-round loops
@@ -240,35 +263,34 @@ object GraphOps {
     */
   def graphPagerankConv(orders: DataFrame, lineitem: DataFrame,
       maxRounds: Int = 16, tol: Double = 0.25,
-      damping: Double = 0.85): DataFrame = {
-    val (adj, nodes, n) = buildGraph(orders, lineitem)
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
-    var exitRound = 0
-    var r = 0
-    while (exitRound == 0 && r < maxRounds) {
-      r += 1
-      val obs = org.apache.spark.sql.Observation(s"pr_resid_$r")
-      val next = superstepPartitioned(adj, ranks, n, damping)
-        .select(col("id"), round(col("rank"), 9).as("rank"))
-        .join(ranks.select(col("id"), col("rank").as("prev")), "id")
-        .select(col("id"), col("rank"), abs(col("rank") - col("prev")).as("dr"))
-        .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
-        .localCheckpoint()
-      val delta = observedResidual9(obs, "d")
-      ranks = next.select(col("id"), col("rank"))
-      if (delta < tol) exitRound = r
+      damping: Double = 0.85): DataFrame =
+    withGraph(orders, lineitem) { (adj, nodes, n) =>
+      var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
+      var exitRound = 0
+      var r = 0
+      while (exitRound == 0 && r < maxRounds) {
+        r += 1
+        val obs = org.apache.spark.sql.Observation(s"pr_resid_$r")
+        val next = superstepPartitioned(adj, ranks, n, damping)
+          .select(col("id"), round(col("rank"), 9).as("rank"))
+          .join(ranks.select(col("id"), col("rank").as("prev")), "id")
+          .select(col("id"), col("rank"), abs(col("rank") - col("prev")).as("dr"))
+          .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
+          .localCheckpoint()
+        val delta = observedResidual9(obs, "d")
+        ranks = next.select(col("id"), col("rank"))
+        if (delta < tol) exitRound = r
+      }
+      require(exitRound > 0,
+        s"pagerank residual did not reach $tol within $maxRounds rounds — " +
+          "raise maxRounds or loosen tol; refusing to return an " +
+          "under-converged vector as converged")
+      ranks
+        .select(col("id").as("node_id"), round(col("rank"), 6).as("pr"),
+          lit(exitRound.toLong).as("exit_round"))
+        .orderBy(col("pr").desc, col("node_id"))
+        .limit(100)
     }
-    adj.unpersist()
-    require(exitRound > 0,
-      s"pagerank residual did not reach $tol within $maxRounds rounds — " +
-        "raise maxRounds or loosen tol; refusing to return an " +
-        "under-converged vector as converged")
-    ranks
-      .select(col("id").as("node_id"), round(col("rank"), 6).as("pr"),
-        lit(exitRound.toLong).as("exit_round"))
-      .orderBy(col("pr").desc, col("node_id"))
-      .limit(100)
-  }
 
   /** Connected components with CONVERGENCE-DETECTED early exit — the
     * min-label loop run to its FIXPOINT instead of a fixed hop count:
@@ -293,38 +315,37 @@ object GraphOps {
     * Output: the component census + the exit round.
     */
   def graphComponentsConv(orders: DataFrame, lineitem: DataFrame,
-      maxRounds: Int = 8): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    var exitRound = 0
-    var r = 0
-    while (exitRound == 0 && r < maxRounds) {
-      r += 1
-      val nbrMin = adj.join(labels, col("src") === col("id"))
-        .select(explode(col("dsts")).as("nid"), col("label").as("nl"))
-        .groupBy(col("nid"))
-        .agg(min(col("nl")).as("nbr"))
-      val obs = org.apache.spark.sql.Observation(s"cc_chg_$r")
-      val next = labels.join(nbrMin, col("id") === col("nid"))
-        .select(col("id"), least(col("label"), col("nbr")).as("label"),
-          (col("nbr") < col("label")).as("chg"))
-        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint()
-      val changed = obs.get("n").asInstanceOf[Long]
-      labels = next.select(col("id"), col("label"))
-      if (changed == 0L) exitRound = r
+      maxRounds: Int = 8): DataFrame =
+    withGraph(orders, lineitem) { (adj, nodes, _) =>
+      var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
+      var exitRound = 0
+      var r = 0
+      while (exitRound == 0 && r < maxRounds) {
+        r += 1
+        val nbrMin = adj.join(labels, col("src") === col("id"))
+          .select(explode(col("dsts")).as("nid"), col("label").as("nl"))
+          .groupBy(col("nid"))
+          .agg(min(col("nl")).as("nbr"))
+        val obs = org.apache.spark.sql.Observation(s"cc_chg_$r")
+        val next = labels.join(nbrMin, col("id") === col("nid"))
+          .select(col("id"), least(col("label"), col("nbr")).as("label"),
+            (col("nbr") < col("label")).as("chg"))
+          .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
+          .localCheckpoint()
+        val changed = obs.get("n").asInstanceOf[Long]
+        labels = next.select(col("id"), col("label"))
+        if (changed == 0L) exitRound = r
+      }
+      require(exitRound > 0,
+        s"components did not reach a fixpoint within $maxRounds rounds — " +
+          "raise maxRounds; refusing to return a truncated labeling as converged")
+      labels
+        .groupBy(col("label").as("component"))
+        .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
+        .select(col("component"), col("n_nodes"), col("min_node"),
+          lit(exitRound.toLong).as("exit_round"))
+        .orderBy("component")
     }
-    adj.unpersist()
-    require(exitRound > 0,
-      s"components did not reach a fixpoint within $maxRounds rounds — " +
-        "raise maxRounds; refusing to return a truncated labeling as converged")
-    labels
-      .groupBy(col("label").as("component"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
-      .select(col("component"), col("n_nodes"), col("min_node"),
-        lit(exitRound.toLong).as("exit_round"))
-      .orderBy("component")
-  }
 
   /** Fixed-round synchronous min-label propagation over the trade graph —
     * the connected-components kernel on the SAME cached adjacency layout
@@ -345,10 +366,8 @@ object GraphOps {
     * N hops, size, and the smallest member as a join-back handle).
     */
   def graphComponents(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 8): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    componentsLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 8): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) => componentsLoop(adj, nodes, rounds))
 
   /** The min-label loop + census, shared by the in-query build and the
     * stored-layout serving path (both hand in a persisted adjacency).
@@ -366,7 +385,6 @@ object GraphOps {
       // every-second-hop checkpoint cadence (the loopPartitioned trade)
       if (r % 2 == 0 || r == rounds) labels = labels.localCheckpoint()
     }
-    adj.unpersist()
     labels
       .groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
@@ -380,12 +398,8 @@ object GraphOps {
   def graphComponentsStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 8): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    componentsLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 8): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(componentsLoop(_, _, rounds))
 
   /** Multi-source BFS — shortest hop distance from a seed set (every
     * node with id % 64 == 0, a stand-in for "flagged accounts" /
@@ -407,10 +421,8 @@ object GraphOps {
     * ring, sentinel presented as -1.
     */
   def graphBfs(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 6): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    bfsLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 6): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) => bfsLoop(adj, nodes, rounds))
 
   /** BFS served from the stored bucketed adjacency — with this, every
     * iterative algorithm in the family (pagerank, components, LPA, HITS,
@@ -419,12 +431,8 @@ object GraphOps {
   def graphBfsStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 6): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    bfsLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 6): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(bfsLoop(_, _, rounds))
 
   private def bfsLoop(adj: DataFrame, nodes: DataFrame,
       rounds: Int): DataFrame = {
@@ -442,7 +450,6 @@ object GraphOps {
       // every-second-hop checkpoint cadence (the loopPartitioned trade)
       if (r % 2 == 0 || r == rounds) dist = dist.localCheckpoint()
     }
-    adj.unpersist()
     dist
       .groupBy(when(col("dist") >= INF, lit(-1L)).otherwise(col("dist")).as("hops"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
@@ -477,10 +484,9 @@ object GraphOps {
     * settlement, backward layers from maxRounds down.
     */
   def graphBetweenness(orders: DataFrame, lineitem: DataFrame,
-      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    betweennessOf(adj, nodes, seedMod, nSeeds, maxRounds)
-  }
+      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) =>
+      betweennessOf(adj, nodes, seedMod, nSeeds, maxRounds))
 
   /** Betweenness served from the stored bucketed adjacency — the new
     * family member keeps the invariant that EVERY iterative algorithm
@@ -490,12 +496,9 @@ object GraphOps {
   def graphBetweennessStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    betweennessOf(adj, nodes, seedMod, nSeeds, maxRounds)
-  }
+      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(
+      betweennessOf(_, _, seedMod, nSeeds, maxRounds))
 
   /** HARMONIC closeness centrality from the sampled seeds — the other
     * classic shortest-path centrality, sharing `forwardRings` with
@@ -509,10 +512,9 @@ object GraphOps {
     * betweenness: O(k·E), k the precision dial.
     */
   def graphCloseness(orders: DataFrame, lineitem: DataFrame,
-      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    closenessOf(adj, nodes, seedMod, nSeeds, maxRounds)
-  }
+      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) =>
+      closenessOf(adj, nodes, seedMod, nSeeds, maxRounds))
 
   /** Closeness served from the stored bucketed adjacency — same oracle
     * as graph_closeness (the stored-serving invariant).
@@ -520,23 +522,18 @@ object GraphOps {
   def graphClosenessStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    closenessOf(adj, nodes, seedMod, nSeeds, maxRounds)
-  }
+      seedMod: Int = 64, nSeeds: Int = 8, maxRounds: Int = 6): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(
+      closenessOf(_, _, seedMod, nSeeds, maxRounds))
 
   private def closenessOf(adj: DataFrame, nodes: DataFrame,
       seedMod: Int, nSeeds: Int, maxRounds: Int): DataFrame = {
     val (rings, deepest, _) =
       forwardRings(adj, nodes, seedMod, nSeeds, maxRounds)
-    adj.unpersist()
     if (deepest == 0) // seeds have no edges: nothing is reached
-      return rings(0).select(col("id").as("node_id"),
+      rings(0).select(col("id").as("node_id"),
         lit(0.0).as("closeness"), lit(0L).as("n_reach")).limit(0)
-    val reached = (1 to deepest).map(rings(_)).reduce(_ unionByName _)
-    reached
+    else (1 to deepest).map(rings(_)).reduce(_ unionByName _)
       .groupBy(col("id").as("node_id"))
       .agg(
         round(sum(lit(1.0) / col("dist")), 6).as("closeness"),
@@ -627,7 +624,6 @@ object GraphOps {
       acc = acc.unionByName(layerC)
       layerAbove = layerC
     }
-    adj.unpersist()
     acc
       .join(seeds.select(col("seed").as("seed_id")),
         col("id") === col("seed_id"), "left_anti")
@@ -663,43 +659,7 @@ object GraphOps {
     */
   def graphTriangles(orders: DataFrame, lineitem: DataFrame,
       maxCustDeg: Int = 256, pct: Double = 0.99): DataFrame = {
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val smallCust = pairs.groupBy(col("cust"))
-      .agg(count(lit(1)).as("cdeg"))
-      .filter(col("cdeg") <= maxCustDeg)
-      .select("cust")
-    // cached PARTITIONED+SORTED on the self-join key (r14, the
-    // biasedEdgeRoles treatment): the degree-filtered pair table feeds
-    // both sides of the deg² self-join below — a plain localCheckpoint
-    // reports unknown partitioning, so the join re-exchanged and
-    // re-sorted the frame per side; the clustered cache makes the
-    // self-join exchange-free AND sort-free. Left lazy instead, the
-    // orders⋈lineitem distinct (the operator's widest shuffle) runs
-    // twice. One row per (cust, supp) — compact at any scale.
-    val kept = pairs.join(smallCust, "cust")
-      .repartition(col("cust")).sortWithinPartitions("cust", "supp")
-      .persist()
-    // localCheckpoint: the co-purchase aggregate feeds TWO consumers
-    // (the percentile threshold and the edge filter); without
-    // materialization the deg²-cost projection runs twice — measured
-    // ~40% of the operator at sf0.1. The materialized side is the
-    // AGGREGATED pair table (one row per supplier pair, already deg²-
-    // collapsed), not the wedge stream; at 100 TB the same point in the
-    // plan persists with disk spill instead.
-    val co = kept.select(col("cust"), col("supp").as("s1"))
-      .join(kept.select(col("cust"), col("supp").as("s2")), Seq("cust"))
-      .filter(col("s1") < col("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(count(lit(1)).as("shared"))
-      .localCheckpoint()
-    // the checkpoint above was `kept`'s last consumer — release the cache
-    // eagerly (r15): a session-lifetime persist pins corpus-scaled memory
-    // AND lets the CacheManager serve later invocations of the same plan,
-    // which would make the bench's timed reps ride the warmup's cache
-    kept.unpersist()
+    val co = withCappedPairs(orders, lineitem, maxCustDeg)(sharedCounts)
     val thr = co.agg(percentile(col("shared"), lit(pct)).as("t"))
     // localCheckpoint: the edge list feeds THREE consumers (both wedge
     // sides + the closing semi-join); without materialization each one
@@ -723,6 +683,49 @@ object GraphOps {
       .limit(10)
   }
 
+  /** The customer→supplier pair table without hub customers (degree
+    * above `maxCustDeg`), cached for `body` and released when it returns
+    * or throws. Cached PARTITIONED+SORTED on the self-join key (r14, the
+    * biasedEdgeRoles treatment): the table feeds both sides of the deg²
+    * self-join — a plain localCheckpoint reports unknown partitioning,
+    * so the join re-exchanged and re-sorted the frame per side; the
+    * clustered cache makes the self-join exchange-free AND sort-free.
+    * Left lazy instead, the orders⋈lineitem distinct (the operator's
+    * widest shuffle) runs twice. One row per (cust, supp) — compact at
+    * any scale.
+    */
+  private def withCappedPairs[T](orders: DataFrame, lineitem: DataFrame,
+      maxCustDeg: Int)(body: DataFrame => T): T = {
+    val pairs = orders
+      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+      .distinct()
+    val smallCust = pairs.groupBy(col("cust"))
+      .agg(count(lit(1)).as("cdeg"))
+      .filter(col("cdeg") <= maxCustDeg)
+      .select("cust")
+    Materialize.releasing(pairs.join(smallCust, "cust")
+      .repartition(col("cust")).sortWithinPartitions("cust", "supp")
+      .persist())(body)
+  }
+
+  /** Supplier co-purchase counts (s1 < s2, shared) off the cached pair
+    * table, checkpointed: the aggregate feeds TWO consumers (the
+    * percentile threshold and the edge filter); without materialization
+    * the deg²-cost projection runs twice — measured ~40% of the operator
+    * at sf0.1. The materialized side is the AGGREGATED pair table (one
+    * row per supplier pair, already deg²-collapsed), not the wedge
+    * stream; at 100 TB the same point in the plan persists with disk
+    * spill instead.
+    */
+  private def sharedCounts(kept: DataFrame): DataFrame =
+    kept.select(col("cust"), col("supp").as("s1"))
+      .join(kept.select(col("cust"), col("supp").as("s2")), Seq("cust"))
+      .filter(col("s1") < col("s2"))
+      .groupBy(col("s1"), col("s2"))
+      .agg(count(lit(1)).as("shared"))
+      .localCheckpoint()
+
   /** Common-neighbor LINK PREDICTION — Jaccard similarity of supplier
     * customer-sets (the classic "suppliers serving the same buyers"
     * recsys/market-structure signal): top-20 supplier pairs by
@@ -735,35 +738,13 @@ object GraphOps {
     */
   def graphJaccard(orders: DataFrame, lineitem: DataFrame,
       maxCustDeg: Int = 256, k: Int = 20): DataFrame = {
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val smallCust = pairs.groupBy(col("cust"))
-      .agg(count(lit(1)).as("cdeg"))
-      .filter(col("cdeg") <= maxCustDeg)
-      .select("cust")
-    // feeds the self-join AND the degree table — materialized once,
-    // partitioned+sorted on the self-join key so the deg² self-join is
-    // exchange-free and sort-free (r14, the graphTriangles treatment)
-    val kept = pairs.join(smallCust, "cust")
-      .repartition(col("cust")).sortWithinPartitions("cust", "supp")
-      .persist()
-    // both consumers of `kept` are checkpointed EAGERLY inside the build
-    // (each output is an aggregated, bounded frame: one row per supplier /
-    // per co-purchased pair) so the cache can be released here instead of
-    // pinning the pair table for the session — r15: the r14 form left
-    // `kept` persisted forever, which both leaked memory at scale and let
-    // the bench's timed reps ride the warmup rep's cache entry.
-    val co = kept.select(col("cust"), col("supp").as("s1"))
-      .join(kept.select(col("cust"), col("supp").as("s2")), Seq("cust"))
-      .filter(col("s1") < col("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(count(lit(1)).as("shared"))
-      .localCheckpoint()
-    val deg = kept.groupBy(col("supp")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint() // reads the still-live cache — cheap
-    kept.unpersist()
+    // the pair table feeds the self-join AND the degree table; both are
+    // checkpointed EAGERLY (aggregated, bounded frames: one row per
+    // co-purchased pair / per supplier) while its cache is still live
+    val (co, deg) = withCappedPairs(orders, lineitem, maxCustDeg) { kept =>
+      (sharedCounts(kept),
+        kept.groupBy(col("supp")).agg(count(lit(1)).as("deg")).localCheckpoint())
+    }
     co
       .join(deg.select(col("supp").as("s1"), col("deg").as("deg_a")), "s1")
       .join(deg.select(col("supp").as("s2"), col("deg").as("deg_b")), "s2")
@@ -794,10 +775,8 @@ object GraphOps {
     * neighbors share labels. Output: per-community census.
     */
   def graphLabelProp(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 4): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    labelPropLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 4): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) => labelPropLoop(adj, nodes, rounds))
 
   /** ONE synchronous mode-vote round: grouped in-neighbor label counts
     * topped by max(struct(count, -label)) — the mode with smallest-label
@@ -815,8 +794,7 @@ object GraphOps {
       .select(col("nid").as("id"), (-col("t.negl")).as("label"))
 
   /** The mode-vote loop alone — returns the final (id, label) frame;
-    * shared by the census entries and the modularity scorer. The caller
-    * owns the adjacency handle (unpersist after its last consumer).
+    * shared by the census entries and the modularity scorer.
     */
   private def lpaLabels(
       adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
@@ -842,9 +820,7 @@ object GraphOps {
     */
   private def labelPropLoop(
       adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    val labels = lpaLabels(adj, nodes, rounds)
-    adj.unpersist()
-    labels
+    lpaLabels(adj, nodes, rounds)
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("community")
@@ -884,41 +860,40 @@ object GraphOps {
     * all rounds — the early-exit dynamics are what's checked.
     */
   def graphLabelPropConv(orders: DataFrame, lineitem: DataFrame,
-      maxRounds: Int = 10): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    var lPrev = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    // the vote output covers exactly the node set (bidirectional edges),
-    // so the r13 alignment joins back were identities — dropped in r14
-    // (the lpaLabels reasoning)
-    var lCur = lpaVote(adj, lPrev).localCheckpoint()
-    var exitRound = 0
-    var r = 1
-    while (exitRound == 0 && r < maxRounds) {
-      r += 1
-      val obs = org.apache.spark.sql.Observation(s"lpa_orbit_$r")
-      val next = lpaVote(adj, lCur)
-        .join(lPrev.select(col("id"), col("label").as("old2")), "id")
-        .select(col("id"), col("label"),
-          (col("label") =!= col("old2")).as("chg"))
-        .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-        .localCheckpoint()
-      val changed = obs.get("n").asInstanceOf[Long]
-      lPrev = lCur
-      lCur = next.select(col("id"), col("label"))
-      if (changed == 0L) exitRound = r
+      maxRounds: Int = 10): DataFrame =
+    withGraph(orders, lineitem) { (adj, nodes, _) =>
+      var lPrev = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
+      // the vote output covers exactly the node set (bidirectional edges),
+      // so the r13 alignment joins back were identities — dropped in r14
+      // (the lpaLabels reasoning)
+      var lCur = lpaVote(adj, lPrev).localCheckpoint()
+      var exitRound = 0
+      var r = 1
+      while (exitRound == 0 && r < maxRounds) {
+        r += 1
+        val obs = org.apache.spark.sql.Observation(s"lpa_orbit_$r")
+        val next = lpaVote(adj, lCur)
+          .join(lPrev.select(col("id"), col("label").as("old2")), "id")
+          .select(col("id"), col("label"),
+            (col("label") =!= col("old2")).as("chg"))
+          .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
+          .localCheckpoint()
+        val changed = obs.get("n").asInstanceOf[Long]
+        lPrev = lCur
+        lCur = next.select(col("id"), col("label"))
+        if (changed == 0L) exitRound = r
+      }
+      require(exitRound > 0,
+        s"label propagation did not reach a period-2 orbit within $maxRounds " +
+          "rounds — raise maxRounds; refusing to return a mid-oscillation " +
+          "labeling as converged")
+      lCur
+        .groupBy(col("label").as("community"))
+        .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
+        .select(col("community"), col("n_nodes"), col("min_node"),
+          lit(exitRound.toLong).as("exit_round"))
+        .orderBy("community")
     }
-    adj.unpersist()
-    require(exitRound > 0,
-      s"label propagation did not reach a period-2 orbit within $maxRounds " +
-        "rounds — raise maxRounds; refusing to return a mid-oscillation " +
-        "labeling as converged")
-    lCur
-      .groupBy(col("label").as("community"))
-      .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
-      .select(col("community"), col("n_nodes"), col("min_node"),
-        lit(exitRound.toLong).as("exit_round"))
-      .orderBy("community")
-  }
 
   /** Label propagation SERVED from the stored bucketed layout — the third
     * iterative consumer of `sink_graph_adjacency` (same oracle as
@@ -927,12 +902,8 @@ object GraphOps {
   def graphLabelPropStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 4): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    labelPropLoop(adj, nodes, rounds)
-  }
+      rounds: Int = 4): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(labelPropLoop(_, _, rounds))
 
   /** MODULARITY of the LPA communities — the quality score that makes
     * community detection quantitative (Newman's Q = Σ_c [e_c/m −
@@ -948,10 +919,8 @@ object GraphOps {
     * bounded community table).
     */
   def graphModularity(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 4): DataFrame = {
-    val (adj, nodes, _) = buildGraph(orders, lineitem)
-    modularityOf(adj, nodes, rounds)
-  }
+      rounds: Int = 4): DataFrame =
+    withGraph(orders, lineitem)((adj, nodes, _) => modularityOf(adj, nodes, rounds))
 
   /** Modularity SERVED from the stored bucketed adjacency — the seventh
     * iterative consumer of `sink_graph_adjacency` (same oracle as
@@ -960,12 +929,8 @@ object GraphOps {
   def graphModularityStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 4): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    modularityOf(adj, nodes, rounds)
-  }
+      rounds: Int = 4): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)(modularityOf(_, _, rounds))
 
   private def modularityOf(adj: DataFrame, nodes: DataFrame,
       rounds: Int): DataFrame = {
@@ -977,8 +942,8 @@ object GraphOps {
       .join(labels.select(col("id").as("src"), col("label").as("sl")), "src")
       .join(labels.select(col("id").as("dst"), col("label").as("dl")), "dst")
     // bounded per-community sufficient statistics, MATERIALIZED while the
-    // adjacency cache is still alive (everything below is lazy — an
-    // unpersist before a checkpoint would silently re-pay the edge scan)
+    // adjacency cache is still alive (everything below is lazy — a
+    // release before a checkpoint would silently re-pay the edge scan)
     val byComm = withL
       .groupBy(col("sl").as("community"))
       .agg(
@@ -987,7 +952,6 @@ object GraphOps {
       .localCheckpoint()
     val sizes = labels.groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_nodes"))
-    adj.unpersist()
     // 2m from the community table itself — no second edge scan
     val m2 = byComm.agg(sum(col("deg_mass")).as("m2"))
     val contrib = col("intra_edges").cast("double") / col("m2") -
@@ -1017,10 +981,8 @@ object GraphOps {
     * float fixpoint loop). Output: top-10 per side.
     */
   def graphHits(orders: DataFrame, lineitem: DataFrame,
-      rounds: Int = 6): DataFrame = {
-    val (adjAll, _, _) = buildGraph(orders, lineitem)
-    hitsLoop(adjAll, rounds)
-  }
+      rounds: Int = 6): DataFrame =
+    withGraph(orders, lineitem)((adjAll, _, _) => hitsLoop(adjAll, rounds))
 
   /** HITS served from the stored bucketed adjacency — the SIXTH
     * iterative consumer of `sink_graph_adjacency` (same oracle as
@@ -1029,10 +991,9 @@ object GraphOps {
   def graphHitsStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 6): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    hitsLoop(spark.table(name).persist(), rounds)
-  }
+      rounds: Int = 6): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir)((adjAll, _) =>
+      hitsLoop(adjAll, rounds))
 
   /** HITS with CONVERGENCE-DETECTED early exit — completing the
     * convergence story for the costliest iterative loop (pagerank and
@@ -1054,62 +1015,62 @@ object GraphOps {
     * BOTH sides at that round.
     */
   def graphHitsConv(orders: DataFrame, lineitem: DataFrame,
-      maxRounds: Int = 10, tol: Double = 1e-6): DataFrame = {
-    val (adjAll, _, _) = buildGraph(orders, lineitem)
-    val adj = adjAll.filter(col("src") % 2 === 0)
-    val radj = reverseAdjacency(adj) // r15: hub matvec's nid-keyed role
-    val custs = adj.select(col("src").as("id")).distinct()
-    var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
-    var a: DataFrame = null
-    var exitRound = 0
-    var r = 0
-    while (exitRound == 0 && r < maxRounds) {
-      r += 1
-      val araw = adj.join(h, col("src") === col("id"))
-        .select(explode(col("dsts")).as("nid"), col("score"))
-        .groupBy(col("nid")).agg(sum(col("score")).as("s"))
-      val asum = araw.agg(sum(col("s")).as("t"))
-      val anorm = araw.crossJoin(broadcast(asum))
-        .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
-      if (r == 1) {
-        // no predecessor vector yet — residuals start at round 2
-        a = anorm.localCheckpoint()
-      } else {
-        val obs = org.apache.spark.sql.Observation(s"hits_resid_$r")
-        val next = anorm
-          .join(a.select(col("id"), col("score").as("prev")), "id")
-          .select(col("id"), col("score"),
-            abs(col("score") - col("prev")).as("dr"))
-          .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
-          .localCheckpoint()
-        val delta = observedResidual9(obs, "d")
-        a = next.select(col("id"), col("score"))
-        if (delta < tol) exitRound = r
+      maxRounds: Int = 10, tol: Double = 1e-6): DataFrame =
+    withGraph(orders, lineitem) { (adjAll, _, _) =>
+      val adj = adjAll.filter(col("src") % 2 === 0)
+      // r15: the hub matvec's nid-keyed role
+      Materialize.releasing(reverseAdjacency(adj)) { radj =>
+        val custs = adj.select(col("src").as("id")).distinct()
+        var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
+        var a: DataFrame = null
+        var exitRound = 0
+        var r = 0
+        while (exitRound == 0 && r < maxRounds) {
+          r += 1
+          val araw = adj.join(h, col("src") === col("id"))
+            .select(explode(col("dsts")).as("nid"), col("score"))
+            .groupBy(col("nid")).agg(sum(col("score")).as("s"))
+          val asum = araw.agg(sum(col("s")).as("t"))
+          val anorm = araw.crossJoin(broadcast(asum))
+            .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
+          if (r == 1) {
+            // no predecessor vector yet — residuals start at round 2
+            a = anorm.localCheckpoint()
+          } else {
+            val obs = org.apache.spark.sql.Observation(s"hits_resid_$r")
+            val next = anorm
+              .join(a.select(col("id"), col("score").as("prev")), "id")
+              .select(col("id"), col("score"),
+                abs(col("score") - col("prev")).as("dr"))
+              .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
+              .localCheckpoint()
+            val delta = observedResidual9(obs, "d")
+            a = next.select(col("id"), col("score"))
+            if (delta < tol) exitRound = r
+          }
+          // r15: the O(V) authority vector joins the nid-keyed cached role
+          // BEFORE the explode — see reverseAdjacency
+          val hraw = radj
+            .join(a.select(col("id").as("nid"), col("score")), "nid")
+            .select(explode(col("srcs")).as("src"), col("score"))
+            .groupBy(col("src")).agg(sum(col("score")).as("s"))
+          val hsum = hraw.agg(sum(col("s")).as("t"))
+          h = hraw.crossJoin(broadcast(hsum))
+            .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
+            .localCheckpoint() // per-round, like hitsLoop (lazy-h probe reverted)
+        }
+        require(exitRound > 0,
+          s"HITS authority residual did not reach $tol within $maxRounds rounds — " +
+            "raise maxRounds or loosen tol; refusing to return an " +
+            "under-converged vector as converged")
+        def top(side: String, df: DataFrame): DataFrame = df
+          .select(lit(side).as("side"), col("id"),
+            round(col("score"), 6).as("score"), lit(exitRound.toLong).as("exit_round"))
+          .orderBy(desc("score"), asc("id")).limit(10)
+        top("auth", a).unionByName(top("hub", h))
+          .orderBy(col("side"), col("score").desc, col("id"))
       }
-      // r15: the O(V) authority vector joins the nid-keyed cached role
-      // BEFORE the explode — see reverseAdjacency
-      val hraw = radj
-        .join(a.select(col("id").as("nid"), col("score")), "nid")
-        .select(explode(col("srcs")).as("src"), col("score"))
-        .groupBy(col("src")).agg(sum(col("score")).as("s"))
-      val hsum = hraw.agg(sum(col("s")).as("t"))
-      h = hraw.crossJoin(broadcast(hsum))
-        .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
-        .localCheckpoint() // per-round, like hitsLoop (lazy-h probe reverted)
     }
-    radj.unpersist()
-    adjAll.unpersist()
-    require(exitRound > 0,
-      s"HITS authority residual did not reach $tol within $maxRounds rounds — " +
-        "raise maxRounds or loosen tol; refusing to return an " +
-        "under-converged vector as converged")
-    def top(side: String, df: DataFrame): DataFrame = df
-      .select(lit(side).as("side"), col("id"),
-        round(col("score"), 6).as("score"), lit(exitRound.toLong).as("exit_round"))
-      .orderBy(desc("score"), asc("id")).limit(10)
-    top("auth", a).unionByName(top("hub", h))
-      .orderBy(col("side"), col("score").desc, col("id"))
-  }
 
   /** REVERSE adjacency of the directed customer→supplier half —
     * (nid, srcs: array<long>), the hub matvec's static side, cached
@@ -1124,8 +1085,7 @@ object GraphOps {
     * joins the O(V) authority vector BEFORE exploding and the per-src
     * aggregate is the only O(E) stage. Celebrity rows are chunked
     * exactly like adjacencyFrame (bounded row width; the downstream
-    * per-src re-aggregation restores exact sums). Callers unpersist
-    * after their loop's final scores are checkpoint-materialized.
+    * per-src re-aggregation restores exact sums).
     */
   private[graft] def reverseAdjacency(
       adj: DataFrame, chunkSize: Int = 65536): DataFrame =
@@ -1141,68 +1101,67 @@ object GraphOps {
   private def hitsLoop(adjAll: DataFrame, rounds: Int): DataFrame = {
     // directed half: customer (even id) → supplier (odd id)
     val adj = adjAll.filter(col("src") % 2 === 0)
-    val radj = reverseAdjacency(adj)
-    val custs = adj.select(col("src").as("id")).distinct()
-    var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
-    var a: DataFrame = null
-    for (r <- 1 to rounds) {
-      val araw = adj.join(h, col("src") === col("id"))
-        .select(explode(col("dsts")).as("nid"), col("score"))
-        .groupBy(col("nid")).agg(sum(col("score")).as("s"))
-      val asum = araw.agg(sum(col("s")).as("t"))
-      // per-ROUND checkpoint: `a` nominally has one consumer, but the
-      // scalar-normalizer broadcast makes every lazy hop re-pay araw,
-      // and chains compound ~2× per skipped barrier — the lazy cadence
-      // measured 17.6 s vs 8.3 s at sf0.1 and was reverted. r14 probe:
-      // splitting the normalizer out of this job (raw-matvec checkpoint
-      // + scalar head() pull, or an observe() metric) benched 9.8/9.0 s
-      // vs 5.5 s for this form — the broadcast subtree shares the
-      // matvec's Exchange via ReusedExchange, so the "double compute"
-      // this split would save doesn't exist, while the extra per-round
-      // actions it adds are pure fixed cost (~0.16 s each,
-      // OPTIMIZATION_r14.md "Driver-overhead constants").
-      // (r15 probe #3, reverted: fusing BOTH matvecs into ONE per-round
-      // checkpoint — lazy anorm streaming into the radj hub join, the
-      // a/h pair materialized as one tagged union — halves the action
-      // count but benched hits 5.62 → 8.12 s, stored 4.08 → 6.50 s with
-      // flat controls. Even with the hub join's build side being the
-      // radj CACHE, the lazy authority subtree re-executes under the
-      // union's second consumer and the next round's araw join loses
-      // the filtered-union vector's size estimate — the same lazy-
-      // score-vector mechanism as the r14 probes, one level up.)
-      a = araw.crossJoin(broadcast(asum))
-        .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
-        .localCheckpoint()
-      // r15: the O(V) authority vector joins the nid-keyed cached role
-      // BEFORE the explode — see reverseAdjacency
-      val hraw = radj
-        .join(a.select(col("id").as("nid"), col("score")), "nid")
-        .select(explode(col("srcs")).as("src"), col("score"))
-        .groupBy(col("src")).agg(sum(col("score")).as("s"))
-      val hsum = hraw.agg(sum(col("s")).as("t"))
-      h = hraw.crossJoin(broadcast(hsum))
-        .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
-      // (r14 probe #2, reverted: leaving `h` LAZY between rounds — the hub
-      // matvec riding the next authority checkpoint, one action per round
-      // instead of two — benched 9.4-10.2 s vs 5.9 s baseline, +70% on all
-      // three hits entries. A lazy score vector defeats the join-side size
-      // estimate, so the araw join loses its broadcast, and the normalizer
-      // subtree re-executes under the BroadcastExchange instead of sharing
-      // via ReusedExchange. Both matvecs keep their own checkpoint.)
-      h = h.localCheckpoint() // same barrier economics as `a`
+    Materialize.releasing(reverseAdjacency(adj)) { radj =>
+      val custs = adj.select(col("src").as("id")).distinct()
+      var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
+      var a: DataFrame = null
+      for (r <- 1 to rounds) {
+        val araw = adj.join(h, col("src") === col("id"))
+          .select(explode(col("dsts")).as("nid"), col("score"))
+          .groupBy(col("nid")).agg(sum(col("score")).as("s"))
+        val asum = araw.agg(sum(col("s")).as("t"))
+        // per-ROUND checkpoint: `a` nominally has one consumer, but the
+        // scalar-normalizer broadcast makes every lazy hop re-pay araw,
+        // and chains compound ~2× per skipped barrier — the lazy cadence
+        // measured 17.6 s vs 8.3 s at sf0.1 and was reverted. r14 probe:
+        // splitting the normalizer out of this job (raw-matvec checkpoint
+        // + scalar head() pull, or an observe() metric) benched 9.8/9.0 s
+        // vs 5.5 s for this form — the broadcast subtree shares the
+        // matvec's Exchange via ReusedExchange, so the "double compute"
+        // this split would save doesn't exist, while the extra per-round
+        // actions it adds are pure fixed cost (~0.16 s each,
+        // OPTIMIZATION_r14.md "Driver-overhead constants").
+        // (r15 probe #3, reverted: fusing BOTH matvecs into ONE per-round
+        // checkpoint — lazy anorm streaming into the radj hub join, the
+        // a/h pair materialized as one tagged union — halves the action
+        // count but benched hits 5.62 → 8.12 s, stored 4.08 → 6.50 s with
+        // flat controls. Even with the hub join's build side being the
+        // radj CACHE, the lazy authority subtree re-executes under the
+        // union's second consumer and the next round's araw join loses
+        // the filtered-union vector's size estimate — the same lazy-
+        // score-vector mechanism as the r14 probes, one level up.)
+        a = araw.crossJoin(broadcast(asum))
+          .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
+          .localCheckpoint()
+        // r15: the O(V) authority vector joins the nid-keyed cached role
+        // BEFORE the explode — see reverseAdjacency
+        val hraw = radj
+          .join(a.select(col("id").as("nid"), col("score")), "nid")
+          .select(explode(col("srcs")).as("src"), col("score"))
+          .groupBy(col("src")).agg(sum(col("score")).as("s"))
+        val hsum = hraw.agg(sum(col("s")).as("t"))
+        h = hraw.crossJoin(broadcast(hsum))
+          .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
+        // (r14 probe #2, reverted: leaving `h` LAZY between rounds — the hub
+        // matvec riding the next authority checkpoint, one action per round
+        // instead of two — benched 9.4-10.2 s vs 5.9 s baseline, +70% on all
+        // three hits entries. A lazy score vector defeats the join-side size
+        // estimate, so the araw join loses its broadcast, and the normalizer
+        // subtree re-executes under the BroadcastExchange instead of sharing
+        // via ReusedExchange. Both matvecs keep their own checkpoint.)
+        h = h.localCheckpoint() // same barrier economics as `a`
+      }
+      // round to 6 BEFORE the top-10 cut (the oracle rounds first and
+      // orders by the rounded alias — cutting on the 9-decimal score
+      // could retain a different id set on a 6-decimal tie; the repo's
+      // round-before-cut discipline, cf. q18 / sim_*)
+      def top(side: String, df: DataFrame): DataFrame = df
+        .select(lit(side).as("side"), col("id"),
+          round(col("score"), 6).as("score"))
+        .orderBy(desc("score"), asc("id")).limit(10)
+      top("auth", a).unionByName(top("hub", h))
+        .orderBy(col("side"), col("score").desc, col("id"))
     }
-    radj.unpersist()
-    adjAll.unpersist()
-    // round to 6 BEFORE the top-10 cut (the oracle rounds first and
-    // orders by the rounded alias — cutting on the 9-decimal score
-    // could retain a different id set on a 6-decimal tie; the repo's
-    // round-before-cut discipline, cf. q18 / sim_*)
-    def top(side: String, df: DataFrame): DataFrame = df
-      .select(lit(side).as("side"), col("id"),
-        round(col("score"), 6).as("score"))
-      .orderBy(desc("score"), asc("id")).limit(10)
-    top("auth", a).unionByName(top("hub", h))
-      .orderBy(col("side"), col("score").desc, col("id"))
   }
 
   /** k-CORE decomposition by synchronous peeling over the supplier
@@ -1334,29 +1293,7 @@ object GraphOps {
     */
   private[graft] def coPurchaseEdges(orders: DataFrame, lineitem: DataFrame,
       maxCustDeg: Int = 256, pct: Double = 0.90): DataFrame = {
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val smallCust = pairs.groupBy(col("cust"))
-      .agg(count(lit(1)).as("cdeg"))
-      .filter(col("cdeg") <= maxCustDeg)
-      .select("cust")
-    // feeds both sides of the deg² self-join — materialized once,
-    // partitioned+sorted on the self-join key so the self-join is
-    // exchange-free and sort-free (r14, the graphTriangles treatment)
-    val kept = pairs.join(smallCust, "cust")
-      .repartition(col("cust")).sortWithinPartitions("cust", "supp")
-      .persist()
-    val co = kept.select(col("cust"), col("supp").as("s1"))
-      .join(kept.select(col("cust"), col("supp").as("s2")), Seq("cust"))
-      .filter(col("s1") < col("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(count(lit(1)).as("shared"))
-      .localCheckpoint() // feeds the percentile AND the edge filter
-    // last consumer of `kept` just materialized — release the cache (r15:
-    // no session-lifetime pins, no warm-cache carryover across bench reps)
-    kept.unpersist()
+    val co = withCappedPairs(orders, lineitem, maxCustDeg)(sharedCounts)
     val thr = co.agg(percentile(col("shared"), lit(pct)).as("t"))
     // bidirectional: the peel loop needs per-NODE degrees
     val uedges = co.crossJoin(broadcast(thr))
@@ -1690,9 +1627,8 @@ object GraphOps {
   }
 
   private[graft] def biasedWalkLoop(edgesIn: DataFrame,
-      steps: Int, retP: Double, outQ: Double): DataFrame = {
-    val adj = biasedNeighborRole(edgesIn)
-    try {
+      steps: Int, retP: Double, outQ: Double): DataFrame =
+    Materialize.releasing(biasedNeighborRole(edgesIn)) { adj =>
       // step 1: first-order uniform (no prev yet) — the graphRandomWalk
       // pick. rn = row_number over (src, dst asc) is exactly the 1-based
       // index into the sorted nbrs array, so the rank join is a
@@ -1705,7 +1641,7 @@ object GraphOps {
         .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"))
         .localCheckpoint()
       // slice 0 reads off the step-1 CHECKPOINT (prev = start = src there),
-      // not off `adj`: the role is unpersisted before the caller's action,
+      // not off `adj`: the role is released before the caller's action,
       // so a lazy projection over it would recompute the groupBy
       val slices = scala.collection.mutable.ArrayBuffer(
         state.select(col("start"), lit(0).as("step"), col("prev").as("node")),
@@ -1717,8 +1653,7 @@ object GraphOps {
       slices.reduce(_ unionByName _)
         .select(col("start").as("start_id"), col("step"), col("node"))
         .orderBy("start_id", "step")
-    } finally adj.unpersist() // also when a step throws
-  }
+    }
 
   /** Skip-gram PAIR generation over the walk corpus — the step that
     * turns `graphRandomWalk`'s output into graph-embedding training
@@ -1899,13 +1834,10 @@ object GraphOps {
   def graphPagerankStored(
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
-      rounds: Int = 10, damping: Double = 0.85): DataFrame = {
-    val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val adj = spark.table(name).persist()
-    val nodes = adj.select(col("src").as("id")).distinct()
-    val n = nodes.count()
-    loopPartitioned(adj, nodes, n, rounds, damping)
-  }
+      rounds: Int = 10, damping: Double = 0.85): DataFrame =
+    withStoredAdjacency(spark, orders, lineitem, sfDir) { (adj, nodes) =>
+      loopPartitioned(adj, nodes, nodes.count(), rounds, damping)
+    }
 
   // ---- stored co-purchase layout (round 8 continuation) ----------------
 
@@ -1954,7 +1886,7 @@ object GraphOps {
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
       k: Int = 10, rounds: Int = 5): DataFrame = {
     val name = ensureCoPurchaseTable(spark, orders, lineitem, sfDir)
-    kcorePeel(spark.table(name).persist(), k, rounds)
+    Materialize.releasing(spark.table(name).persist())(kcorePeel(_, k, rounds))
   }
 
   /** Triangle counting SERVED from the stored co-purchase layout. The

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize.scratchDir
+
 /** Join surface — SURVEY.md §2.3. The reference's audit/update queries over
   * per-connector raw collections (/root/reference/README.md:27–28) correlate
   * collections with each other and with time; this object covers every join
@@ -583,7 +585,7 @@ object JoinOps {
     */
   def joinDpp(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = graft.sources.EtlOps.freshDir(sfDir, "events_dpp").toString
+    val dir = scratchDir(sfDir, "events_dpp").toString
     spark.read.parquet(s"$sfDir/events.parquet")
       .transform(graft.Tables.normalizeTs)
       .withColumn("event_date", col("ts").cast("date"))

@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+import graft.Materialize.scratchDir
+
 /** [EXT] LLM-data-pipeline operators — SURVEY.md §2.11, grounded in
   * BASELINE.json:6 (dedup, similarity search, multimodal columns, text
   * analysis at 100 TB).
@@ -261,7 +264,7 @@ object LlmOps {
       spark: org.apache.spark.sql.SparkSession, sfDir: String): DataFrame =
     dedupIncrementalOn(
       graft.Tables.documents(spark, sfDir),
-      graft.sources.EtlOps.freshDir(sfDir, "neardup_index").toString)
+      scratchDir(sfDir, "neardup_index").toString)
 
   private[graft] def dedupIncrementalOn(
       documents: DataFrame, idxDir: String): DataFrame = {
@@ -435,47 +438,49 @@ object LlmOps {
     * which is quadratic in rounds at any scale. The pair list is cached
     * while iterating (the one legitimate cache in the engine: iterative
     * graph algorithms reuse their edge list by definition) and
-    * unpersisted before returning — the final labels are already
+    * released before returning — the final labels are already
     * materialized by the checkpoint, and a leaked cache would accumulate
     * across a 130-query sweep.
     */
   def dedupClusters(documents: DataFrame): DataFrame = {
-    val pairs = dedupNear(documents).select(col("doc_a"), col("doc_b")).cache()
-    val edges = pairs
-      .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint()
-    def labelSum(df: DataFrame): Long = {
-      val row = df.agg(sum(col("label"))).head()
-      if (row.isNullAt(0)) 0L else row.getLong(0)
-    }
-    var prevSum = labelSum(labels)
-    var changed = true
-    var rounds = 0
-    // labels only ever decrease, so convergence needs at most one round
-    // per hop of the longest chain; the bound is a runaway backstop, and
-    // tripping it must FAIL, not silently return under-merged clusters
-    // (the oracle computes the true fixpoint, so a silent cap would also
-    // be a wrong answer, not just a degraded one).
-    val maxRounds = 100
-    while (changed && rounds < maxRounds) {
-      val nbr = edges.join(labels, col("src") === col("id"))
-        .select(col("dst").as("id"), col("label"))
-      labels = labels.unionByName(nbr)
-        .groupBy("id").agg(min(col("label")).as("label"))
+    val clusters = Materialize.releasing(
+        dedupNear(documents).select(col("doc_a"), col("doc_b")).cache()) { pairs =>
+      val edges = pairs
+        .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+        .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      var labels = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label"))
         .localCheckpoint()
-      val s = labelSum(labels)
-      changed = s != prevSum
-      prevSum = s
-      rounds += 1
+      def labelSum(df: DataFrame): Long = {
+        val row = df.agg(sum(col("label"))).head()
+        if (row.isNullAt(0)) 0L else row.getLong(0)
+      }
+      var prevSum = labelSum(labels)
+      var changed = true
+      var rounds = 0
+      // labels only ever decrease, so convergence needs at most one round
+      // per hop of the longest chain; the bound is a runaway backstop, and
+      // tripping it must FAIL, not silently return under-merged clusters
+      // (the oracle computes the true fixpoint, so a silent cap would also
+      // be a wrong answer, not just a degraded one).
+      val maxRounds = 100
+      while (changed && rounds < maxRounds) {
+        val nbr = edges.join(labels, col("src") === col("id"))
+          .select(col("dst").as("id"), col("label"))
+        labels = labels.unionByName(nbr)
+          .groupBy("id").agg(min(col("label")).as("label"))
+          .localCheckpoint()
+        val s = labelSum(labels)
+        changed = s != prevSum
+        prevSum = s
+        rounds += 1
+      }
+      require(!changed,
+        s"dedupClusters did not converge within $maxRounds rounds — " +
+          "pair graph has a chain deeper than the backstop; raise maxRounds")
+      labels
     }
-    pairs.unpersist()
-    require(!changed,
-      s"dedupClusters did not converge within $maxRounds rounds — " +
-        "pair graph has a chain deeper than the backstop; raise maxRounds")
-    labels
+    clusters
       .select(col("id").as("doc_id"), col("label").as("cluster_rep"))
       .orderBy("doc_id")
   }
@@ -1280,7 +1285,7 @@ object LlmOps {
     */
   def multimodalIngestDecode(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val dir = graft.sources.EtlOps.freshDir(sfDir, "mm_ingest").toString
+    val dir = scratchDir(sfDir, "mm_ingest").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id")).as[Long]
       .foreachPartition { (it: Iterator[Long]) =>

@@ -3,6 +3,9 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Materialize
+import graft.Materialize.scratchDir
 // TextOps.qualityScore / tokenHash60 and LlmOps.dedupNear are reused by
 // pipelinePretrainV2 so every funnel gate is the SAME expression its
 // standalone operator ships (one definition, one oracle convention).
@@ -1132,17 +1135,6 @@ object PipelineOps {
       .join(ranked, "rnk")
       .select(col("center"), col("node").as("context"),
         col("n_pairs"), lit(0.0).as("label"))
-    // r15 second session (r14 verdict item 3, §2.4): the example table is
-    // the static O(pairs) side of every round's center join — cache it
-    // partitioned+sorted on center (the co-purchase `kept` treatment) so
-    // each round shuffles only the O(V) embedding projections, never the
-    // examples. The cache replaces the eager localCheckpoint (whose scan
-    // reported unknown partitioning, re-paying the exchange per round);
-    // it materializes inside round 1's action and is released after the
-    // final embedding checkpoint below.
-    val ex = pos.unionByName(negs)
-      .repartition(col("center")).sortWithinPartitions("center")
-      .persist()
     // integer micro-unit init: e = ((node·37 + i·101) mod 2001 − 1000)/1000,
     // stored ×1e6 — an exact long
     def initCol(i: Int): Column =
@@ -1154,59 +1146,69 @@ object PipelineOps {
     var emb = ranked.select(
       col("node") +: (1 to dim).map(i => initCol(i).as(s"e$i")): _*)
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-    for (r <- 1 to rounds) {
-      val u = emb.select(
-        col("node").as("center") +: (1 to dim).map(i => col(s"e$i").as(s"u$i")): _*)
-      val vv = emb.select(
-        col("node").as("context") +: (1 to dim).map(i => col(s"e$i").as(s"v$i")): _*)
-      val j = ex.join(u, "center").join(vv, "context")
-      def du(i: Int): Column = col(s"u$i").cast("double") / lit(1e6)
-      def dv(i: Int): Column = col(s"v$i").cast("double") / lit(1e6)
-      val z = (1 to dim).map(i => du(i) * dv(i)).reduce(_ + _)
-      val p = lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
-      if (lossTrace) {
-        // weighted squared error in exact micro-units (order-proof sum)
-        val l = j.agg(sum(round((p - col("label")) * (p - col("label"))
-          * col("n_pairs") * lit(1e6)).cast("long")).as("l")).head().getLong(0)
-        losses += l / 1e6
+    // r15 second session (r14 verdict item 3, §2.4): the example table is
+    // the static O(pairs) side of every round's center join — cache it
+    // partitioned+sorted on center (the co-purchase `kept` treatment) so
+    // each round shuffles only the O(V) embedding projections, never the
+    // examples. The cache replaces the eager localCheckpoint (whose scan
+    // reported unknown partitioning, re-paying the exchange per round);
+    // it materializes inside round 1's action.
+    Materialize.releasing(pos.unionByName(negs)
+      .repartition(col("center")).sortWithinPartitions("center")
+      .persist()) { ex =>
+      for (r <- 1 to rounds) {
+        val u = emb.select(
+          col("node").as("center") +: (1 to dim).map(i => col(s"e$i").as(s"u$i")): _*)
+        val vv = emb.select(
+          col("node").as("context") +: (1 to dim).map(i => col(s"e$i").as(s"v$i")): _*)
+        val j = ex.join(u, "center").join(vv, "context")
+        def du(i: Int): Column = col(s"u$i").cast("double") / lit(1e6)
+        def dv(i: Int): Column = col(s"v$i").cast("double") / lit(1e6)
+        val z = (1 to dim).map(i => du(i) * dv(i)).reduce(_ + _)
+        val p = lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
+        if (lossTrace) {
+          // weighted squared error in exact micro-units (order-proof sum)
+          val l = j.agg(sum(round((p - col("label")) * (p - col("label"))
+            * col("n_pairs") * lit(1e6)).cast("long")).as("l")).head().getLong(0)
+          losses += l / 1e6
+        }
+        val err = (p - col("label")) * col("n_pairs")
+        val contrib = j.select(
+          Seq(col("center"), col("context"), col("n_pairs")) ++
+            (1 to dim).map(i =>
+              round(err * dv(i) * lit(1e6)).cast("long").as(s"gc$i")) ++
+            (1 to dim).map(i =>
+              round(err * du(i) * lit(1e6)).cast("long").as(s"go$i")): _*)
+        val gcen = contrib.select(
+          Seq(col("center").as("node"), col("n_pairs").as("nw")) ++
+            (1 to dim).map(i => col(s"gc$i").as(s"g$i")): _*)
+        val gctx = contrib.select(
+          Seq(col("context").as("node"), col("n_pairs").as("nw")) ++
+            (1 to dim).map(i => col(s"go$i").as(s"g$i")): _*)
+        val aggs = sum(col("nw")).as("nw") +:
+          (1 to dim).map(i => sum(col(s"g$i")).as(s"g$i"))
+        val grad = gcen.unionByName(gctx).groupBy("node")
+          .agg(aggs.head, aggs.tail: _*)
+        // integer update: δ_micro = round(lr·g/nw) — 0.5·g is an exact
+        // halving, the division is one deterministic IEEE op, and the
+        // scale-0 round agrees across engines (no decimal re-scaling)
+        emb = emb.join(grad, Seq("node"), "left")
+          .select(col("node") +: (1 to dim).map(i =>
+            when(col("nw").isNull, col(s"e$i"))
+              .otherwise(col(s"e$i") - round(lit(lr)
+                * col(s"g$i").cast("double")
+                / col("nw").cast("double")).cast("long")).as(s"e$i")): _*)
+        // checkpoint BETWEEN rounds (r15, §1.2: round r+1 consumes emb
+        // twice and its joins need the materialized size estimate) AND
+        // after the last round — the final checkpoint came back in the
+        // second session because the lazy final emb still references the
+        // clustered `ex` cache, which must be releasable before return
+        // (the slices-over-unpersisted-adj lesson). Net actions are
+        // unchanged: the cache materializes lazily inside round 1 where
+        // the old eager ex.localCheckpoint() was its own job.
+        emb = emb.localCheckpoint()
       }
-      val err = (p - col("label")) * col("n_pairs")
-      val contrib = j.select(
-        Seq(col("center"), col("context"), col("n_pairs")) ++
-          (1 to dim).map(i =>
-            round(err * dv(i) * lit(1e6)).cast("long").as(s"gc$i")) ++
-          (1 to dim).map(i =>
-            round(err * du(i) * lit(1e6)).cast("long").as(s"go$i")): _*)
-      val gcen = contrib.select(
-        Seq(col("center").as("node"), col("n_pairs").as("nw")) ++
-          (1 to dim).map(i => col(s"gc$i").as(s"g$i")): _*)
-      val gctx = contrib.select(
-        Seq(col("context").as("node"), col("n_pairs").as("nw")) ++
-          (1 to dim).map(i => col(s"go$i").as(s"g$i")): _*)
-      val aggs = sum(col("nw")).as("nw") +:
-        (1 to dim).map(i => sum(col(s"g$i")).as(s"g$i"))
-      val grad = gcen.unionByName(gctx).groupBy("node")
-        .agg(aggs.head, aggs.tail: _*)
-      // integer update: δ_micro = round(lr·g/nw) — 0.5·g is an exact
-      // halving, the division is one deterministic IEEE op, and the
-      // scale-0 round agrees across engines (no decimal re-scaling)
-      emb = emb.join(grad, Seq("node"), "left")
-        .select(col("node") +: (1 to dim).map(i =>
-          when(col("nw").isNull, col(s"e$i"))
-            .otherwise(col(s"e$i") - round(lit(lr)
-              * col(s"g$i").cast("double")
-              / col("nw").cast("double")).cast("long")).as(s"e$i")): _*)
-      // checkpoint BETWEEN rounds (r15, §1.2: round r+1 consumes emb
-      // twice and its joins need the materialized size estimate) AND
-      // after the last round — the final checkpoint came back in the
-      // second session because the lazy final emb still references the
-      // clustered `ex` cache, which must be releasable before return
-      // (the slices-over-unpersisted-adj lesson). Net actions are
-      // unchanged: the cache materializes lazily inside round 1 where
-      // the old eager ex.localCheckpoint() was its own job.
-      emb = emb.localCheckpoint()
     }
-    ex.unpersist()
     // raw micro-unit integers out — the whole result hash-compares exactly
     val out = emb.select(
       col("node") +: (1 to dim).map(i => col(s"e$i")): _*)
@@ -1290,7 +1292,7 @@ object PipelineOps {
     val cell = (1 to dim).map(i =>
       when(col(s"e$i") > 0, lit(1 << (i - 1))).otherwise(lit(0)))
       .reduce(_ + _)
-    val dir = graft.sources.EtlOps.freshDir(sfDir, "node_embed_index").toString
+    val dir = scratchDir(sfDir, "node_embed_index").toString
     emb.withColumn("cell", cell.cast("int"))
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(dir)

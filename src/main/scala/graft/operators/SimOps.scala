@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+import graft.Materialize.scratchDir
+
 /** Near-duplicate and similarity-search variants beyond MinHash/LSH
   * (LlmOps.dedupNear) — SimHash, exact n-gram Jaccard with inverted-index
   * blocking, embedding-cosine near-dup, and IVF-style pruned ANN
@@ -607,36 +610,36 @@ object SimOps {
     // barrier + disk write — measured SLOWER than recompute, 4.5 vs
     // 4.0 s) or recompute (2x the dominant map work). Post-filter the
     // survivors are a small fraction of the probed pairs, so the cache
-    // holds O(survivors), not O(candidates); callers release it via the
-    // unpersist below once both cuts are consumed.
-    val cand = corpus.join(probes, "cell") // probed cells distinct: no dupes
-      .filter(col("vec_id") =!= col("src"))
-      .select(col("src"), col("vec_id").as("dst"),
-        round(graft.plans.VectorFunctions.vectorDot(col("v"), col("sv"))
-          / (col("nrm") * col("snrm")), 6).as("cos"))
-      .filter(col("cos") >= 0.3)
-      .persist()
-    // SYMMETRIZED candidates: cosine is symmetric, so every forward
-    // candidate (a,b) is also evidence for b's neighbor list — free
-    // recall at zero extra probing (0.81 -> 0.93 at sf0.1, the audit's
-    // numbers). The merge stays O(V·k) on the wire via the monotone
-    // top-k law  top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B)):  the native
-    // operator reduces the candidate stream per-src AND per-dst (two
-    // bounded-heap passes over the map-side stream, never a shuffle of
-    // the candidates themselves), and only the two k-sized graphs are
-    // unioned, deduped, and re-cut — all O(V·k) frames.
-    val fwd = graft.plans.TopKOps
-      .topKPerGroup(cand, Seq("src"), Seq(("cos", false), ("dst", true)), k)
-      .select(col("src"), col("dst"), col("cos"))
-    val rev = graft.plans.TopKOps
-      .topKPerGroup(cand, Seq("dst"), Seq(("cos", false), ("src", true)), k)
-      .select(col("dst").as("src"), col("src").as("dst"), col("cos"))
-    // a pair retained in both directions appears twice: set-dedupe the
-    // tiny union before the final cut so duplicates can't eat top-k slots.
-    // localCheckpoint materializes the O(V·k) merge so the candidate
-    // cache can be released HERE rather than leaked to the caller.
-    val merged = fwd.union(rev).distinct().localCheckpoint()
-    cand.unpersist()
+    // holds O(survivors), not O(candidates).
+    val merged = Materialize.releasing(
+      corpus.join(probes, "cell") // probed cells distinct: no dupes
+        .filter(col("vec_id") =!= col("src"))
+        .select(col("src"), col("vec_id").as("dst"),
+          round(graft.plans.VectorFunctions.vectorDot(col("v"), col("sv"))
+            / (col("nrm") * col("snrm")), 6).as("cos"))
+        .filter(col("cos") >= 0.3)
+        .persist()) { cand =>
+      // SYMMETRIZED candidates: cosine is symmetric, so every forward
+      // candidate (a,b) is also evidence for b's neighbor list — free
+      // recall at zero extra probing (0.81 -> 0.93 at sf0.1, the audit's
+      // numbers). The merge stays O(V·k) on the wire via the monotone
+      // top-k law  top-k(A ∪ B) = top-k(top-k(A) ∪ top-k(B)):  the native
+      // operator reduces the candidate stream per-src AND per-dst (two
+      // bounded-heap passes over the map-side stream, never a shuffle of
+      // the candidates themselves), and only the two k-sized graphs are
+      // unioned, deduped, and re-cut — all O(V·k) frames.
+      val fwd = graft.plans.TopKOps
+        .topKPerGroup(cand, Seq("src"), Seq(("cos", false), ("dst", true)), k)
+        .select(col("src"), col("dst"), col("cos"))
+      val rev = graft.plans.TopKOps
+        .topKPerGroup(cand, Seq("dst"), Seq(("cos", false), ("src", true)), k)
+        .select(col("dst").as("src"), col("src").as("dst"), col("cos"))
+      // a pair retained in both directions appears twice: set-dedupe the
+      // tiny union before the final cut so duplicates can't eat top-k slots.
+      // localCheckpoint materializes the O(V·k) merge, so the cut below
+      // never reads the released candidate cache.
+      fwd.union(rev).distinct().localCheckpoint()
+    }
     graft.plans.TopKOps
       .topKPerGroup(merged, Seq("src"), Seq(("cos", false), ("dst", true)), k)
       .orderBy(asc("src"), desc("cos"), asc("dst"))
@@ -781,7 +784,6 @@ object SimOps {
       embeddings: DataFrame, sfDir: String,
       k: Int = 3, nprobe: Int = 8): KnnIncIndex = {
     graft.plans.VectorFunctions.register(spark)
-    import graft.sources.EtlOps.freshDir
     import org.apache.spark.sql.SaveMode
     // RECENCY split — the append-only ingest shape (new vectors arrive
     // with the highest ids): delta = the top 10% of vec_ids. Also a
@@ -799,10 +801,10 @@ object SimOps {
     val eqC = corpusEmb
       .select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
     val cents = kmeansCentroids(eqC, k = adaptiveCells(cutoff), rounds = 2)
-    val graphDir = freshDir(sfDir, "knn_inc_graph").toString
-    val asnDir = freshDir(sfDir, "knn_inc_asn").toString
-    val probesDir = freshDir(sfDir, "knn_inc_probes").toString
-    val centsDir = freshDir(sfDir, "knn_inc_cents").toString
+    val graphDir = scratchDir(sfDir, "knn_inc_graph").toString
+    val asnDir = scratchDir(sfDir, "knn_inc_asn").toString
+    val probesDir = scratchDir(sfDir, "knn_inc_probes").toString
+    val centsDir = scratchDir(sfDir, "knn_inc_cents").toString
     // the four artifacts are INDEPENDENT writes off the same frozen
     // codebook — overlap them (guide §2.6: actions are only sequential
     // because the driver calls them sequentially): the three small
@@ -965,14 +967,13 @@ object SimOps {
       embeddings: DataFrame, sfDir: String,
       k: Int = 3, nprobe: Int = 8): (String, String) = {
     graft.plans.VectorFunctions.register(spark)
-    import graft.sources.EtlOps.freshDir
     import org.apache.spark.sql.SaveMode
     val vAll = embeddings.count()
     val cutoff = (vAll * 9L) / 10L
     val eqAll = embeddings
       .select(col("vec_id"), quantize1000(toVec(col("embedding"))).as("xq"))
-    val staleDir = freshDir(sfDir, "knn_refresh_stale").toString
-    val freshDirP = freshDir(sfDir, "knn_refresh_fresh").toString
+    val staleDir = scratchDir(sfDir, "knn_refresh_stale").toString
+    val freshDirP = scratchDir(sfDir, "knn_refresh_fresh").toString
     // the stale rebuild (frozen corpus-trained codebook over corpus +
     // delta — exactly what incremental maintenance converges to) and the
     // fresh retrain are INDEPENDENT train+build+write chains over the
@@ -1625,7 +1626,7 @@ object SimOps {
     val embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val e = embeddings.select(col("vec_id"), toVec(col("embedding")).as("v"))
     val cents = learnedCells(embeddings)
-    val dir = graft.sources.EtlOps.freshDir(sfDir, "ann_index").toString
+    val dir = scratchDir(sfDir, "ann_index").toString
     nearestCells(e, "vec_id", "v", cents)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(dir)
@@ -1658,8 +1659,8 @@ object SimOps {
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val schema = all.schema
     val cents = firstCells(all.select(col("vec_id"), toVec(col("embedding")).as("v")))
-    val store = graft.sources.EtlOps.freshDir(sfDir, "ann_ingest_store").toString
-    val srcDir = graft.sources.EtlOps.freshDir(sfDir, "ann_ingest_src")
+    val store = scratchDir(sfDir, "ann_ingest_store").toString
+    val srcDir = scratchDir(sfDir, "ann_ingest_src")
     graft.streaming.StreamOps.stageSlices(
       all, pmod(col("vec_id"), lit(2)).cast("int"), 2,
       sfDir, "ann_ingest", srcDir, prefix = "load")
@@ -1715,18 +1716,18 @@ object SimOps {
     val e = all.select(col("vec_id"), toVec(col("embedding")).as("v"))
     val cents = firstCells(e)
     // the stored index: frozen-codebook assignment, cell-partitioned
-    val store = graft.sources.EtlOps.freshDir(sfDir, "ann_search_store").toString
+    val store = scratchDir(sfDir, "ann_search_store").toString
     nearestCells(e, "vec_id", "v", cents)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .partitionBy("cell").parquet(store)
     val index = spark.read.parquet(store)
     // the query backlog: vec_ids 0..7, staged as two parity files
-    val srcDir = graft.sources.EtlOps.freshDir(sfDir, "ann_search_src")
+    val srcDir = scratchDir(sfDir, "ann_search_src")
     graft.streaming.StreamOps.stageSlices(
       all.filter(col("vec_id") < 8),
       pmod(col("vec_id"), lit(2)).cast("int"), 2,
       sfDir, "ann_search", srcDir, prefix = "queries")
-    val results = graft.sources.EtlOps.freshDir(sfDir, "ann_search_out").toString
+    val results = scratchDir(sfDir, "ann_search_out").toString
     val run = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir.toString)
       .writeStream
@@ -2521,7 +2522,6 @@ object SimOps {
     */
   def sinkPcaLayout(spark: org.apache.spark.sql.SparkSession,
       embeddings: DataFrame, sfDir: String): DataFrame = {
-    import graft.sources.EtlOps.freshDir
     val (_, vf, eq) = pcaComponent(embeddings)
     graft.plans.VectorFunctions.register(spark)
     val varr = vf.groupBy()
@@ -2533,7 +2533,7 @@ object SimOps {
           col("xq").cast("array<double>"), col("vv")).cast("long").as("score_u"))
     val b = scored.agg(min(col("score_u")), max(col("score_u"))).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val dir = freshDir(sfDir, "pca_layout").toString
+    val dir = scratchDir(sfDir, "pca_layout").toString
     scored
       .withColumn("band",
         expr(s"CAST(least((score_u - (${lo}L)) * 10 DIV (${hi}L - ${lo}L + 1), 9) AS INT)"))

@@ -41,10 +41,6 @@ private[graft] object StoredLayout {
     val wh = spark.conf.get("spark.sql.warehouse.dir")
     val loc = java.nio.file.Paths.get(
       new java.net.URI(wh).getPath match { case "" => wh; case p => p }, name)
-    if (java.nio.file.Files.exists(loc)) {
-      java.nio.file.Files.walk(loc)
-        .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-    }
+    graft.Materialize.deleteTree(loc)
   }
 }

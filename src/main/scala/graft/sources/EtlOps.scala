@@ -1,11 +1,13 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
+import java.nio.file.Files
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Materialize
+import graft.Materialize.scratchDir
 
 /** ETL source/sink surface — SURVEY.md §2.1, the reference's own core job:
   * extract JSON from a paginated API, normalize, append into a raw
@@ -39,28 +41,13 @@ object EtlOps {
     def run(spark: SparkSession): Unit = sink(transform(source(spark)))
   }
 
-  /** Scratch dir for a given scale factor — recreated per call so query
-    * results are deterministic run-over-run.
-    */
-  private[graft] def freshDir(sfDir: String, tag: String): Path = {
-    val p = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_etl",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), tag)
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-    Files.createDirectories(p)
-    p
-  }
-
   /** Schema-on-read JSON scan (README.md:21): round-trip the nation dim
     * through JSON lines and read it back with inference. JSON numbers
     * infer as BIGINT — the typed-cast stage after a JSON scan is exactly
     * the reference's "clean or reformat" step.
     */
   def scanJson(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "json_src").toString
+    val dir = scratchDir(sfDir, "json_src").toString
     spark.read.parquet(s"$sfDir/nation.parquet")
       .write.mode(SaveMode.Overwrite).json(dir)
     spark.read.json(dir)
@@ -76,7 +63,7 @@ object EtlOps {
     * at 100 TB always pass the schema).
     */
   def scanCsv(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "csv_src").toString
+    val dir = scratchDir(sfDir, "csv_src").toString
     spark.read.parquet(s"$sfDir/region.parquet")
       .write.mode(SaveMode.Overwrite).option("header", "true").csv(dir)
     spark.read
@@ -95,7 +82,7 @@ object EtlOps {
     * red. Oracle = the same census on the source table.
     */
   def sinkJsonl(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "docs_jsonl").toString
+    val dir = scratchDir(sfDir, "docs_jsonl").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .write.mode(SaveMode.Overwrite).json(dir)
     spark.read
@@ -120,7 +107,7 @@ object EtlOps {
     * original table: discovery must be complete AND exact.
     */
   def scanGlob(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "glob_src")
+    val dir = scratchDir(sfDir, "glob_src")
     val region = spark.read.parquet(s"$sfDir/region.parquet")
     region.filter(col("r_regionkey") % 2 === 0)
       .write.mode(SaveMode.Overwrite).parquet(s"$dir/even/load")
@@ -145,11 +132,11 @@ object EtlOps {
     * function of its key.
     */
   def scanFileMetadata(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "events_files")
+    val dir = scratchDir(sfDir, "events_files")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("user_id"))
     for (half <- 0 to 1) {
-      val tmp = freshDir(sfDir, s"events_files_stage$half")
+      val tmp = scratchDir(sfDir, s"events_files_stage$half")
       events.filter(col("event_id") % 2 === half)
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
@@ -180,7 +167,7 @@ object EtlOps {
     * split by line, so parallelism follows file/block layout.
     */
   def scanText(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "text_src").toString
+    val dir = scratchDir(sfDir, "text_src").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(concat(col("doc_id").cast("string"), lit("\t"), col("text")))
       .write.mode(SaveMode.Overwrite).text(dir)
@@ -269,7 +256,7 @@ object EtlOps {
     * original parquet, so the round-trip must be lossless.
     */
   def scanOrc(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orc_src").toString
+    val dir = scratchDir(sfDir, "orc_src").toString
     spark.read.parquet(s"$sfDir/supplier.parquet")
       .write.mode(SaveMode.Overwrite).orc(dir)
     spark.read.orc(dir)
@@ -289,7 +276,7 @@ object EtlOps {
     * 100 TB schema-on-read means DECLARED schema, inferred only in dev.
     */
   def scanXml(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "xml_src").toString
+    val dir = scratchDir(sfDir, "xml_src").toString
     spark.read.parquet(s"$sfDir/supplier.parquet")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"),
         round(col("s_acctbal") * 100).cast("bigint").as("bal_cents"))
@@ -322,7 +309,7 @@ object EtlOps {
     * other entry silently inherits tolerance).
     */
   def scanCorruptFilesSkip(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_corruptmix")
+    val dir = scratchDir(sfDir, "orders_corruptmix")
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
       .repartition(4)
@@ -351,7 +338,7 @@ object EtlOps {
     * prove the delimiter really is the pair.
     */
   def scanCsvMultidelim(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "csv_multidelim").toString
+    val dir = scratchDir(sfDir, "csv_multidelim").toString
     spark.read.parquet(s"$sfDir/nation.parquet")
       .select(col("n_nationkey"),
         concat(lit("a|"), col("n_name")).as("piped"), // single pipe inside
@@ -366,7 +353,7 @@ object EtlOps {
   }
 
   def scanCsvQuoted(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "csv_quoted").toString
+    val dir = scratchDir(sfDir, "csv_quoted").toString
     spark.read.parquet(s"$sfDir/nation.parquet")
       .select(col("n_nationkey"),
         concat(col("n_name"), lit(",\"\n"), col("n_name")).as("tricky"))
@@ -391,7 +378,7 @@ object EtlOps {
     * task granularity is what makes blob ingest embarrassingly parallel.
     */
   def scanBinary(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "bin_src").toString
+    val dir = scratchDir(sfDir, "bin_src").toString
     spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text").as("value"))
       .write.mode(SaveMode.Overwrite).partitionBy("doc_id").text(dir)
@@ -417,7 +404,7 @@ object EtlOps {
     * loses the evidence.
     */
   def scanJsonCorrupt(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "json_corrupt").toString
+    val dir = scratchDir(sfDir, "json_corrupt").toString
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     // every 5th record is an error body, not JSON (deterministic, so the
     // quarantine split is oracle-checkable)
@@ -450,7 +437,7 @@ object EtlOps {
     * FAILFAST loses the batch, DROPMALFORMED loses the evidence.
     */
   def scanCsvMalformed(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "csv_malformed").toString
+    val dir = scratchDir(sfDir, "csv_malformed").toString
     val nation = spark.read.parquet(s"$sfDir/nation.parquet")
     nation.select(
       when(col("n_nationkey") % 5 === 0,
@@ -552,7 +539,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages_ratelimit")
+    val pagesDir = scratchDir(sfDir, "api_pages_ratelimit")
     val nPages = 5
     events
       .withColumn("page", pmod(col("event_id"), lit(nPages)))
@@ -587,7 +574,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages_retry")
+    val pagesDir = scratchDir(sfDir, "api_pages_retry")
     val nPages = 5
     val flakyPage = 2      // one-shot 503: succeeds on attempt 2
     val throttledPage = 4  // 429 rate limit: clears on attempt 3
@@ -642,7 +629,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages_breaker")
+    val pagesDir = scratchDir(sfDir, "api_pages_breaker")
     val nPages = 5
     events
       .withColumn("page", pmod(col("event_id"), lit(nPages)))
@@ -698,7 +685,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages")
+    val pagesDir = scratchDir(sfDir, "api_pages")
     val nPages = 5
     events
       .withColumn("page", pmod(col("event_id"), lit(nPages)))
@@ -729,7 +716,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages_v2")
+    val pagesDir = scratchDir(sfDir, "api_pages_v2")
     val nPages = 5
     events
       .withColumn("page", pmod(col("event_id"), lit(nPages)))
@@ -772,7 +759,7 @@ object EtlOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
-    val pagesDir = freshDir(sfDir, "api_pages_auth")
+    val pagesDir = scratchDir(sfDir, "api_pages_auth")
     val nPages = 5
     events
       .withColumn("page", pmod(col("event_id"), lit(nPages)))
@@ -782,7 +769,7 @@ object EtlOps {
     // secret into a dotenv file; deterministic per sfDir so the entry is
     // reproducible run-over-run.
     val secret = "graft-" + java.lang.Integer.toHexString(sfDir.hashCode) + "-token"
-    val envFile = freshDir(sfDir, "api_auth_env").resolve("auth.env")
+    val envFile = scratchDir(sfDir, "api_auth_env").resolve("auth.env")
     Files.writeString(envFile,
       s"# provisioned by the deployment, never committed\nGRAFT_API_TOKEN=$secret\n")
 
@@ -909,7 +896,7 @@ object EtlOps {
     val nPages = configValue(spark, "pages.count", "5").toInt
     require(nPages > 0, s"configured page count must be positive, got $nPages")
     val pagesDir = configValue(spark, "pages.dir",
-      freshDir(sfDir, "api_pages_env").toString)
+      scratchDir(sfDir, "api_pages_env").toString)
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
     events
@@ -935,7 +922,7 @@ object EtlOps {
     * deterministic load_id carries the append semantics into the hash.
     */
   def sinkRawAppend(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = freshDir(sfDir, "orders_raw").toString
+    val raw = scratchDir(sfDir, "orders_raw").toString
     val batch = spark.read.parquet(s"$sfDir/orders.parquet")
       .filter(col("o_orderkey") % 10 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -974,7 +961,7 @@ object EtlOps {
     */
   def sinkPartitioned(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = freshDir(sfDir, "events_by_day").toString
+    val raw = scratchDir(sfDir, "events_by_day").toString
     spark.read.parquet(s"$sfDir/events.parquet")
       .transform(graft.Tables.normalizeTs)
       .withColumn("event_date", col("ts").cast("date"))
@@ -1002,7 +989,7 @@ object EtlOps {
     */
   def sinkZorder(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = freshDir(sfDir, "events_zorder").toString
+    val dir = scratchDir(sfDir, "events_zorder").toString
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"), col("value"))
     events.withColumn("z", zorder16(col("user_id"), col("value")))
@@ -1042,7 +1029,7 @@ object EtlOps {
     * data is immutable.
     */
   def scanMergeSchema(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_evolving").toString
+    val dir = scratchDir(sfDir, "orders_evolving").toString
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     orders.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
@@ -1066,7 +1053,7 @@ object EtlOps {
     */
   def sinkIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-    val sink = freshDir(sfDir, "orders_incr").toString
+    val sink = scratchDir(sfDir, "orders_incr").toString
     orders.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_totalprice"))
       .write.mode(SaveMode.Append).parquet(sink)
@@ -1093,7 +1080,7 @@ object EtlOps {
     * and the kept loads are byte-complete.
     */
   def sinkRetention(spark: SparkSession, sfDir: String): DataFrame = {
-    val dirP = freshDir(sfDir, "orders_retain")
+    val dirP = scratchDir(sfDir, "orders_retain")
     val dir = dirP.toString
     val orders = spark.read.parquet(s"$sfDir/orders.parquet")
     for (l <- 1 to 3)
@@ -1101,10 +1088,7 @@ object EtlOps {
         .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"))
         .withColumn("load_id", lit(l))
         .write.mode(SaveMode.Append).partitionBy("load_id").parquet(dir)
-    val doomed = dirP.resolve("load_id=1")
-    if (Files.exists(doomed))
-      Files.walk(doomed).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
+    Materialize.deleteTree(dirP.resolve("load_id=1"))
     spark.read.parquet(dir)
       .groupBy(col("load_id").cast("int").as("load_id"))
       .agg(count(lit(1)).as("n"),
@@ -1132,7 +1116,7 @@ object EtlOps {
 
     val cents = round(col("value") * 100).cast("long")
     val cutoff = lit("2024-01-21")
-    val state = freshDir(sfDir, "agg_state").toString
+    val state = scratchDir(sfDir, "agg_state").toString
     events.filter(to_date(col("ts")) < cutoff)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), sum(cents).as("sum_cents"))
@@ -1170,7 +1154,7 @@ object EtlOps {
     * artifact — written per-shard, fully distributed.
     */
   def scanParquetBloom(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_bloom").toString
+    val dir = scratchDir(sfDir, "orders_bloom").toString
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       .repartition(4)
@@ -1205,7 +1189,7 @@ object EtlOps {
     * design; data files stay fully distributed.
     */
   def sinkManifestCommit(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_manifested")
+    val dir = scratchDir(sfDir, "orders_manifested")
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
       .repartition(4)
@@ -1216,7 +1200,7 @@ object EtlOps {
     Files.write(dir.resolve("_manifest.json"),
       dataFiles.mkString("\n").getBytes("UTF-8"))
     // crashed-writer debris arriving after the commit — must stay invisible
-    val orphanTmp = freshDir(sfDir, "orders_orphan")
+    val orphanTmp = scratchDir(sfDir, "orders_orphan")
     spark.range(5)
       .select(col("id").as("o_orderkey"), lit(9.99).as("o_totalprice"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(orphanTmp.toString)
@@ -1248,7 +1232,7 @@ object EtlOps {
     * are metadata-sized and driver-side by design.
     */
   def sinkVacuum(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_vacuum")
+    val dir = scratchDir(sfDir, "orders_vacuum")
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
       .repartition(4)
@@ -1258,7 +1242,7 @@ object EtlOps {
     Files.write(dir.resolve("_manifest.json"),
       dataFiles.mkString("\n").getBytes("UTF-8"))
     // two debris files from failed/superseded writers
-    val orphanTmp = freshDir(sfDir, "orders_vacuum_orphan")
+    val orphanTmp = scratchDir(sfDir, "orders_vacuum_orphan")
     spark.range(7)
       .select(col("id").as("o_orderkey"), lit(1.23).as("o_totalprice"))
       .coalesce(1).write.mode(SaveMode.Overwrite).parquet(orphanTmp.toString)
@@ -1285,12 +1269,12 @@ object EtlOps {
   }
 
   def sinkCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val frag = freshDir(sfDir, "orders_frag").toString
+    val frag = scratchDir(sfDir, "orders_frag").toString
     spark.read.parquet(s"$sfDir/orders.parquet")
       .select(col("o_orderkey"), col("o_totalprice"))
       .repartition(64)
       .write.mode(SaveMode.Overwrite).parquet(frag)
-    val compact = freshDir(sfDir, "orders_compact").toString
+    val compact = scratchDir(sfDir, "orders_compact").toString
     spark.read.parquet(frag)
       .repartition(4)
       .write.mode(SaveMode.Overwrite).parquet(compact)
@@ -1325,7 +1309,7 @@ object EtlOps {
     * upsert shuffles once on it.
     */
   def sinkDocShape(spark: SparkSession, sfDir: String): DataFrame = {
-    val dir = freshDir(sfDir, "orders_docs").toString
+    val dir = scratchDir(sfDir, "orders_docs").toString
     val docs = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(
         concat(lit("order-"), col("o_orderkey").cast("string")).as("_id"),
@@ -1365,7 +1349,7 @@ object EtlOps {
       .withColumn("is_current", col("valid_to").isNull)
       .select(col("o_orderkey"), round(col("o_totalprice"), 2).as("price"),
         col("valid_from"), col("valid_to"), col("is_current"))
-    val dir = freshDir(sfDir, "orders_scd2").toString
+    val dir = scratchDir(sfDir, "orders_scd2").toString
     hist.write.mode(SaveMode.Overwrite).parquet(dir)
     spark.read.parquet(dir).orderBy("o_orderkey", "valid_from")
   }
@@ -1678,7 +1662,7 @@ object EtlOps {
       .select(col("o_orderkey"), col("o_totalprice"), col("load_id"))
     // materialize through the sink and read back — the audit view is of
     // the STORED table, not the in-flight frame
-    val dir = freshDir(sfDir, "orders_upserted").toString
+    val dir = scratchDir(sfDir, "orders_upserted").toString
     upserted.write.mode(SaveMode.Overwrite).parquet(dir)
     spark.read.parquet(dir).orderBy("o_orderkey")
   }
@@ -1707,8 +1691,8 @@ object EtlOps {
       .head()
     val (lo, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0) + 1)
     val qtrExpr = expr(s"CAST(((event_id - ${lo}L) * 4) DIV ${span}L AS INT)")
-    val clean = freshDir(sfDir, "gate_clean").toString
-    val quarantine = freshDir(sfDir, "gate_quarantine").toString
+    val clean = scratchDir(sfDir, "gate_clean").toString
+    val quarantine = scratchDir(sfDir, "gate_quarantine").toString
     for (i <- 0 until 4) {
       val arrived = events.filter(qtrExpr === i)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))

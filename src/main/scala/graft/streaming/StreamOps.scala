@@ -1,12 +1,14 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import java.util.Comparator
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+
+import graft.Materialize
+import graft.Materialize.scratchDir
 
 /** Structured Streaming surface — SURVEY.md §2.9. The reference is
   * batch-per-run, but its semantics — append-only raw collections,
@@ -41,7 +43,7 @@ object StreamOps {
     // The file stream source wants a DIRECTORY of arriving files; the
     // testdata table is a single file — stage a copy into scratch (in
     // production the raw dir IS the arrival directory).
-    val dir = scratch(sfDir, "events_stream_src")
+    val dir = scratchDir(sfDir, "events_stream_src")
     Files.copy(Paths.get(src), dir.resolve("events-0.parquet"))
     val schema = spark.read.parquet(src).schema
     spark.readStream.schema(schema).parquet(dir.toString)
@@ -79,7 +81,7 @@ object StreamOps {
       sliceCol: org.apache.spark.sql.Column, n: Int,
       sfDir: String, tag: String, srcDir: Path,
       prefix: String = "quarter"): Unit = {
-    val tmp = scratch(sfDir, s"${tag}_stageall")
+    val tmp = scratchDir(sfDir, s"${tag}_stageall")
     df.withColumn("__q", sliceCol)
       .repartition(col("__q"))
       .write.partitionBy("__q").mode(SaveMode.Overwrite).parquet(tmp.toString)
@@ -241,7 +243,7 @@ object StreamOps {
   def streamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$sfDir/events.parquet"
-    val doubled = scratch(sfDir, "stream_dedup_src")
+    val doubled = scratchDir(sfDir, "stream_dedup_src")
     val once = spark.read.parquet(src)
     once.write.mode(SaveMode.Overwrite).parquet(doubled.toString)
     once.write.mode(SaveMode.Append).parquet(doubled.toString)
@@ -347,7 +349,7 @@ object StreamOps {
     val cap = graft.operators.LlmOps.LshMaxBucket
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
-    val srcDir = scratch(sfDir, "stream_dedup_near_src")
+    val srcDir = scratchDir(sfDir, "stream_dedup_near_src")
     val nDocs = docs.count()
     // id-contiguous VALUE-RANGE quarters off one (min, max) scalar pull
     // — no corpus-wide row_number (r11 verdict tidy): the arrival-order
@@ -732,7 +734,7 @@ object StreamOps {
   def streamThrottled(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$sfDir/events.parquet"
-    val dir = scratch(sfDir, "events_throttle_src")
+    val dir = scratchDir(sfDir, "events_throttle_src")
     // stage the backlog as 4 files (4 "polls" worth of arrivals)
     spark.read.parquet(src)
       .withColumn("part", pmod(col("event_id"), lit(4)))
@@ -839,7 +841,7 @@ object StreamOps {
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val src = s"$sfDir/events.parquet"
-    val dir = scratch(sfDir, "events_typecount_src")
+    val dir = scratchDir(sfDir, "events_typecount_src")
     spark.read.parquet(src)
       .withColumn("part", pmod(col("event_id"), lit(4)))
       .repartition(4, col("part")).drop("part")
@@ -889,7 +891,7 @@ object StreamOps {
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val src = s"$sfDir/events.parquet"
-    val dir = scratch(sfDir, "events_recent_src")
+    val dir = scratchDir(sfDir, "events_recent_src")
     spark.read.parquet(src)
       .withColumn("part", pmod(col("event_id"), lit(4)))
       .repartition(4, col("part")).drop("part")
@@ -992,7 +994,7 @@ object StreamOps {
     * stamped, per-type counts lossless.
     */
   def streamSink(spark: SparkSession, sfDir: String): DataFrame = {
-    val raw = scratch(sfDir, "stream_raw").toString
+    val raw = scratchDir(sfDir, "stream_raw").toString
     val q = eventsStream(spark, sfDir)
       .select(col("event_id"), col("event_type"))
       .writeStream
@@ -1028,8 +1030,8 @@ object StreamOps {
     import org.apache.spark.sql.expressions.Window
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$sfDir/events.parquet"
-    val srcDir = scratch(sfDir, "events_upsert_src")
-    val store = scratch(sfDir, "events_upsert_store")
+    val srcDir = scratchDir(sfDir, "events_upsert_src")
+    val store = scratchDir(sfDir, "events_upsert_store")
     val curDir = store.resolve("cur")
     val events = spark.read.parquet(src)
     val schema = events.schema
@@ -1054,10 +1056,7 @@ object StreamOps {
           else incoming
         val nextDir = store.resolve("next")
         merged.write.mode(SaveMode.Overwrite).parquet(nextDir.toString)
-        if (Files.exists(curDir)) {
-          Files.walk(curDir).sorted(Comparator.reverseOrder[Path]())
-            .forEach(f => Files.delete(f))
-        }
+        Materialize.deleteTree(curDir)
         Files.move(nextDir, curDir)
         ()
       }
@@ -1104,7 +1103,7 @@ object StreamOps {
           user_id BIGINT, value DOUBLE, ts_us BIGINT, event_id BIGINT,
           op STRING)""")
     val src = s"$sfDir/events.parquet"
-    val srcDir = scratch(sfDir, "events_merge_src")
+    val srcDir = scratchDir(sfDir, "events_merge_src")
     val events = spark.read.parquet(src)
     val schema = events.schema
     stageSlices(events, pmod(col("event_id"), lit(2)).cast("int"), 2,
@@ -1168,14 +1167,14 @@ object StreamOps {
       extraRuns: Int = 0): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = s"$sfDir/events.parquet"
-    val srcDir = scratch(sfDir, "events_recovery_src")
-    val outDir = scratch(sfDir, "events_recovery_out").toString
-    val ckpt = scratch(sfDir, "events_recovery_ckpt").toString
+    val srcDir = scratchDir(sfDir, "events_recovery_src")
+    val outDir = scratchDir(sfDir, "events_recovery_out").toString
+    val ckpt = scratchDir(sfDir, "events_recovery_ckpt").toString
     val events = spark.read.parquet(src)
     val schema = events.schema
     // stage each half as ONE arriving file in the monitored directory
     def arrive(half: Int): Unit = {
-      val tmp = scratch(sfDir, s"events_recovery_stage$half")
+      val tmp = scratchDir(sfDir, s"events_recovery_stage$half")
       events.filter(pmod(col("event_id"), lit(2)) === half)
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
       val part = listDir(tmp).find(_.toString.endsWith(".parquet")).get
@@ -1228,8 +1227,8 @@ object StreamOps {
     val events = spark.read.parquet(s"$sfDir/events.parquet")
       .select(col("event_id"), col("event_type"), col("user_id"))
     val schema = events.schema
-    val srcDir = scratch(sfDir, "state_inspect_src")
-    val ckpt = scratch(sfDir, "state_inspect_ckpt").toString
+    val srcDir = scratchDir(sfDir, "state_inspect_src")
+    val ckpt = scratchDir(sfDir, "state_inspect_ckpt").toString
     stageSlices(events, pmod(col("event_id"), lit(2)).cast("int"), 2,
       sfDir, "state_inspect", srcDir, prefix = "load")
     // r15: this entry predated the r8 shard rule and ran its stateful
@@ -1256,9 +1255,6 @@ object StreamOps {
       .orderBy("event_type")
   }
 
-  /** Fresh scratch dir (mirrors EtlOps.freshDir; local to keep packages
-    * independent).
-    */
   /** Streaming validation: the quality-expectation suite maintained
     * INCREMENTALLY as data arrives — per arriving slice (value-range
     * quarters of event_id, the c929070 closed-form split), counters for
@@ -1276,7 +1272,7 @@ object StreamOps {
   def streamQuality(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = spark.read.parquet(s"$sfDir/events.parquet")
-    val srcDir = scratch(sfDir, "stream_quality_src")
+    val srcDir = scratchDir(sfDir, "stream_quality_src")
     val mm = src.agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
       .head()
     val (lo, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0) + 1)
@@ -1366,7 +1362,7 @@ object StreamOps {
       spark: SparkSession, sfDir: String, tag: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = spark.read.parquet(s"$sfDir/events.parquet")
-    val srcDir = scratch(sfDir, s"${tag}_src")
+    val srcDir = scratchDir(sfDir, s"${tag}_src")
     val mm = src.agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
       .head()
     val (lo, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0) + 1)
@@ -1614,7 +1610,7 @@ object StreamOps {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val norm = spark.read.parquet(s"$sfDir/events.parquet")
       .transform(graft.Tables.normalizeTs)
-    val srcDir = scratch(sfDir, s"${tag}_src")
+    val srcDir = scratchDir(sfDir, s"${tag}_src")
     val mm = norm.agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
       .head()
     val (lo, span) = (mm.getLong(0), mm.getLong(1) - mm.getLong(0) + 1)
@@ -1649,7 +1645,7 @@ object StreamOps {
         when(qtrExpr === q, lit(k)).otherwise(acc) }
     stageSlices(norm, arrivalIdx, 4, sfDir, tag, srcDir, prefix = "arrival")
     // watermark-flush sentinel: max-ts row pushed past max + 2×delay
-    val tmpS = scratch(sfDir, s"${tag}_sentinel")
+    val tmpS = scratchDir(sfDir, s"${tag}_sentinel")
     norm.orderBy(col("ts").desc).limit(1)
       .withColumn("ts",
         col("ts") + expr(s"INTERVAL ${2L * delayMs / 1000L + 120L} SECONDS"))
@@ -1777,17 +1773,5 @@ object StreamOps {
       withStateShards(spark, 4) {
         drain(pairs.toDF(), "graft_stream_transitions_ooo", "append")
       }.localCheckpoint())
-  }
-
-  private def scratch(sfDir: String, tag: String): Path = {
-    val p = Paths.get(
-      sys.props("java.io.tmpdir"), "graft_stream",
-      sfDir.replaceAll("[^a-zA-Z0-9]", "_"), tag)
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-    }
-    Files.createDirectories(p)
-    p
   }
 }

@@ -42,14 +42,34 @@ class ContractSpec extends SparkTestBase {
   }
 
   test("every query runs at sf0.001 with a non-empty schema") {
+    // the query sql_cache_table returns scans its own CACHE TABLE by design
+    val holdsCache = Set("sql_cache_table")
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try {
+        spark.catalog.clearCache()
         val df = fn(spark, sf0001)
         assert(df.schema.nonEmpty, s"$name: empty schema")
         df.count() // forces full execution
+        assert(holdsCache(name) || spark.sharedState.cacheManager.isEmpty,
+          s"$name: leaves a cached frame behind")
         None
       } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("cache releases, tree walks and the temp root appear only in Materialize") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/Materialize.scala")
+    val sources = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    assert(sources.contains(owner), s"no $owner among ${sources.size} sources")
+    val strays = for {
+      f <- sources if f != owner
+      text = java.nio.file.Files.readString(f)
+      needle <- Seq(".unpersist(", "Files.walk(", "java.io.tmpdir") if text.contains(needle)
+    } yield s"$f: $needle"
+    assert(strays.isEmpty, strays.mkString("\n"))
   }
 }

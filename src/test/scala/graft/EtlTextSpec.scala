@@ -559,11 +559,9 @@ class EtlTextSpec extends SparkTestBase {
     assert(row.getBoolean(3), "compacted flag false: output file count above target")
     val expected = spark.read.parquet(s"$sf0001/orders.parquet").count()
     assert(row.getLong(0) === expected, "compaction lost or duplicated rows")
-    def parquetFiles(tag: String): Int = {
-      val key = sf0001.replaceAll("[^a-zA-Z0-9]", "_")
-      val dir = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_etl/$key/$tag")
-      Option(dir.listFiles()).getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
-    }
+    def parquetFiles(tag: String): Int =
+      Option(Materialize.scratchPath(sf0001, tag).toFile.listFiles())
+        .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
     assert(parquetFiles("orders_frag") > 16, "fragmented input not actually fragmented")
     assert(parquetFiles("orders_compact") <= 4)
   }

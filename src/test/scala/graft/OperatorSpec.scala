@@ -756,9 +756,7 @@ class OperatorSpec extends SparkTestBase {
     assert(r.getLong(0) === Tables.orders(spark, sf0001).count(),
       "tolerant read must see exactly the good shards")
     // same directory, default strictness: the bad footer must FAIL the job
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_etl",
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_"), "orders_corruptmix").toString
+    val dir = Materialize.scratchPath(sf0001, "orders_corruptmix").toString
     assert(spark.conf.get("spark.sql.files.ignoreCorruptFiles") === "false",
       "entry must restore the strict default")
     intercept[org.apache.spark.SparkException] {
@@ -768,9 +766,7 @@ class OperatorSpec extends SparkTestBase {
 
   test("scan_parquet_bloom: the bloom filter physically lands in the written footers") {
     SparkEntry.queries("scan_parquet_bloom")(spark, sf0001).collect()
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_etl",
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_"), "orders_bloom")
+    val dir = Materialize.scratchPath(sf0001, "orders_bloom")
     val part = java.nio.file.Files.list(dir).toArray.map(_.toString)
       .filter(_.endsWith(".parquet")).sorted.head
     val conf = new org.apache.hadoop.conf.Configuration()
@@ -1113,6 +1109,17 @@ class OperatorSpec extends SparkTestBase {
       Option(e.getCause).exists(_.toString.contains("edge 5 is broken")), e.toString)
     assert(spark.sharedState.cacheManager.isEmpty,
       "the biased walk's neighbor role is still cached after the loop threw")
+    // a graph build that throws: the adjacency is persisted before the
+    // count() that materializes it overflows doubling the customer id
+    // (an error raised in `orders` itself fires earlier, at the pair
+    // table's checkpoint, before anything is persisted)
+    val orders = Seq((1L, Long.MaxValue / 2 + 1)).toDF("o_orderkey", "o_custkey")
+    val lineitem = Seq((1L, 1L)).toDF("l_orderkey", "l_suppkey")
+    val b = intercept[Exception](GraphOps.graphBfs(orders, lineitem))
+    assert(b.toString.contains("ARITHMETIC_OVERFLOW") ||
+      Option(b.getCause).exists(_.toString.contains("ARITHMETIC_OVERFLOW")), b.toString)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the graph build's adjacency is still cached after its count threw")
   }
 
   test("graph_bfs_stored serves identical distance rings from the bucketed layout") {

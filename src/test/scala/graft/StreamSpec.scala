@@ -282,9 +282,7 @@ class StreamSpec extends SparkTestBase {
     assert(out.map(_._2).sum === total, "every streamed vector must land in a cell")
     assert(out.map(_._1).distinct.size === out.size, "one row per cell")
     // the store layout IS the index: cell=N directories on disk
-    val store = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_etl",
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_"), "ann_ingest_store")
+    val store = Materialize.scratchPath(sf0001, "ann_ingest_store")
     val dirs = java.nio.file.Files.list(store).iterator()
     val cellDirs = Iterator.continually(dirs)
       .takeWhile(_.hasNext).map(_.next().getFileName.toString)
@@ -346,9 +344,7 @@ class StreamSpec extends SparkTestBase {
     // the state data source can open ANY committed batch: batch 0 saw
     // only the first staged half — proof the inspection reads true
     // INTERMEDIATE state, not a replay of the input
-    val ckpt = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_stream",
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_"), "state_inspect_ckpt").toString
+    val ckpt = Materialize.scratchPath(sf0001, "state_inspect_ckpt").toString
     val b0 = spark.read.format("statestore").option("batchId", 0).load(ckpt)
       .select(col("key.event_type"), col("value.count"), col("value.sum"))
       .orderBy("event_type")
@@ -531,9 +527,7 @@ class StreamSpec extends SparkTestBase {
       spark, sf0001, "spec_ooo_probe")
     assert(delayMs > 60000L, "measured disorder should be nonzero")
     // the staging dir the helper just wrote (same layout as its scratch)
-    val dir = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), "graft_stream",
-      sf0001.replaceAll("[^a-zA-Z0-9]", "_"), "spec_ooo_probe_src").toFile
+    val dir = Materialize.scratchPath(sf0001, "spec_ooo_probe_src").toFile
     // the staged quarters are the non-sentinel arrivals (stageSlices
     // names them arrival-<k>.parquet since r14; the watermark-flush
     // sentinel is the only other file)
