@@ -4,7 +4,10 @@ import java.nio.file.{Files, Paths}
 
 /** Plan dump: `.explain("formatted")` of named queries → one text file per
   * query, for the optimization rounds' before/after plan artifacts
-  * (plans/rNN/<query>_{before,after}.txt). Usage:
+  * (plans/rNN/<query>_{before,after}.txt). The first line of each file is
+  * `jobs: N`, the Spark jobs the entry ran while its frame was built (the
+  * eager checkpoints of its loops), which the plan of the final frame
+  * does not show. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -29,9 +32,15 @@ object Explain {
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
         try {
-          val plan = fn(spark, sfDir).queryExecution.explainString(
+          val sc = spark.sparkContext
+          sc.setJobGroup(name, name)
+          val df = try fn(spark, sfDir) finally sc.clearJobGroup()
+          org.apache.spark.GraftBus.drain(sc)
+          val jobs = sc.statusTracker.getJobIdsForGroup(name).length
+          val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
+          Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
+            s"jobs: $jobs\n$plan")
           System.err.println(s"[explain] $name -> ${name}_$suffix.txt")
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")

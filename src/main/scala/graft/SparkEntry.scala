@@ -2707,8 +2707,6 @@ object SparkEntry {
                          JOIN s sb ON sb.doc_id = doc_ref)
          SELECT doc_new, doc_ref, round(jac, 6) AS jac FROM j
          WHERE round(jac, 6) >= 0.6 ORDER BY doc_new, doc_ref""",
-    // same pipeline, then 3 unrolled min-label propagation rounds — the
-    // exact mirror of LlmOps.dedupClusters' iteration
     // Exact fixpoint oracle: the Spark side iterates min-label
     // propagation to convergence, so the oracle computes the true
     // per-component minimum via recursive transitive closure (UNION

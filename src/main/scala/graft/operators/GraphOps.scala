@@ -30,9 +30,47 @@ import graft.Materialize
   */
 object GraphOps {
 
+  /** The undirected trade graph as a bidirectional (src, dst) edge frame.
+    * An undirected edge (both directions materialized) links a customer
+    * to every supplier whose parts they ordered; node ids are disjoint by
+    * parity (customers even, suppliers odd) so one long column carries
+    * both sides. localCheckpoint: the distinct pair table feeds BOTH
+    * direction branches of the union; left lazy, the orders⋈lineitem
+    * join + distinct (the build's widest shuffles) run once per branch.
+    */
+  private def tradeEdges(orders: DataFrame, lineitem: DataFrame): DataFrame = {
+    val pairs = orders
+      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
+      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+      .distinct()
+      .localCheckpoint()
+    pairs
+      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
+      .unionByName(pairs
+        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
+  }
+
+  /** The adjacency FRAME alone — shared by the in-query cache path
+    * (`buildGraph`) and the stored layout (`sinkGraphAdjacency`), which
+    * persists the same rows as a src-bucketed table instead.
+    */
+  private[graft] def adjacencyFrame(
+      orders: DataFrame, lineitem: DataFrame,
+      chunkSize: Int = 65536): DataFrame =
+    tradeEdges(orders, lineitem)
+      .groupBy(col("src"))
+      .agg(count(lit(1)).as("outdeg"), collect_list(col("dst")).as("all_dsts"))
+      .select(col("src"), col("outdeg"),
+        explode(transform(
+          sequence(lit(0L), floor((size(col("all_dsts")) - 1) / lit(chunkSize))),
+          i => slice(col("all_dsts"), (i * chunkSize + 1).cast("int"), lit(chunkSize)))).as("dsts"))
+
   /** Build the undirected trade graph once, as a per-src ADJACENCY table
     * — (src, outdeg, dsts: array<long>) — CACHED for superstep reuse
-    * (the GraphX layout: edge partitions stored as per-vertex adjacency).
+    * (the GraphX layout: edge partitions stored as per-vertex adjacency),
+    * plus its node set and node count. The caller releases the returned
+    * cache; the entries take it from `withGraph`.
+    *
     * Cache rather than checkpoint because InMemoryTableScan preserves
     * the HashPartitioning the partitioned regime's join co-locates on,
     * while a checkpoint scan reports unknown partitioning (measured).
@@ -41,14 +79,9 @@ object GraphOps {
     * fans back out to edges MAP-SIDE via explode — measured ~3× off the
     * whole 10-round loop at sf0.1 vs the flat cached edge list. The
     * groupBy(src)'s own shuffle IS the src pre-partitioning — one
-    * shuffle builds layout, degrees, and adjacency together. The caller
-    * releases the returned cache; the entries take it from `withGraph`.
-    *
-    * An undirected edge (both directions materialized) links a customer
-    * to every supplier whose parts they ordered; node ids are disjoint by
-    * parity (customers even, suppliers odd) so one long column carries
-    * both sides. Bidirectional edges mean every node has out-degree ≥ 1
-    * (no dangling-mass correction, rank mass conserved — the spec pins
+    * shuffle builds layout, degrees, and adjacency together.
+    * Bidirectional edges mean every node has out-degree ≥ 1 (no
+    * dangling-mass correction, rank mass conserved — the spec pins
     * sum(rank) = 1) and in-degree ≥ 1 (the contribution aggregate covers
     * every node — no per-round left join).
     *
@@ -64,34 +97,6 @@ object GraphOps {
     * keep exactly one row — the |V|-rows-per-round scan economy is
     * untouched.
     */
-  /** The adjacency FRAME alone — shared by the in-query cache path
-    * (`buildGraph`) and the stored layout (`sinkGraphAdjacency`), which
-    * persists the same rows as a src-bucketed table instead.
-    */
-  private[graft] def adjacencyFrame(
-      orders: DataFrame, lineitem: DataFrame,
-      chunkSize: Int = 65536): DataFrame = {
-    // localCheckpoint: the distinct pair table feeds BOTH direction
-    // branches of the undirected union; left lazy, the orders⋈lineitem
-    // join + distinct (the build's widest shuffles) run once per branch.
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-      .localCheckpoint()
-    val edges = pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
-    edges
-      .groupBy(col("src"))
-      .agg(count(lit(1)).as("outdeg"), collect_list(col("dst")).as("all_dsts"))
-      .select(col("src"), col("outdeg"),
-        explode(transform(
-          sequence(lit(0L), floor((size(col("all_dsts")) - 1) / lit(chunkSize))),
-          i => slice(col("all_dsts"), (i * chunkSize + 1).cast("int"), lit(chunkSize)))).as("dsts"))
-  }
-
   private[graft] def buildGraph(
       orders: DataFrame, lineitem: DataFrame,
       chunkSize: Int = 65536): (DataFrame, DataFrame, Long) = {
@@ -105,9 +110,9 @@ object GraphOps {
   private def nodesOf(adj: DataFrame): DataFrame =
     adj.select(col("src").as("id")).distinct()
 
-  /** Runs `body` over the cached in-query adjacency, its node set and the
-    * node count (whose `count()` materializes the cache), releasing the
-    * cache when `body` returns or throws.
+  /** `buildGraph` scoped to `body`: runs it over the cached adjacency,
+    * its node set and the node count (whose `count()` materializes the
+    * cache), releasing the cache when `body` returns or throws.
     */
   private def withGraph[T](orders: DataFrame, lineitem: DataFrame)(
       body: (DataFrame, DataFrame, Long) => T): T =
@@ -169,31 +174,31 @@ object GraphOps {
     // pagerank_conv drifting both ways. The saved job is cheaper than
     // whatever the lazy distinct costs the round-1/2 planning, so the
     // checkpoint stays.)
-    var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
-    for (r <- 1 to rounds) {
-      ranks = superstepPartitioned(adj, ranks, n, damping)
-      // checkpoint every SECOND superstep: each eager localCheckpoint is
-      // a job barrier with fixed cost, a 2-deep superstep lineage plans
-      // fine, and the lineage still truncates before it compounds (the
-      // per-round form this replaces was the r4 fix for UNBOUNDED
-      // lineage — the cadence keeps that property at half the barriers)
-      if (r % 2 == 0 || r == rounds) ranks = ranks.localCheckpoint()
-    }
-    finish(ranks)
+    // checkpoint every SECOND superstep: each eager localCheckpoint is a
+    // job barrier with fixed cost, and the lineage still truncates before
+    // it compounds (the per-round form this replaces was the r4 fix for
+    // UNBOUNDED lineage — the cadence keeps that property at half the
+    // barriers)
+    finish(Supersteps.fixed(nodes.select(col("id"), lit(1.0 / n).as("rank")),
+      rounds, everySecond = true)((ranks, _) =>
+      superstepPartitioned(adj, ranks, n, damping)).last)
   }
 
+  /** The exit metric of the residual loops (pagerank, HITS): the L1
+    * residual Σ|dr| of the round, observed on its checkpoint job.
+    */
+  private val residual: Column = coalesce(sum(col("dr")), lit(0.0))
+
   /** Driver-side replica of Spark's `round(x, 9)` for an observed
-    * residual metric — the convergence loops compare their exit metric
+    * residual — the convergence loops compare their exit metric
     * against tol on the DRIVER, so the rounding must match what the
     * oracle's SQL `round(..., 9)` computed (BigDecimal HALF_UP over
     * the double's shortest decimal form, which is exactly Spark's
     * Round semantics). One definition so the pagerank/HITS exit-parity
     * discipline cannot drift apart.
     */
-  private def observedResidual9(
-      obs: org.apache.spark.sql.Observation, key: String): Double =
-    BigDecimal(obs.get(key).asInstanceOf[Double])
-      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+  private def round9(x: Double): Double =
+    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** One superstep over the adjacency table, exposed for the PlanSpec
     * pin: join the rank vector on src (co-located against the cached
@@ -265,29 +270,18 @@ object GraphOps {
       maxRounds: Int = 16, tol: Double = 0.25,
       damping: Double = 0.85): DataFrame =
     withGraph(orders, lineitem) { (adj, nodes, n) =>
-      var ranks = nodes.select(col("id"), lit(1.0 / n).as("rank")).localCheckpoint()
-      var exitRound = 0
-      var r = 0
-      while (exitRound == 0 && r < maxRounds) {
-        r += 1
-        val obs = org.apache.spark.sql.Observation(s"pr_resid_$r")
-        val next = superstepPartitioned(adj, ranks, n, damping)
+      val (states, exit) = Supersteps.converge[Double]("pagerank_conv",
+          nodes.select(col("id"), lit(1.0 / n).as("rank")), maxRounds) { (s, _) =>
+        val ranks = s.last
+        (superstepPartitioned(adj, ranks, n, damping)
           .select(col("id"), round(col("rank"), 9).as("rank"))
           .join(ranks.select(col("id"), col("rank").as("prev")), "id")
-          .select(col("id"), col("rank"), abs(col("rank") - col("prev")).as("dr"))
-          .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
-          .localCheckpoint()
-        val delta = observedResidual9(obs, "d")
-        ranks = next.select(col("id"), col("rank"))
-        if (delta < tol) exitRound = r
-      }
-      require(exitRound > 0,
-        s"pagerank residual did not reach $tol within $maxRounds rounds — " +
-          "raise maxRounds or loosen tol; refusing to return an " +
-          "under-converged vector as converged")
-      ranks
+          .select(col("id"), col("rank"), abs(col("rank") - col("prev")).as("dr")),
+          Some(residual))
+      }(d => round9(d) < tol)
+      states.last
         .select(col("id").as("node_id"), round(col("rank"), 6).as("pr"),
-          lit(exitRound.toLong).as("exit_round"))
+          lit(exit.toLong).as("exit_round"))
         .orderBy(col("pr").desc, col("node_id"))
         .limit(100)
     }
@@ -317,33 +311,15 @@ object GraphOps {
   def graphComponentsConv(orders: DataFrame, lineitem: DataFrame,
       maxRounds: Int = 8): DataFrame =
     withGraph(orders, lineitem) { (adj, nodes, _) =>
-      var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-      var exitRound = 0
-      var r = 0
-      while (exitRound == 0 && r < maxRounds) {
-        r += 1
-        val nbrMin = adj.join(labels, col("src") === col("id"))
-          .select(explode(col("dsts")).as("nid"), col("label").as("nl"))
-          .groupBy(col("nid"))
-          .agg(min(col("nl")).as("nbr"))
-        val obs = org.apache.spark.sql.Observation(s"cc_chg_$r")
-        val next = labels.join(nbrMin, col("id") === col("nid"))
-          .select(col("id"), least(col("label"), col("nbr")).as("label"),
-            (col("nbr") < col("label")).as("chg"))
-          .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-          .localCheckpoint()
-        val changed = obs.get("n").asInstanceOf[Long]
-        labels = next.select(col("id"), col("label"))
-        if (changed == 0L) exitRound = r
-      }
-      require(exitRound > 0,
-        s"components did not reach a fixpoint within $maxRounds rounds — " +
-          "raise maxRounds; refusing to return a truncated labeling as converged")
-      labels
+      val (states, exit) = Supersteps.converge[Long]("components_conv",
+          nodes.select(col("id"), col("id").as("label")), maxRounds) { (s, _) =>
+        (minLabelHop(adj, s.last), Some(Supersteps.changed))
+      }(_ == 0L)
+      states.last
         .groupBy(col("label").as("component"))
         .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
         .select(col("component"), col("n_nodes"), col("min_node"),
-          lit(exitRound.toLong).as("exit_round"))
+          lit(exit.toLong).as("exit_round"))
         .orderBy("component")
     }
 
@@ -373,22 +349,30 @@ object GraphOps {
     * stored-layout serving path (both hand in a persisted adjacency).
     */
   private def componentsLoop(
-      adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    for (r <- 1 to rounds) {
-      val nbrMin = adj.join(labels, col("src") === col("id"))
-        .select(explode(col("dsts")).as("nid"), col("label").as("nl"))
-        .groupBy(col("nid"))
-        .agg(min(col("nl")).as("nbr"))
-      labels = labels.join(nbrMin, col("id") === col("nid"))
-        .select(col("id"), least(col("label"), col("nbr")).as("label"))
-      // every-second-hop checkpoint cadence (the loopPartitioned trade)
-      if (r % 2 == 0 || r == rounds) labels = labels.localCheckpoint()
-    }
-    labels
+      adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
+    // every-second-hop checkpoint cadence (the loopPartitioned trade)
+    Supersteps.fixed(nodes.select(col("id"), col("id").as("label")),
+        rounds, everySecond = true)((labels, _) =>
+      minLabelHop(adj, labels).select("id", "label")).last
       .groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("component")
+
+  /** One min-label hop, shared by the fixed and the converging
+    * components loops: every node takes the least of its label and its
+    * in-neighbors' labels (one explode fan-out, one min-aggregate on the
+    * dst key, one equi-join back); `chg` flags the nodes whose label fell
+    * — fused into the propagation join, so the converging loop's exit
+    * count needs no second job.
+    */
+  private def minLabelHop(adj: DataFrame, labels: DataFrame): DataFrame = {
+    val nbrMin = adj.join(labels, col("src") === col("id"))
+      .select(explode(col("dsts")).as("nid"), col("label").as("nl"))
+      .groupBy(col("nid"))
+      .agg(min(col("nl")).as("nbr"))
+    labels.join(nbrMin, col("id") === col("nid"))
+      .select(col("id"), least(col("label"), col("nbr")).as("label"),
+        (col("nbr") < col("label")).as("chg"))
   }
 
   /** Connected components SERVED from the stored layout — the second
@@ -437,20 +421,17 @@ object GraphOps {
   private def bfsLoop(adj: DataFrame, nodes: DataFrame,
       rounds: Int): DataFrame = {
     val INF = 999999L
-    var dist = nodes.select(col("id"),
+    val init = nodes.select(col("id"),
       when(col("id") % 64 === 0, lit(0L)).otherwise(lit(INF)).as("dist"))
-      .localCheckpoint()
-    for (r <- 1 to rounds) {
+    // every-second-hop checkpoint cadence (the loopPartitioned trade)
+    Supersteps.fixed(init, rounds, everySecond = true) { (dist, _) =>
       val nbr = adj.join(dist, col("src") === col("id"))
         .select(explode(col("dsts")).as("nid"), (col("dist") + 1).as("nd"))
         .groupBy(col("nid"))
         .agg(min(col("nd")).as("nbr"))
-      dist = dist.join(nbr, col("id") === col("nid"))
+      dist.join(nbr, col("id") === col("nid"))
         .select(col("id"), least(col("dist"), col("nbr")).as("dist"))
-      // every-second-hop checkpoint cadence (the loopPartitioned trade)
-      if (r % 2 == 0 || r == rounds) dist = dist.localCheckpoint()
-    }
-    dist
+    }.last
       .groupBy(when(col("dist") >= INF, lit(-1L)).otherwise(col("dist")).as("hops"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("hops")
@@ -568,13 +549,12 @@ object GraphOps {
         .groupBy(col("seed"), col("nid"))
         .agg(sum(col("sigma")).as("sigma"))
       val settled = all.select(col("seed").as("s2"), col("id").as("n2"))
-      val obs = org.apache.spark.sql.Observation(s"btw_ring_$r")
-      val ring = expanded.join(settled,
+      // ring size rides the checkpoint
+      val (ring, ringSize) = Supersteps.observed[Long](s"btw_ring_$r", expanded.join(settled,
           col("seed") === col("s2") && col("nid") === col("n2"), "left_anti")
-        .select(col("seed"), col("nid").as("id"), lit(r).as("dist"), col("sigma"))
-        .observe(obs, count(lit(1)).as("n")) // ring size rides the checkpoint
-        .localCheckpoint()
-      if (obs.get("n").asInstanceOf[Long] == 0L) {
+        .select(col("seed"), col("nid").as("id"), lit(r).as("dist"), col("sigma")),
+        count(lit(1)))
+      if (ringSize == 0L) {
         exhausted = true // graph ran out before the hop bound
       } else {
         rings(r) = ring
@@ -797,23 +777,18 @@ object GraphOps {
     * shared by the census entries and the modularity scorer.
     */
   private def lpaLabels(
-      adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
-    for (r <- 1 to rounds) {
-      // bidirectional edges ⇒ every node has in-neighbors ⇒ the vote
-      // output covers exactly the node set, so the r13 alignment join
-      // back (labels.select("id") ⋈ vote) was an identity — dropped in
-      // r14 (one exchange + join per round saved; same frame)
-      labels = lpaVote(adj, labels)
-      // per-ROUND checkpoint: `labels` feeds the next vote round AND the
-      // caller's census — a lazy round re-pays the whole two-aggregation
-      // vote chain per consumer (the multi-consumer pathology measured
-      // for HITS, 17.6 s lazy vs 8.3 s; the every-second-hop cadence
-      // here measured 17.1 s vs ~4.3 s per-round at sf0.1, BASELINE r9)
-      labels = labels.localCheckpoint()
-    }
-    labels
-  }
+      adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
+    // bidirectional edges ⇒ every node has in-neighbors ⇒ the vote
+    // output covers exactly the node set, so the r13 alignment join
+    // back (labels.select("id") ⋈ vote) was an identity — dropped in
+    // r14 (one exchange + join per round saved; same frame).
+    // per-ROUND checkpoint: `labels` feeds the next vote round AND the
+    // caller's census — a lazy round re-pays the whole two-aggregation
+    // vote chain per consumer (the multi-consumer pathology measured
+    // for HITS, 17.6 s lazy vs 8.3 s; the every-second-hop cadence
+    // here measured 17.1 s vs ~4.3 s per-round at sf0.1, BASELINE r9)
+    Supersteps.fixed(nodes.select(col("id"), col("id").as("label")), rounds)(
+      (labels, _) => lpaVote(adj, labels)).last
 
   /** The mode-vote loop + census, shared by the in-query build and the
     * stored-layout serving path (the componentsLoop convention).
@@ -862,36 +837,22 @@ object GraphOps {
   def graphLabelPropConv(orders: DataFrame, lineitem: DataFrame,
       maxRounds: Int = 10): DataFrame =
     withGraph(orders, lineitem) { (adj, nodes, _) =>
-      var lPrev = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
       // the vote output covers exactly the node set (bidirectional edges),
       // so the r13 alignment joins back were identities — dropped in r14
-      // (the lpaLabels reasoning)
-      var lCur = lpaVote(adj, lPrev).localCheckpoint()
-      var exitRound = 0
-      var r = 1
-      while (exitRound == 0 && r < maxRounds) {
-        r += 1
-        val obs = org.apache.spark.sql.Observation(s"lpa_orbit_$r")
-        val next = lpaVote(adj, lCur)
-          .join(lPrev.select(col("id"), col("label").as("old2")), "id")
-          .select(col("id"), col("label"),
-            (col("label") =!= col("old2")).as("chg"))
-          .observe(obs, sum(when(col("chg"), 1L).otherwise(0L)).as("n"))
-          .localCheckpoint()
-        val changed = obs.get("n").asInstanceOf[Long]
-        lPrev = lCur
-        lCur = next.select(col("id"), col("label"))
-        if (changed == 0L) exitRound = r
-      }
-      require(exitRound > 0,
-        s"label propagation did not reach a period-2 orbit within $maxRounds " +
-          "rounds — raise maxRounds; refusing to return a mid-oscillation " +
-          "labeling as converged")
-      lCur
+      // (the lpaLabels reasoning); round 1 has no r−2 labeling to compare
+      val (states, exit) = Supersteps.converge[Long]("label_prop_conv",
+          nodes.select(col("id"), col("id").as("label")), maxRounds) { (s, r) =>
+        val vote = lpaVote(adj, s.last)
+        if (r == 1) (vote, None)
+        else (vote.join(s(r - 2).select(col("id"), col("label").as("old2")), "id")
+          .select(col("id"), col("label"), (col("label") =!= col("old2")).as("chg")),
+          Some(Supersteps.changed))
+      }(_ == 0L)
+      states.last
         .groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
         .select(col("community"), col("n_nodes"), col("min_node"),
-          lit(exitRound.toLong).as("exit_round"))
+          lit(exit.toLong).as("exit_round"))
         .orderBy("community")
     }
 
@@ -1018,57 +979,17 @@ object GraphOps {
       maxRounds: Int = 10, tol: Double = 1e-6): DataFrame =
     withGraph(orders, lineitem) { (adjAll, _, _) =>
       val adj = adjAll.filter(col("src") % 2 === 0)
-      // r15: the hub matvec's nid-keyed role
       Materialize.releasing(reverseAdjacency(adj)) { radj =>
-        val custs = adj.select(col("src").as("id")).distinct()
-        var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
-        var a: DataFrame = null
-        var exitRound = 0
-        var r = 0
-        while (exitRound == 0 && r < maxRounds) {
-          r += 1
-          val araw = adj.join(h, col("src") === col("id"))
-            .select(explode(col("dsts")).as("nid"), col("score"))
-            .groupBy(col("nid")).agg(sum(col("score")).as("s"))
-          val asum = araw.agg(sum(col("s")).as("t"))
-          val anorm = araw.crossJoin(broadcast(asum))
-            .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
-          if (r == 1) {
-            // no predecessor vector yet — residuals start at round 2
-            a = anorm.localCheckpoint()
-          } else {
-            val obs = org.apache.spark.sql.Observation(s"hits_resid_$r")
-            val next = anorm
-              .join(a.select(col("id"), col("score").as("prev")), "id")
-              .select(col("id"), col("score"),
-                abs(col("score") - col("prev")).as("dr"))
-              .observe(obs, coalesce(sum(col("dr")), lit(0.0)).as("d"))
-              .localCheckpoint()
-            val delta = observedResidual9(obs, "d")
-            a = next.select(col("id"), col("score"))
-            if (delta < tol) exitRound = r
-          }
-          // r15: the O(V) authority vector joins the nid-keyed cached role
-          // BEFORE the explode — see reverseAdjacency
-          val hraw = radj
-            .join(a.select(col("id").as("nid"), col("score")), "nid")
-            .select(explode(col("srcs")).as("src"), col("score"))
-            .groupBy(col("src")).agg(sum(col("score")).as("s"))
-          val hsum = hraw.agg(sum(col("s")).as("t"))
-          h = hraw.crossJoin(broadcast(hsum))
-            .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
-            .localCheckpoint() // per-round, like hitsLoop (lazy-h probe reverted)
-        }
-        require(exitRound > 0,
-          s"HITS authority residual did not reach $tol within $maxRounds rounds — " +
-            "raise maxRounds or loosen tol; refusing to return an " +
-            "under-converged vector as converged")
-        def top(side: String, df: DataFrame): DataFrame = df
-          .select(lit(side).as("side"), col("id"),
-            round(col("score"), 6).as("score"), lit(exitRound.toLong).as("exit_round"))
-          .orderBy(desc("score"), asc("id")).limit(10)
-        top("auth", a).unionByName(top("hub", h))
-          .orderBy(col("side"), col("score").desc, col("id"))
+        // residuals start at round 2: round 1 has no predecessor vector
+        val (states, exit) = Supersteps.converge[Double]("hits_conv",
+            hitsInit(adj), maxRounds, settle = Some(hitsHub(radj, _))) { (s, r) =>
+          val a = hitsAuthority(adj, s.last)
+          if (r == 1) (a, None)
+          else (a.join(s(s.length - 2).select(col("id"), col("score").as("prev")), "id")
+            .select(col("id"), col("score"), abs(col("score") - col("prev")).as("dr")),
+            Some(residual))
+        }(d => round9(d) < tol)
+        hitsTop(states(states.length - 2), states.last, Some(exit))
       }
     }
 
@@ -1098,69 +1019,88 @@ object GraphOps {
           i => slice(col("all_srcs"), (i * chunkSize + 1).cast("int"), lit(chunkSize)))).as("srcs"))
       .persist()
 
+  /** The starting hub vector: every customer (even src) scores 1. */
+  private def hitsInit(adj: DataFrame): DataFrame =
+    adj.select(col("src").as("id")).distinct().select(col("id"), lit(1.0).as("score"))
+
+  /** The authority half of a HITS round: the hub scores pushed along the
+    * directed adjacency, L1-normalized and re-quantized to 9 decimals.
+    * The fixed and converging loops both checkpoint it per round: `a`
+    * nominally has one consumer, but the scalar-normalizer broadcast
+    * makes every lazy hop re-pay the matvec, and chains compound ~2× per
+    * skipped barrier — the lazy cadence measured 17.6 s vs 8.3 s at
+    * sf0.1 and was reverted. r14 probe: splitting the normalizer out of
+    * this job (raw-matvec checkpoint + scalar head() pull, or an
+    * observe() metric) benched 9.8/9.0 s vs 5.5 s for this form — the
+    * broadcast subtree shares the matvec's Exchange via ReusedExchange,
+    * so the "double compute" this split would save doesn't exist, while
+    * the extra per-round actions it adds are pure fixed cost (~0.16 s
+    * each, OPTIMIZATION_r14.md "Driver-overhead constants").
+    * (r15 probe #3, reverted: fusing BOTH matvecs into ONE per-round
+    * checkpoint — lazy authority scores streaming into the radj hub
+    * join, the a/h pair materialized as one tagged union — halves the
+    * action count but benched hits 5.62 → 8.12 s, stored 4.08 → 6.50 s
+    * with flat controls. Even with the hub join's build side being the
+    * radj CACHE, the lazy authority subtree re-executes under the
+    * union's second consumer and the next round's matvec join loses the
+    * filtered-union vector's size estimate — the same lazy-score-vector
+    * mechanism as the r14 probes, one level up.)
+    */
+  private def hitsAuthority(adj: DataFrame, h: DataFrame): DataFrame = {
+    val araw = adj.join(h, col("src") === col("id"))
+      .select(explode(col("dsts")).as("nid"), col("score"))
+      .groupBy(col("nid")).agg(sum(col("score")).as("s"))
+    val asum = araw.agg(sum(col("s")).as("t"))
+    araw.crossJoin(broadcast(asum))
+      .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
+  }
+
+  /** The hub half of a HITS round, checkpointed per round like the
+    * authority half. r15: the O(V) authority vector joins the nid-keyed
+    * cached reverse adjacency BEFORE the explode — see reverseAdjacency.
+    * (r14 probe #2, reverted: leaving the hub vector LAZY between rounds
+    * — the hub matvec riding the next authority checkpoint, one action
+    * per round instead of two — benched 9.4-10.2 s vs 5.9 s baseline,
+    * +70% on all three hits entries. A lazy score vector defeats the
+    * join-side size estimate, so the authority join loses its broadcast,
+    * and the normalizer subtree re-executes under the BroadcastExchange
+    * instead of sharing via ReusedExchange.)
+    */
+  private def hitsHub(radj: DataFrame, a: DataFrame): DataFrame = {
+    val hraw = radj
+      .join(a.select(col("id").as("nid"), col("score")), "nid")
+      .select(explode(col("srcs")).as("src"), col("score"))
+      .groupBy(col("src")).agg(sum(col("score")).as("s"))
+    val hsum = hraw.agg(sum(col("s")).as("t"))
+    hraw.crossJoin(broadcast(hsum))
+      .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
+  }
+
+  /** Top-10 per side, rounded to 6 BEFORE the cut (the oracle rounds
+    * first and orders by the rounded alias — cutting on the 9-decimal
+    * score could retain a different id set on a 6-decimal tie; the
+    * repo's round-before-cut discipline, cf. q18 / sim_*), with the exit
+    * round as a column when the loop converged.
+    */
+  private def hitsTop(a: DataFrame, h: DataFrame, exit: Option[Int]): DataFrame = {
+    def top(side: String, df: DataFrame): DataFrame = df
+      .select(Seq(lit(side).as("side"), col("id"), round(col("score"), 6).as("score")) ++
+        exit.map(e => lit(e.toLong).as("exit_round")): _*)
+      .orderBy(desc("score"), asc("id")).limit(10)
+    top("auth", a).unionByName(top("hub", h))
+      .orderBy(col("side"), col("score").desc, col("id"))
+  }
+
+  /** Fixed-round HITS as 2·rounds half-steps — odd steps the authority
+    * side, even steps the hub side — each checkpointed.
+    */
   private def hitsLoop(adjAll: DataFrame, rounds: Int): DataFrame = {
     // directed half: customer (even id) → supplier (odd id)
     val adj = adjAll.filter(col("src") % 2 === 0)
     Materialize.releasing(reverseAdjacency(adj)) { radj =>
-      val custs = adj.select(col("src").as("id")).distinct()
-      var h = custs.select(col("id"), lit(1.0).as("score")).localCheckpoint()
-      var a: DataFrame = null
-      for (r <- 1 to rounds) {
-        val araw = adj.join(h, col("src") === col("id"))
-          .select(explode(col("dsts")).as("nid"), col("score"))
-          .groupBy(col("nid")).agg(sum(col("score")).as("s"))
-        val asum = araw.agg(sum(col("s")).as("t"))
-        // per-ROUND checkpoint: `a` nominally has one consumer, but the
-        // scalar-normalizer broadcast makes every lazy hop re-pay araw,
-        // and chains compound ~2× per skipped barrier — the lazy cadence
-        // measured 17.6 s vs 8.3 s at sf0.1 and was reverted. r14 probe:
-        // splitting the normalizer out of this job (raw-matvec checkpoint
-        // + scalar head() pull, or an observe() metric) benched 9.8/9.0 s
-        // vs 5.5 s for this form — the broadcast subtree shares the
-        // matvec's Exchange via ReusedExchange, so the "double compute"
-        // this split would save doesn't exist, while the extra per-round
-        // actions it adds are pure fixed cost (~0.16 s each,
-        // OPTIMIZATION_r14.md "Driver-overhead constants").
-        // (r15 probe #3, reverted: fusing BOTH matvecs into ONE per-round
-        // checkpoint — lazy anorm streaming into the radj hub join, the
-        // a/h pair materialized as one tagged union — halves the action
-        // count but benched hits 5.62 → 8.12 s, stored 4.08 → 6.50 s with
-        // flat controls. Even with the hub join's build side being the
-        // radj CACHE, the lazy authority subtree re-executes under the
-        // union's second consumer and the next round's araw join loses
-        // the filtered-union vector's size estimate — the same lazy-
-        // score-vector mechanism as the r14 probes, one level up.)
-        a = araw.crossJoin(broadcast(asum))
-          .select(col("nid").as("id"), round(col("s") / col("t"), 9).as("score"))
-          .localCheckpoint()
-        // r15: the O(V) authority vector joins the nid-keyed cached role
-        // BEFORE the explode — see reverseAdjacency
-        val hraw = radj
-          .join(a.select(col("id").as("nid"), col("score")), "nid")
-          .select(explode(col("srcs")).as("src"), col("score"))
-          .groupBy(col("src")).agg(sum(col("score")).as("s"))
-        val hsum = hraw.agg(sum(col("s")).as("t"))
-        h = hraw.crossJoin(broadcast(hsum))
-          .select(col("src").as("id"), round(col("s") / col("t"), 9).as("score"))
-        // (r14 probe #2, reverted: leaving `h` LAZY between rounds — the hub
-        // matvec riding the next authority checkpoint, one action per round
-        // instead of two — benched 9.4-10.2 s vs 5.9 s baseline, +70% on all
-        // three hits entries. A lazy score vector defeats the join-side size
-        // estimate, so the araw join loses its broadcast, and the normalizer
-        // subtree re-executes under the BroadcastExchange instead of sharing
-        // via ReusedExchange. Both matvecs keep their own checkpoint.)
-        h = h.localCheckpoint() // same barrier economics as `a`
-      }
-      // round to 6 BEFORE the top-10 cut (the oracle rounds first and
-      // orders by the rounded alias — cutting on the 9-decimal score
-      // could retain a different id set on a 6-decimal tie; the repo's
-      // round-before-cut discipline, cf. q18 / sim_*)
-      def top(side: String, df: DataFrame): DataFrame = df
-        .select(lit(side).as("side"), col("id"),
-          round(col("score"), 6).as("score"))
-        .orderBy(desc("score"), asc("id")).limit(10)
-      top("auth", a).unionByName(top("hub", h))
-        .orderBy(col("side"), col("score").desc, col("id"))
+      val s = Supersteps.fixed(hitsInit(adj), 2 * rounds)((x, t) =>
+        if (t % 2 == 1) hitsAuthority(adj, x) else hitsHub(radj, x))
+      hitsTop(s(2 * rounds - 1), s(2 * rounds), None)
     }
   }
 
@@ -1244,9 +1184,7 @@ object GraphOps {
     def census(e: DataFrame, r: Int): DataFrame = e
       .agg(count(lit(1)).as("n_edges"), min(col("src")).as("min_src"))
       .select(lit(r).as("round"), col("n_edges"), col("min_src"))
-    var e = edgesInit.localCheckpoint()
-    val trajectory = scala.collection.mutable.ArrayBuffer(census(e, 0))
-    for (r <- 1 to rounds) {
+    Supersteps.fixed(edgesInit, rounds) { (e, _) =>
       // support(u,v) = #triangles containing the edge, via sorted
       // triangle ENUMERATION (a<b<c: join the canonical edge list with
       // itself on the middle node, close with the third edge) and a
@@ -1267,21 +1205,18 @@ object GraphOps {
         .select(col("t.src").as("src"), col("t.dst").as("dst"))
         .groupBy(col("src"), col("dst"))
         .agg(count(lit(1)).as("supp"))
-      e = e.join(supp, Seq("src", "dst"), "left")
+      // per-ROUND checkpoint: each lazy round has FOUR consumers
+      // (three triangle-join sides + the census row) — kcorePeel economics
+      e.join(supp, Seq("src", "dst"), "left")
         .filter(coalesce(col("supp"), lit(0L)) >= k - 2)
         .select("src", "dst")
-        // per-ROUND checkpoint: each lazy round has FOUR consumers
-        // (three triangle-join sides + the census row) — kcorePeel economics
-        .localCheckpoint()
-      trajectory += census(e, r)
-    }
-    trajectory.reduce(_ unionByName _).orderBy("round")
+    }.zipWithIndex.map((census _).tupled).reduce(_ unionByName _).orderBy("round")
   }
 
   /** The thresholded BIDIRECTIONAL co-purchase edge frame — shared by
     * the in-query k-core and the stored layout writer.
-    */
-  /** (r14 probe, reverted: generating the co-purchase pairs MAP-SIDE
+    *
+    * (r14 probe, reverted: generating the co-purchase pairs MAP-SIDE
     * from each customer's sorted supplier array — groupBy(cust) +
     * collect_list + nested transform/slice explode, exactly C(deg, 2)
     * rows instead of the self-join's deg² — benched SLOWER everywhere
@@ -1310,27 +1245,22 @@ object GraphOps {
     def census(active: DataFrame, r: Int): DataFrame = active
       .agg(count(lit(1)).as("n_active"), min(col("id")).as("min_node"))
       .select(lit(r).as("round"), col("n_active"), col("min_node"))
-    var active = edges.select(col("src").as("id")).distinct().localCheckpoint()
-    val trajectory = scala.collection.mutable.ArrayBuffer(census(active, 0))
-    for (r <- 1 to rounds) {
+    // per-ROUND checkpoint, unlike the every-second-hop loops: here
+    // each lazy round has THREE consumers (both next-round joins + its
+    // census row), so skipping the barrier re-runs the peel 3× —
+    // measured 8.8 s vs 7.2 s at sf0.1 for the skip-odd cadence
+    Supersteps.fixed(edges.select(col("src").as("id")).distinct(), rounds) { (active, _) =>
       // keep nodes with >= k neighbors still active: edge survives iff
       // BOTH endpoints are active (two compact-key equi-joins), then one
       // degree aggregate + filter
-      active = edges
+      edges
         .join(active.select(col("id").as("src")), Seq("src"))
         .join(active.select(col("id").as("dst")), Seq("dst"))
         .groupBy(col("src"))
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("id"))
-        // per-ROUND checkpoint, unlike the every-second-hop loops: here
-        // each lazy round has THREE consumers (both next-round joins +
-        // its census row), so skipping the barrier re-runs the peel 3×
-        // — measured 8.8 s vs 7.2 s at sf0.1 for the skip-odd cadence
-        .localCheckpoint()
-      trajectory += census(active, r)
-    }
-    trajectory.reduce(_ unionByName _).orderBy("round")
+    }.zipWithIndex.map((census _).tupled).reduce(_ unionByName _).orderBy("round")
   }
 
   /** Deterministic RANDOM WALKS over the trade graph — the walk-corpus
@@ -1365,16 +1295,7 @@ object GraphOps {
   private def uniformRankedEdges(
       orders: DataFrame, lineitem: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-      .localCheckpoint() // feeds both direction branches
-    val edges = pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
-    edges
+    tradeEdges(orders, lineitem)
       .withColumn("rn",
         row_number().over(Window.partitionBy("src").orderBy("dst")))
       .localCheckpoint() // the walk's static side, built once
@@ -1418,7 +1339,7 @@ object GraphOps {
     * biasedEdgeRoles for the shape.
     */
   private def walkLoop(ranked: DataFrame, steps: Int): DataFrame =
-    walkLoopRaw(ranked, steps, ckptEvery = 2).orderBy("start_id", "step")
+    walkLoopRaw(ranked, steps, everySecond = true).orderBy("start_id", "step")
 
   /** The walk loop WITHOUT the presentation sort — what the pair census
     * consumes (r15, §2.4 "an orderBy used only to make output
@@ -1428,35 +1349,32 @@ object GraphOps {
     * checkpoint job — was paid for nothing on the trainer chain).
     */
   private def walkLoopRaw(ranked: DataFrame, steps: Int,
-      ckptEvery: Int = 1): DataFrame = {
+      everySecond: Boolean = false): DataFrame = {
     val deg = ranked.groupBy(col("src"))
       .agg(count(lit(1)).as("outdeg")).localCheckpoint()
-    var cur = deg.select(col("src").as("start"), col("src").as("cur"))
-    val slices = scala.collection.mutable.ArrayBuffer(
-      cur.select(col("start"), lit(0).as("step"), col("cur").as("node")))
-    for (t <- 1 to steps) {
+    // checkpoint cadence (r15, measured): the DECLARED walk entries
+    // consume the slice union ONCE, so a lazy odd hop is re-evaluated
+    // only by the next hop — the loopPartitioned every-2 cadence wins
+    // there (graph_random_walk_stored 4.44 → 3.37 s back-to-back).
+    // The pair CENSUS consumed the union TWICE (self-join sides), so a
+    // lazy hop was evaluated 3× and the cadence read slightly WORSE
+    // (walk_pairs 5.18 → 5.43, node_embed 9.41 → 9.70) — that path
+    // keeps per-hop checkpoints.
+    Supersteps.fixed(deg.select(col("src").as("start"), col("src").as("cur")),
+        steps, everySecond) { (cur, t) =>
       val drawn = cur
         .join(deg.select(col("src").as("cur"), col("outdeg")), "cur")
         .select(col("start"), col("cur"),
           (conv(substring(
               md5(concat_ws("|", col("start"), lit(t), col("cur"))), 1, 8),
             16, 10).cast("long") % col("outdeg") + 1).cast("int").as("pick"))
-      cur = drawn
+      drawn
         .join(ranked, drawn("cur") === ranked("src")
           && drawn("pick") === ranked("rn"))
         .select(col("start"), col("dst").as("cur"))
-      // checkpoint cadence (r15, measured): the DECLARED walk entries
-      // consume the slice union ONCE, so a lazy odd hop is re-evaluated
-      // only by the next hop — the loopPartitioned every-2 cadence wins
-      // there (graph_random_walk_stored 4.44 → 3.37 s back-to-back).
-      // The pair CENSUS consumes the union TWICE (self-join sides), so
-      // a lazy hop is evaluated 3× and the cadence read slightly WORSE
-      // (walk_pairs 5.18 → 5.43, node_embed 9.41 → 9.70) — that path
-      // keeps per-hop checkpoints (ckptEvery = 1).
-      if (t % ckptEvery == 0 || t == steps) cur = cur.localCheckpoint()
-      slices += cur.select(col("start"), lit(t).as("step"), col("cur").as("node"))
-    }
-    slices.reduce(_ unionByName _)
+    }.zipWithIndex
+      .map { case (cur, t) => cur.select(col("start"), lit(t).as("step"), col("cur").as("node")) }
+      .reduce(_ unionByName _)
       .select(col("start").as("start_id"), col("step"), col("node"))
   }
 
@@ -1485,20 +1403,8 @@ object GraphOps {
     * (start_id, step, node).
     */
   def graphRandomWalkBiased(orders: DataFrame, lineitem: DataFrame,
-      steps: Int = 4, retP: Double = 2.0, outQ: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-      .localCheckpoint()
-    val edges = pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
-    // fanout AND membership roles cached per-key inside biasedWalkLoop
-    biasedWalkLoop(edges, steps, retP, outQ)
-  }
+      steps: Int = 4, retP: Double = 2.0, outQ: Double = 0.5): DataFrame =
+    biasedWalkLoop(tradeEdges(orders, lineitem), steps, retP, outQ)
 
   /** Biased walks SERVED from the stored bucketed adjacency — the walk
     * family's stored-serving invariant applied to the second-order
@@ -1514,28 +1420,11 @@ object GraphOps {
       spark: org.apache.spark.sql.SparkSession,
       orders: DataFrame, lineitem: DataFrame, sfDir: String,
       steps: Int = 4, retP: Double = 2.0, outQ: Double = 0.5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val name = ensureAdjacencyTable(spark, orders, lineitem, sfDir)
-    val edges = spark.table(name)
-      .select(col("src"), explode(col("dsts")).as("dst"))
-    biasedWalkLoop(edges, steps, retP, outQ)
+    biasedWalkLoop(spark.table(name).select(col("src"), explode(col("dsts")).as("dst")),
+      steps, retP, outQ)
   }
 
-  /** The second-order draw loop shared by the in-query and stored
-    * biased-walk forms (the `walkLoop` precedent — one kernel, two
-    * edge-list providers, so the forms cannot drift).
-    *
-    * The edge list plays TWO static roles per step — fanout side (join
-    * key src) and triangle-membership side (join key (src, dst)) — and
-    * the r13 form localCheckpoint'ed it, so BOTH roles re-shuffled and
-    * re-sorted the O(E) frame every step (checkpoint scans report
-    * unknown partitioning). r14: one cached copy per role, partitioned
-    * and sorted on that role's join key (the walkLoop fix, twice); per
-    * step only the O(walkers) frontier and its fanout move. The ranked
-    * step-1 edge list is derived from the fanout copy (same rows, one
-    * exchange-free window), so callers now hand in just the lazy edge
-    * frame.
-    */
   /** The biased walk's single cached static role — the sorted neighbor
     * arrays (src, nbrs), one row per node, partitioned on src by its own
     * groupBy — exposed for the PlanSpec pin and the r15 plan dumps.
@@ -1626,6 +1515,15 @@ object GraphOps {
         element_at(col("nbrs"), col("jstar").cast("int")).as("cur"))
   }
 
+  /** The second-order draw loop shared by the in-query and stored
+    * biased-walk forms (the `walkLoop` precedent — one kernel, two
+    * edge-list providers, so the forms cannot drift). Callers hand in the
+    * lazy (src, dst) edge frame; the loop caches it once as the sorted
+    * neighbor-arrays role ([[biasedNeighborRole]], released when the
+    * loop returns or throws), so per step only the O(walkers) state
+    * frame moves. Every step is checkpointed: each state feeds the next
+    * draw AND its output slice.
+    */
   private[graft] def biasedWalkLoop(edgesIn: DataFrame,
       steps: Int, retP: Double, outQ: Double): DataFrame =
     Materialize.releasing(biasedNeighborRole(edgesIn)) { adj =>
@@ -1634,23 +1532,21 @@ object GraphOps {
       // index into the sorted nbrs array, so the rank join is a
       // projection over the cached role (deg checkpoint + two joins + a
       // ranking window, deleted).
-      var state = adj.select(col("src").as("start"), col("src").as("cur"),
+      val step1 = adj.select(col("src").as("start"), col("src").as("cur"),
           element_at(col("nbrs"), (conv(substring(
               md5(concat_ws("|", col("src"), lit(1), col("src"))), 1, 8),
             16, 10).cast("long") % size(col("nbrs")) + 1).cast("int")).as("nxt"))
         .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"))
-        .localCheckpoint()
+      // states(i) is the state after step i + 1
+      val states = Supersteps.fixed(step1, steps - 1)((state, i) =>
+        biasedStepDraw(state, adj, i + 1, retP, outQ))
       // slice 0 reads off the step-1 CHECKPOINT (prev = start = src there),
       // not off `adj`: the role is released before the caller's action,
       // so a lazy projection over it would recompute the groupBy
-      val slices = scala.collection.mutable.ArrayBuffer(
-        state.select(col("start"), lit(0).as("step"), col("prev").as("node")),
-        state.select(col("start"), lit(1).as("step"), col("cur").as("node")))
-      for (t <- 2 to steps) {
-        state = biasedStepDraw(state, adj, t, retP, outQ).localCheckpoint()
-        slices += state.select(col("start"), lit(t).as("step"), col("cur").as("node"))
-      }
-      slices.reduce(_ unionByName _)
+      (states.head.select(col("start"), lit(0).as("step"), col("prev").as("node")) +:
+        states.zipWithIndex.map { case (state, i) =>
+          state.select(col("start"), lit(i + 1).as("step"), col("cur").as("node")) })
+        .reduce(_ unionByName _)
         .select(col("start").as("start_id"), col("step"), col("node"))
         .orderBy("start_id", "step")
     }
@@ -1671,12 +1567,6 @@ object GraphOps {
     walkPairsRaw(orders, lineitem, steps, window)
       .orderBy("center", "context")
 
-  /** The UNSORTED pair census — the frame [[graphWalkPairs]] presents
-    * sorted and the SGNS trainer consumes as-is: the trainer re-keys and
-    * re-aggregates the census immediately, so paying the global range
-    * sort before its checkpoint was pure waste (r14, §2.4 "an orderBy
-    * used only to make output deterministic").
-    */
   /** The walk-corpus frame exactly as the pair census materializes it —
     * exposed for the r15 plan artifacts (the census's only corpus-sized
     * input). r15: the UNSORTED loop output — the census self-join
@@ -1689,6 +1579,12 @@ object GraphOps {
       steps: Int = 4): DataFrame =
     walkLoopRaw(uniformRankedEdges(orders, lineitem), steps)
 
+  /** The UNSORTED pair census — the frame [[graphWalkPairs]] presents
+    * sorted and the SGNS trainer consumes as-is: the trainer re-keys and
+    * re-aggregates the census immediately, so paying the global range
+    * sort before its checkpoint was pure waste (r14, §2.4 "an orderBy
+    * used only to make output deterministic").
+    */
   private[graft] def walkPairsRaw(orders: DataFrame, lineitem: DataFrame,
       steps: Int = 4, window: Int = 2): DataFrame = {
     // NO corpus checkpoint (r15): every per-step frontier slice is
@@ -1732,15 +1628,7 @@ object GraphOps {
     * the sign.
     */
   def graphAssortativity(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val pairs = orders
-      .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-      .localCheckpoint() // feeds both degree tables and the edge list
-    val edges = pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
+    val edges = tradeEdges(orders, lineitem)
     val deg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val xy = edges
       .join(deg.select(col("id").as("src"), col("deg").as("x")), "src")

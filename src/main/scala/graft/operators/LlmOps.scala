@@ -430,17 +430,16 @@ object LlmOps {
     * backstopped at 100 rounds, which FAILS rather than returning a
     * partial merge). A fixed round count silently under-merges
     * components deeper than it — chains happen in dedup graphs (A~B~C
-    * where A≁C) — so convergence is detected, not assumed: labels only
-    * ever DECREASE under min-propagation, so the label sum is strictly
-    * monotone and "sum unchanged" ⇔ "no label changed". Each round's
-    * labels are localCheckpoint'ed — without it the plan for round k
-    * re-evaluates rounds 1..k-1 (and the MinHash pipeline) from scratch,
-    * which is quadratic in rounds at any scale. The pair list is cached
-    * while iterating (the one legitimate cache in the engine: iterative
-    * graph algorithms reuse their edge list by definition) and
-    * released before returning — the final labels are already
-    * materialized by the checkpoint, and a leaked cache would accumulate
-    * across a 130-query sweep.
+    * where A≁C) — so convergence is detected, not assumed: each round
+    * flags the nodes whose label fell (a node's own label rides the
+    * union as `own`) and the count of changed labels is observed on the
+    * round's checkpoint job, so detection costs no extra action. Each
+    * round's labels are localCheckpoint'ed — without it the plan for
+    * round k re-evaluates rounds 1..k-1 (and the MinHash pipeline) from
+    * scratch, which is quadratic in rounds at any scale. The pair list
+    * is cached while iterating (iterative graph algorithms reuse their
+    * edge list by definition) and released before returning — the final
+    * labels are already materialized by the checkpoint.
     */
   def dedupClusters(documents: DataFrame): DataFrame = {
     val clusters = Materialize.releasing(
@@ -448,37 +447,20 @@ object LlmOps {
       val edges = pairs
         .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      var labels = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label"))
-        .localCheckpoint()
-      def labelSum(df: DataFrame): Long = {
-        val row = df.agg(sum(col("label"))).head()
-        if (row.isNullAt(0)) 0L else row.getLong(0)
-      }
-      var prevSum = labelSum(labels)
-      var changed = true
-      var rounds = 0
       // labels only ever decrease, so convergence needs at most one round
-      // per hop of the longest chain; the bound is a runaway backstop, and
-      // tripping it must FAIL, not silently return under-merged clusters
-      // (the oracle computes the true fixpoint, so a silent cap would also
-      // be a wrong answer, not just a degraded one).
-      val maxRounds = 100
-      while (changed && rounds < maxRounds) {
+      // per hop of the longest chain; the bound is a runaway backstop (the
+      // oracle computes the true fixpoint, so a silent cap would also be
+      // a wrong answer, not just a degraded one)
+      Supersteps.converge[Long]("dedup_clusters", edges.select(col("src").as("id"))
+          .distinct().select(col("id"), col("id").as("label")), 100) { (s, _) =>
+        val labels = s.last.select(col("id"), col("label"))
         val nbr = edges.join(labels, col("src") === col("id"))
-          .select(col("dst").as("id"), col("label"))
-        labels = labels.unionByName(nbr)
-          .groupBy("id").agg(min(col("label")).as("label"))
-          .localCheckpoint()
-        val s = labelSum(labels)
-        changed = s != prevSum
-        prevSum = s
-        rounds += 1
-      }
-      require(!changed,
-        s"dedupClusters did not converge within $maxRounds rounds — " +
-          "pair graph has a chain deeper than the backstop; raise maxRounds")
-      labels
+          .select(col("dst").as("id"), col("label"), lit(null).as("own"))
+        (labels.withColumn("own", col("label")).unionByName(nbr)
+          .groupBy("id").agg(min(col("label")).as("label"), max(col("own")).as("own"))
+          .select(col("id"), col("label"), (col("label") < col("own")).as("chg")),
+          Some(Supersteps.changed))
+      }(_ == 0L)._1.last
     }
     clusters
       .select(col("id").as("doc_id"), col("label").as("cluster_rep"))

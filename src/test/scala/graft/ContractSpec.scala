@@ -72,4 +72,22 @@ class ContractSpec extends SparkTestBase {
     } yield s"$f: $needle"
     assert(strays.isEmpty, strays.mkString("\n"))
   }
+
+  test("the checkpoint cadence, the observed exit and its backstop appear only in Supersteps") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/operators/Supersteps.scala")
+    val needles = Seq("% 2 == 0 ||", "exitRound", "Observation(")
+    val sources = scala.util.Using.resource(java.nio.file.Files.walk(root))(
+      _.iterator.asScala.filter(_.toString.endsWith(".scala")).toList)
+    val ownerText = java.nio.file.Files.readString(owner)
+    assert(needles.forall(ownerText.contains), s"$owner lacks one of $needles")
+    // the ETL load audit observes a scan, not a loop
+    val strays = for {
+      f <- sources if f != owner
+      text = java.nio.file.Files.readString(f).replace("Observation(\"load_audit\")", "")
+      needle <- needles if text.contains(needle)
+    } yield s"$f: $needle"
+    assert(strays.isEmpty, strays.mkString("\n"))
+  }
 }

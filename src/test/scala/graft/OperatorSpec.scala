@@ -469,6 +469,29 @@ class OperatorSpec extends SparkTestBase {
       assert(math.abs(pr - fixed(id)) < 2e-6, s"node $id: conv $pr vs fixed ${fixed(id)}") }
   }
 
+  test("conv backstop: each _conv entry one round short of its pinned exit throws its loop's message, caches released") {
+    // the fixtures and exit rounds pinned by the four _conv tests above:
+    // two components exit at 2, the HITS single-customer star at 2, the
+    // LPA 4-leaf star orbit at 3, the pagerank 4-leaf star at 10
+    val twoComp = (Seq((1L, 1L), (2L, 2L)).toDF("o_orderkey", "o_custkey"),
+      Seq((1L, 1L), (1L, 2L), (2L, 10L)).toDF("l_orderkey", "l_suppkey"))
+    val hitsStar = (Seq((1L, 1L), (2L, 1L)).toDF("o_orderkey", "o_custkey"),
+      Seq((1L, 1L), (2L, 2L)).toDF("l_orderkey", "l_suppkey"))
+    val star4 = ((1L to 4L).map(k => (k, 1L)).toDF("o_orderkey", "o_custkey"),
+      (1L to 4L).map(k => (k, k)).toDF("l_orderkey", "l_suppkey"))
+    val cases = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "components_conv" -> (() => GraphOps.graphComponentsConv(twoComp._1, twoComp._2, maxRounds = 1)),
+      "hits_conv" -> (() => GraphOps.graphHitsConv(hitsStar._1, hitsStar._2, maxRounds = 1)),
+      "label_prop_conv" -> (() => GraphOps.graphLabelPropConv(star4._1, star4._2, maxRounds = 2)),
+      "pagerank_conv" -> (() => GraphOps.graphPagerankConv(star4._1, star4._2, maxRounds = 9)))
+    cases.foreach { case (loop, run) =>
+      spark.catalog.clearCache()
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"$loop did not converge within"), s"$loop: ${e.getMessage}")
+      assert(spark.sharedState.cacheManager.isEmpty, s"$loop: a cache outlived the throw")
+    }
+  }
+
   test("graph_triangles: one seeded triangle found, counted once per corner, isolated pair excluded") {
     // customers 1,2 both buy from suppliers 1,2,3 → co-purchase edges
     // (1,2),(1,3),(2,3) with shared=2; customer 3 buys from 4,5 once →
