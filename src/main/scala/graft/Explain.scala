@@ -1,5 +1,7 @@
 package graft
+import org.apache.spark.GraftBus
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.BlockId
 import java.nio.file.{Files, Paths}
 
 /** Plan dump: `.explain("formatted")` of named queries → one text file per
@@ -7,7 +9,11 @@ import java.nio.file.{Files, Paths}
   * (plans/rNN/<query>_{before,after}.txt). The first line of each file is
   * `jobs: N`, the Spark jobs the entry ran while its frame was built (the
   * eager checkpoints of its loops), which the plan of the final frame
-  * does not show. Usage:
+  * does not show. The second line is `blocks: <MB> rdd, <MB> broadcast`,
+  * the block-manager bytes of the blocks the build created and left
+  * behind (checkpoints and caches it did not release, broadcast
+  * variables), read right after the build, so blocks the ContextCleaner
+  * has not collected yet still count. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -33,14 +39,18 @@ object Explain {
       .foreach { case (name, fn) =>
         try {
           val sc = spark.sparkContext
+          val before = GraftBus.blocks(sc).keySet
           sc.setJobGroup(name, name)
           val df = try fn(spark, sfDir) finally sc.clearJobGroup()
-          org.apache.spark.GraftBus.drain(sc)
+          GraftBus.drain(sc)
           val jobs = sc.statusTracker.getJobIdsForGroup(name).length
+          val left = GraftBus.blocks(sc).filter { case (id, _) => !before(id) }
+          def mb(kind: BlockId => Boolean) =
+            left.collect { case (id, bytes) if kind(id) => bytes }.sum / 1e6
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-            s"jobs: $jobs\n$plan")
+            f"jobs: $jobs\nblocks: ${mb(_.isRDD)}%.1f rdd, ${mb(_.isBroadcast)}%.1f broadcast\n$plan")
           System.err.println(s"[explain] $name -> ${name}_$suffix.txt")
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")

@@ -34,21 +34,28 @@ object GraphOps {
     * An undirected edge (both directions materialized) links a customer
     * to every supplier whose parts they ordered; node ids are disjoint by
     * parity (customers even, suppliers odd) so one long column carries
-    * both sides. localCheckpoint: the distinct pair table feeds BOTH
-    * direction branches of the union; left lazy, the orders⋈lineitem
-    * join + distinct (the build's widest shuffles) run once per branch.
+    * both sides. Both directions come out of ONE pass: each distinct
+    * pair of [[tradePairs]] explodes map-side into its two directed
+    * rows, so the orders⋈lineitem join + distinct (the build's widest
+    * shuffles) run once with no checkpoint. No consumer could release
+    * one made here, so its blocks (49 MB at sf0.1) would stay in the
+    * block manager until the ContextCleaner collected them.
     */
-  private def tradeEdges(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val pairs = orders
+  private[graft] def tradeEdges(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    tradePairs(orders, lineitem)
+      .select(explode(array(
+        struct(col("c").as("src"), col("s").as("dst")),
+        struct(col("s").as("src"), col("c").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
+
+  /** The trade graph's distinct undirected pairs (c, s): customer 2·cust,
+    * supplier 2·supp+1.
+    */
+  private def tradePairs(orders: DataFrame, lineitem: DataFrame): DataFrame =
+    orders
       .join(lineitem, col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
+      .select((col("o_custkey") * 2).as("c"), (col("l_suppkey") * 2 + 1).as("s"))
       .distinct()
-      .localCheckpoint()
-    pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
-  }
 
   /** The adjacency FRAME alone — shared by the in-query cache path
     * (`buildGraph`) and the stored layout (`sinkGraphAdjacency`), which
@@ -1476,6 +1483,17 @@ object GraphOps {
     * frame, (prev, c) membership SMJ, one WindowExec (exchange + sort
     * on start) and a groupBy per step — is deleted outright: no window,
     * no fanout frame, no membership role.
+    *
+    * The hash is built on the STATE (`shuffle_hash` hint), which is what
+    * keeps the role in place. Unhinted, the planner compares sizes: the
+    * cached role's exact in-memory size is under the 10 MB
+    * auto-broadcast threshold at sf0.001 and sf0.1 while the
+    * checkpointed state's estimate is not, so it broadcast the O(E)
+    * role every step (BroadcastHashJoin BuildRight: a driver collect and
+    * a hash build per step; one sf0.1 stored walk left 22–66 MB of
+    * broadcast blocks, 0.6 MB with the hint). With the hint the state is
+    * shuffled to the role's src partitioning and nothing is broadcast
+    * at any threshold.
     */
   private[graft] def biasedStepDraw(state: DataFrame, adj: DataFrame,
       t: Int, retP: Double, outQ: Double): DataFrame = {
@@ -1496,6 +1514,7 @@ object GraphOps {
         .otherwise(j0 + 1)
     }
     state
+      .hint("shuffle_hash")
       .join(adj.select(col("src").as("cur"), col("nbrs")), "cur")
       .withColumn("n", size(col("nbrs")))
       .withColumn("r", array_position(col("nbrs"), col("prev")))
@@ -1521,8 +1540,10 @@ object GraphOps {
     * lazy (src, dst) edge frame; the loop caches it once as the sorted
     * neighbor-arrays role ([[biasedNeighborRole]], released when the
     * loop returns or throws), so per step only the O(walkers) state
-    * frame moves. Every step is checkpointed: each state feeds the next
-    * draw AND its output slice.
+    * frame moves — by the state-side hash build of [[biasedStepDraw]]:
+    * without it the small cached role read as the broadcast side and
+    * was collected and broadcast once per step. Every step is
+    * checkpointed: each state feeds the next draw AND its output slice.
     */
   private[graft] def biasedWalkLoop(edgesIn: DataFrame,
       steps: Int, retP: Double, outQ: Double): DataFrame =
@@ -1626,19 +1647,27 @@ object GraphOps {
     * agg_regression closed form at the double boundary. Bipartite trade
     * graphs are strongly disassortative by construction — the spec pins
     * the sign.
+    *
+    * The sums run over the undirected PAIRS, half the rows: a pair
+    * (c, s) with degrees (dc, ds) stands for its two directed edges, so
+    * n = 2·pairs, Σx = Σy = Σ(dc + ds), Σxy = 2·Σ dc·ds and
+    * Σx² = Σy² = Σ(dc² + ds²) — the same integers the directed sums
+    * give. The pair table feeds three scans (both degree aggregates and
+    * the pair stream), so it is checkpointed once and orders⋈lineitem
+    * runs once.
     */
   def graphAssortativity(orders: DataFrame, lineitem: DataFrame): DataFrame = {
-    val edges = tradeEdges(orders, lineitem)
-    val deg = edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-    val xy = edges
-      .join(deg.select(col("id").as("src"), col("deg").as("x")), "src")
-      .join(deg.select(col("id").as("dst"), col("deg").as("y")), "dst")
-    val s = xy.agg(
-      count(lit(1)).as("n"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"))
+    val pairs = tradePairs(orders, lineitem).localCheckpoint()
+    val s = pairs
+      .join(pairs.groupBy(col("c")).agg(count(lit(1)).as("dc")), "c")
+      .join(pairs.groupBy(col("s")).agg(count(lit(1)).as("ds")), "s")
+      .agg(
+        count(lit(1)).as("n_pairs"),
+        sum(col("dc") + col("ds")).as("sx"),
+        sum(col("dc") * col("ds")).as("sdd"),
+        sum(col("dc") * col("dc") + col("ds") * col("ds")).as("sxx"))
+      .select((col("n_pairs") * 2).as("n"), col("sx"), col("sx").as("sy"),
+        (col("sdd") * 2).as("sxy"), col("sxx"), col("sxx").as("syy"))
     s.select(col("n"),
       round(
         (col("n").cast("double") * col("sxy").cast("double")

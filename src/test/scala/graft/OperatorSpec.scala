@@ -1101,6 +1101,18 @@ class OperatorSpec extends SparkTestBase {
       s"$name bucket spec $spec")
   }
 
+  test("stored adjacency: a rebuild leaves no RDD blocks behind") {
+    // the CacheManager sweep in ContractSpec cannot see checkpoint
+    // blocks; the block manager's RDD list can
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    GraphOps.ensureAdjacencyTable(spark,
+      Tables.orders(spark, sf0001), Tables.lineitem(spark, sf0001), sf0001,
+      rebuild = true)
+    val left = spark.sparkContext.getRDDStorageInfo.filterNot(r => before(r.id))
+    assert(left.isEmpty, left.map(r => s"${r.name}: ${r.memSize + r.diskSize} B")
+      .mkString("the rebuild left blocks behind: ", "; ", ""))
+  }
+
   test("graph_random_walk_biased_stored: same rows in order at widths 4 and 8, each from its own layout") {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     def at(width: Int): (String, Seq[Row]) = {
@@ -1134,8 +1146,6 @@ class OperatorSpec extends SparkTestBase {
       "the biased walk's neighbor role is still cached after the loop threw")
     // a graph build that throws: the adjacency is persisted before the
     // count() that materializes it overflows doubling the customer id
-    // (an error raised in `orders` itself fires earlier, at the pair
-    // table's checkpoint, before anything is persisted)
     val orders = Seq((1L, Long.MaxValue / 2 + 1)).toDF("o_orderkey", "o_custkey")
     val lineitem = Seq((1L, 1L)).toDF("l_orderkey", "l_suppkey")
     val b = intercept[Exception](GraphOps.graphBfs(orders, lineitem))

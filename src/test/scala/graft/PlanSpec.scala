@@ -959,46 +959,54 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("biased walk: one step is one walker-side exchange over the cached arrays role — no window, no fanout (r15)") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val edgesIn = GraphOps.tradeEdges(orders(spark, sf0001), lineitem(spark, sf0001))
+    val adj = GraphOps.biasedNeighborRole(edgesIn)
     try {
-      val pairs = orders(spark, sf0001)
-        .join(lineitem(spark, sf0001), col("o_orderkey") === col("l_orderkey"))
-        .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-        .distinct().localCheckpoint()
-      val edgesIn = pairs
-        .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-        .unionByName(pairs
-          .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
-      val adj = GraphOps.biasedNeighborRole(edgesIn)
       adj.count()
       val state = edgesIn.select(col("src").as("start"), col("src").as("prev"),
         col("dst").as("cur")).distinct().localCheckpoint()
-      val step = GraphOps.biasedStepDraw(state, adj, 2, 2.0, 0.5)
-      val root = step.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case other => other
+      // at the session's own threshold the cached role's exact size is
+      // under it: unhinted, the planner broadcast the O(E) role per step
+      for (threshold <- Seq(prev, "-1")) {
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        val step = GraphOps.biasedStepDraw(state, adj, 2, 2.0, 0.5)
+        val root = step.queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+            a.executedPlan
+          case other => other
+        }
+        val p = root.toString
+        val broadcasts = root.collect { case e: BroadcastExchangeExec => e }
+        val shuffles = root.collect { case e: ShuffleExchangeExec => e }
+        assert(broadcasts.isEmpty, s"threshold $threshold: the step broadcasts:\n$p")
+        // one exchange total: the O(walkers) state aligning to the cached
+        // arrays role (which never moves). The r13/r14 shapes paid, per
+        // step, an O(fanout) candidate frame + a (prev, c) membership SMJ
+        // + a WindowExec (exchange + sort on start) — all gone: the draw
+        // is a closed-form projection (bipartite graph ⇒ no triangles ⇒
+        // two dyadic weight values ⇒ exact inverse-CDF crossing).
+        assert(shuffles.length == 1,
+          s"threshold $threshold: step should shuffle only the walker state " +
+            s"(1 exchange), saw ${shuffles.length}:\n$p")
+        assert(shuffles.head.collect {
+          case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+        }.isEmpty, s"threshold $threshold: the shuffled side is the cached role:\n$p")
+        assert(!p.contains("Window"), s"closed-form draw needs no window:\n$p")
+        // and at run time: adaptive re-planning keeps the state-side build
+        step.collect()
+        val ran = step.queryExecution.executedPlan
+        val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+        assert(stages.collect(ran) {
+          case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => e
+        }.isEmpty, s"threshold $threshold: the executed step broadcasts:\n$ran")
       }
-      val p = root.toString
-      val exchanges = root.collect {
-        case e: org.apache.spark.sql.execution.exchange.Exchange => e
-      }
-      // one exchange total: the O(walkers) state aligning to the cached
-      // arrays role (which never moves). The r13/r14 shapes paid, per
-      // step, an O(fanout) candidate frame + a (prev, c) membership SMJ
-      // + a WindowExec (exchange + sort on start) — all gone: the draw
-      // is a closed-form projection (bipartite graph ⇒ no triangles ⇒
-      // two dyadic weight values ⇒ exact inverse-CDF crossing).
-      assert(exchanges.length == 1,
-        s"step should shuffle only the walker state (1 exchange), " +
-          s"saw ${exchanges.length}:\n$p")
-      assert(!p.contains("Window"), s"closed-form draw needs no window:\n$p")
-      assert(!p.contains("SortMergeJoin") || exchanges.length == 1,
-        s"unexpected join shape:\n$p")
+    } finally {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
       adj.unpersist()
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("biased walk: closed-form draw matches the window-sum inverse-CDF draw row for row (r15)") {
@@ -1007,14 +1015,7 @@ class PlanSpec extends SparkTestBase {
     // replay the r14 window form (fanout + membership left join + cum/tot
     // window + filter + min) against biasedStepDraw on the same graph and
     // state — the closed form must reproduce it EXACTLY (dyadic weights)
-    val pairs = orders(spark, sf0001)
-      .join(lineitem(spark, sf0001), col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct().localCheckpoint()
-    val edgesIn = pairs
-      .select((col("cust") * 2).as("src"), (col("supp") * 2 + 1).as("dst"))
-      .unionByName(pairs
-        .select((col("supp") * 2 + 1).as("src"), (col("cust") * 2).as("dst")))
+    val edgesIn = GraphOps.tradeEdges(orders(spark, sf0001), lineitem(spark, sf0001))
       .localCheckpoint()
     // one walker row per start (the loop invariant both forms assume):
     // prev = the node itself, cur = its smallest neighbor
