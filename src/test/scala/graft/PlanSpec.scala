@@ -959,7 +959,9 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("biased walk: one step is one walker-side exchange over the cached arrays role — no window, no fanout (r15)") {
-    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeExec}
     import org.apache.spark.sql.functions._
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val edgesIn = GraphOps.tradeEdges(orders(spark, sf0001), lineitem(spark, sf0001))
@@ -974,12 +976,11 @@ class PlanSpec extends SparkTestBase {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
         val step = GraphOps.biasedStepDraw(state, adj, 2, 2.0, 0.5)
         val root = step.queryExecution.executedPlan match {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            a.executedPlan
+          case a: AdaptiveSparkPlanExec => a.executedPlan
           case other => other
         }
         val p = root.toString
-        val broadcasts = root.collect { case e: BroadcastExchangeExec => e }
+        val broadcasts = root.collect { case e: BroadcastExchangeLike => e }
         val shuffles = root.collect { case e: ShuffleExchangeExec => e }
         assert(broadcasts.isEmpty, s"threshold $threshold: the step broadcasts:\n$p")
         // one exchange total: the O(walkers) state aligning to the cached
@@ -991,17 +992,15 @@ class PlanSpec extends SparkTestBase {
         assert(shuffles.length == 1,
           s"threshold $threshold: step should shuffle only the walker state " +
             s"(1 exchange), saw ${shuffles.length}:\n$p")
-        assert(shuffles.head.collect {
-          case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
-        }.isEmpty, s"threshold $threshold: the shuffled side is the cached role:\n$p")
+        assert(shuffles.head.collect { case s: InMemoryTableScanExec => s }.isEmpty,
+          s"threshold $threshold: the shuffled side is the cached role:\n$p")
         assert(!p.contains("Window"), s"closed-form draw needs no window:\n$p")
         // and at run time: adaptive re-planning keeps the state-side build
         step.collect()
         val ran = step.queryExecution.executedPlan
-        val stages = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-        assert(stages.collect(ran) {
-          case e: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => e
-        }.isEmpty, s"threshold $threshold: the executed step broadcasts:\n$ran")
+        val stages = new AdaptiveSparkPlanHelper {}
+        assert(stages.collect(ran) { case e: BroadcastExchangeLike => e }.isEmpty,
+          s"threshold $threshold: the executed step broadcasts:\n$ran")
       }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
