@@ -9,11 +9,13 @@ import java.nio.file.{Files, Paths}
   * (plans/rNN/<query>_{before,after}.txt). The first line of each file is
   * `jobs: N`, the Spark jobs the entry ran while its frame was built (the
   * eager checkpoints of its loops), which the plan of the final frame
-  * does not show. The second line is `blocks: <MB> rdd, <MB> broadcast`,
-  * the block-manager bytes of the blocks the build created and left
-  * behind (checkpoints and caches it did not release, broadcast
-  * variables), read right after the build, so blocks the ContextCleaner
-  * has not collected yet still count. Usage:
+  * does not show. The second line is
+  * `blocks: <MB> rdd, <MB> broadcast, <MB> catalog`: the block-manager
+  * bytes of the blocks the build created and left behind (checkpoints and
+  * caches it did not release, broadcast variables), read right after the
+  * build, so blocks the ContextCleaner has not collected yet still count;
+  * then the bytes of the `MergeableCatalog` pages the build added to the
+  * catalog's tables, over all their versions. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -40,6 +42,7 @@ object Explain {
         try {
           val sc = spark.sparkContext
           val before = GraftBus.blocks(sc).keySet
+          val pagesBefore = graft.plans.MergeableCatalog.storedPages
           sc.setJobGroup(name, name)
           val df = try fn(spark, sfDir) finally sc.clearJobGroup()
           GraftBus.drain(sc)
@@ -47,10 +50,13 @@ object Explain {
           val left = GraftBus.blocks(sc).filter { case (id, _) => !before(id) }
           def mb(kind: BlockId => Boolean) =
             left.collect { case (id, bytes) if kind(id) => bytes }.sum / 1e6
+          val catalog = (graft.plans.MergeableCatalog.storedPages -- pagesBefore)
+            .iterator.map(_.sizeInBytes).sum / 1e6
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-            f"jobs: $jobs\nblocks: ${mb(_.isRDD)}%.1f rdd, ${mb(_.isBroadcast)}%.1f broadcast\n$plan")
+            f"jobs: $jobs\nblocks: ${mb(_.isRDD)}%.1f rdd, " +
+              f"${mb(_.isBroadcast)}%.1f broadcast, $catalog%.1f catalog\n$plan")
           System.err.println(s"[explain] $name -> ${name}_$suffix.txt")
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")

@@ -1448,7 +1448,7 @@ object EtlOps {
     * (version 1 = the seed load) against current state after an UPDATE —
     * the audit-diff every warehouse history feature exists to serve.
     * Versioned and current scans are two independent snapshot reads of
-    * shared immutable arrays; no copy, no log replay.
+    * shared immutable pages; no copy, no log replay.
     */
   def sqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     val target = seededStateTable(spark, sfDir, "orders_tt") // commit 1

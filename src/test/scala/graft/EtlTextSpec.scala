@@ -378,6 +378,106 @@ class EtlTextSpec extends SparkTestBase {
     assert(!spark.catalog.tableExists("graftcat.spec.lifecycle"))
   }
 
+  /** A graftcat table as stored, for the page-level pins below. */
+  private def catalogTable(ns: String, name: String) =
+    new graft.plans.MergeableCatalog()
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier.of(Array(ns), name))
+      .asInstanceOf[graft.plans.MergeableMemTable]
+
+  test("MergeableCatalog round trip: every DML verb, ALTER and every version read back exactly") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
+    val t = "graftcat.spec.rt"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, note STRING, x DOUBLE)")
+    type R = (Long, Option[String], Double, Option[String])
+    def r(k: Long, note: String, x: Double, extra: String = null): R =
+      (k, Option(note), x, Option(extra))
+    // three write tasks, so versions hold several pages
+    Seq[(Long, String, Double)]((1L, "a", 1.0), (2L, null, 2.0), (3L, "", 3.0),
+      (4L, "dd", 4.0), (5L, null, 5.0))
+      .toDF("k", "note", "x").repartition(3).writeTo(t).append() // v1
+    spark.sql(
+      s"""UPDATE $t SET x = x + 10, note = CASE WHEN k = 1 THEN NULL
+            WHEN k = 2 THEN '' ELSE concat(note, 'u') END
+          WHERE k <= 3""") // v2
+    spark.sql(s"DELETE FROM $t WHERE k = 5") // v3
+    Seq[(Long, String, Double)]((2L, "m", -1.0), (3L, null, 30.0), (6L, "", 6.0),
+      (7L, null, 7.0)).toDF("k", "note", "x").createOrReplaceTempView("spec_rt_src")
+    spark.sql(
+      s"""MERGE INTO $t t USING spec_rt_src s ON t.k = s.k
+          WHEN MATCHED AND s.x < 0 THEN DELETE
+          WHEN MATCHED THEN UPDATE SET note = s.note, x = s.x
+          WHEN NOT MATCHED THEN INSERT (k, note, x) VALUES (s.k, s.note, s.x)""") // v4
+    Seq[(Long, String, Double)]((8L, "h", 8.0), (9L, null, 9.0))
+      .toDF("k", "note", "x").writeTo(t).append() // v5
+    spark.sql(s"INSERT OVERWRITE $t VALUES (10, '', 10.0), (11, NULL, 11.0), (1, 'z', 1.5)") // v6
+    spark.sql(s"ALTER TABLE $t ADD COLUMNS (extra STRING)")
+    Seq[(Long, String, Double, String)]((12L, "l", 12.0, ""), (13L, "", 13.0, null),
+      (14L, null, 14.0, "e")).toDF("k", "note", "x", "extra").writeTo(t).append() // v7
+    val v4 = Seq(r(1, null, 11.0), r(3, null, 30.0), r(4, "dd", 4.0), r(6, "", 6.0),
+      r(7, null, 7.0))
+    val v6 = Seq(r(1, "z", 1.5), r(10, "", 10.0), r(11, null, 11.0))
+    val expected: Seq[Seq[R]] = Seq(
+      Seq.empty,
+      Seq(r(1, "a", 1.0), r(2, null, 2.0), r(3, "", 3.0), r(4, "dd", 4.0), r(5, null, 5.0)),
+      Seq(r(1, null, 11.0), r(2, "", 12.0), r(3, "u", 13.0), r(4, "dd", 4.0), r(5, null, 5.0)),
+      Seq(r(1, null, 11.0), r(2, "", 12.0), r(3, "u", 13.0), r(4, "dd", 4.0)),
+      v4,
+      v4 ++ Seq(r(8, "h", 8.0), r(9, null, 9.0)),
+      v6,
+      v6 ++ Seq(r(12, "l", 12.0, ""), r(13, "", 13.0), r(14, null, 14.0, "e")))
+    def read(asOf: String): Seq[R] =
+      spark.sql(s"SELECT k, note, x, extra FROM $t $asOf ORDER BY k")
+        .as[(Long, Option[String], Double, Option[String])].collect().toSeq
+    for ((rows, v) <- expected.zipWithIndex) {
+      assert(read(s"VERSION AS OF $v") === rows, s"VERSION AS OF $v")
+      assert(read(s"TIMESTAMP AS OF '2024-06-01 00:0$v:30'") === rows,
+        s"TIMESTAMP AS OF version $v")
+    }
+    assert(read("") === expected.last, "current read")
+    assert(catalogTable("spec", "rt").snapshotAt(1)._2.length > 1,
+      "the round trip must cover a version of several pages")
+  }
+
+  test("MergeableCatalog packs committed rows: ≤ 40 B per (bigint, double, int) row") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
+    spark.sql("DROP TABLE IF EXISTS graftcat.spec.compact")
+    spark.sql("CREATE TABLE graftcat.spec.compact (k BIGINT, v DOUBLE, n INT)")
+    spark.range(10000)
+      .selectExpr("id AS k", "id * 0.5 AS v", "CAST(id % 7 AS INT) AS n")
+      .writeTo("graftcat.spec.compact").append()
+    val bytes = catalogTable("spec", "compact").storedBytes
+    // 32 B of UnsafeRow (null bits + three 8 B slots) + a 4 B offset
+    assert(bytes / 10000.0 <= 40.0, s"$bytes B stored for 10,000 rows")
+    assert(spark.table("graftcat.spec.compact").agg(sum("k"), sum("n")).as[(Long, Long)]
+      .head() === ((49995000L, (0 until 10000).map(_ % 7).sum.toLong)))
+  }
+
+  test("MergeableCatalog bucketed table: every page holds rows of one bucket") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
+    val t = "graftcat.spec.bucketed"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
+    spark.range(-50, 50).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+      .repartition(3).writeTo(t).append() // v1
+    spark.range(-10, 60, 5).selectExpr("id AS k", "'m' AS v")
+      .createOrReplaceTempView("spec_bucketed_src")
+    spark.sql(
+      s"""MERGE INTO $t t USING spec_bucketed_src s ON t.k = s.k
+          WHEN MATCHED THEN UPDATE SET v = s.v
+          WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""") // v2
+    val table = catalogTable("spec", "bucketed")
+    for (v <- 1 to 2) {
+      val pages = table.snapshotAt(v)._2
+      assert(pages.map(_.bucket).toSet === (0 until 4).toSet, s"version $v")
+      for (p <- pages; row <- p.rows(2))
+        assert(Math.floorMod(row.getLong(0), 4L) === p.bucket.toLong,
+          s"version $v: key ${row.getLong(0)} in a page of bucket ${p.bucket}")
+    }
+    val got = spark.table(t).as[(Long, String)].collect().toMap
+    assert(got.size === 102 && got(-10L) === "m" && got(55L) === "m" && got(-49L) === "-49")
+  }
+
   test("configValue precedence: SparkConf beats env beats default") {
     val env = Map("GRAFT_TEST_KNOB" -> "from-env")
     spark.conf.set("spark.graft.test.knob", "from-conf")
