@@ -318,8 +318,6 @@ class MergeableMemTable(
   private[plans] def storedPages: Set[RowPage] =
     synchronized { history.iterator.flatten.toSet }
 
-  private[graft] def storedBytes: Long = storedPages.iterator.map(_.sizeInBytes).sum
-
   override def name(): String = tableName
   override def schema(): StructType = synchronized { curSchema }
   override def partitioning(): Array[Transform] =

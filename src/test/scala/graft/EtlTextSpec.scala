@@ -446,7 +446,7 @@ class EtlTextSpec extends SparkTestBase {
     spark.range(10000)
       .selectExpr("id AS k", "id * 0.5 AS v", "CAST(id % 7 AS INT) AS n")
       .writeTo("graftcat.spec.compact").append()
-    val bytes = catalogTable("spec", "compact").storedBytes
+    val bytes = catalogTable("spec", "compact").snapshotAt(1)._2.map(_.sizeInBytes).sum
     // 32 B of UnsafeRow (null bits + three 8 B slots) + a 4 B offset
     assert(bytes / 10000.0 <= 40.0, s"$bytes B stored for 10,000 rows")
     assert(spark.table("graftcat.spec.compact").agg(sum("k"), sum("n")).as[(Long, Long)]
