@@ -63,7 +63,7 @@ object Bench {
     "dedup_substring",      // sliding-window cross-doc duplication profile
     "join_interval",        // grid-bucketed interval overlap join
     // Round-7: the new heavy families join the gate (round-4/5 pattern).
-    "sql_merge_into",       // v2-catalog MERGE (group-based ReplaceData)
+    "sql_merge_into",       // v2-catalog MERGE (delta-based WriteDelta)
     "stream_merge",         // per-micro-batch MERGE w/ tombstones
     "pipeline_quality_classifier", // 3-round GD training, 1 agg per round
     "stream_ann_ingest",    // streamed IVF cell assignment + partitioned append

@@ -14,8 +14,8 @@ import java.nio.file.{Files, Paths}
   * bytes of the blocks the build created and left behind (checkpoints and
   * caches it did not release, broadcast variables), read right after the
   * build, so blocks the ContextCleaner has not collected yet still count;
-  * then the bytes of the `MergeableCatalog` pages the build added to the
-  * catalog's tables, over all their versions. Usage:
+  * then the bytes of the `MergeableCatalog` pages and deletion bitmaps
+  * the build added to the catalog's tables, over all their versions. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -42,7 +42,7 @@ object Explain {
         try {
           val sc = spark.sparkContext
           val before = GraftBus.blocks(sc).keySet
-          val pagesBefore = graft.plans.MergeableCatalog.storedPages
+          val storedBefore = graft.plans.MergeableCatalog.stored
           sc.setJobGroup(name, name)
           val df = try fn(spark, sfDir) finally sc.clearJobGroup()
           GraftBus.drain(sc)
@@ -50,8 +50,8 @@ object Explain {
           val left = GraftBus.blocks(sc).filter { case (id, _) => !before(id) }
           def mb(kind: BlockId => Boolean) =
             left.collect { case (id, bytes) if kind(id) => bytes }.sum / 1e6
-          val catalog = (graft.plans.MergeableCatalog.storedPages -- pagesBefore)
-            .iterator.map(_.sizeInBytes).sum / 1e6
+          val catalog = (graft.plans.MergeableCatalog.stored -- storedBefore.keySet)
+            .values.sum / 1e6
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.DataFrame
@@ -37,6 +38,12 @@ object Materialize {
     deleteTree(p)
     Files.createDirectories(p)
   }
+
+  /** The entries of directory `dir`, with the listing's stream closed —
+    * a bare `Files.list` stream holds a directory handle until collected.
+    */
+  def listDir(dir: Path): Seq[Path] =
+    Using.resource(Files.list(dir))(_.iterator().asScala.toVector)
 
   /** Deletes `p` and everything under it; a missing `p` is a no-op. */
   def deleteTree(p: Path): Unit =

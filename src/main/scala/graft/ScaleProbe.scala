@@ -67,8 +67,7 @@ object ScaleProbe {
     }
     val evTmp = outP.resolve("events.tmp")
     evX.coalesce(1).write.mode(SaveMode.Overwrite).parquet(evTmp.toString)
-    val part = Files.list(evTmp).filter(_.toString.endsWith(".parquet"))
-      .findFirst().get()
+    val part = Materialize.listDir(evTmp).find(_.toString.endsWith(".parquet")).get
     val evTarget = outP.resolve("events.parquet")
     Materialize.deleteTree(evTarget)
     Files.move(part, evTarget)

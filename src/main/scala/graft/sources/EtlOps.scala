@@ -139,8 +139,7 @@ object EtlOps {
       val tmp = scratchDir(sfDir, s"events_files_stage$half")
       events.filter(col("event_id") % 2 === half)
         .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
+      val part = Materialize.listDir(tmp).find(_.toString.endsWith(".parquet")).get
       Files.copy(part, dir.resolve(s"load-$half.parquet"))
     }
     spark.read.parquet(dir.toString)
@@ -1388,10 +1387,13 @@ object EtlOps {
     * merge load 2 with all three verbs in one statement — UPDATE on
     * match, DELETE on a matched high-price guard, INSERT on no-match.
     * Runs through Spark's native MERGE machinery (`RewriteMergeIntoTable`
-    * → group-based ReplaceData) against `graft.plans.MergeableCatalog`,
+    * → delta-based WriteDelta) against `graft.plans.MergeableCatalog`,
     * the in-JVM v2 catalog implementing `SupportsRowLevelOperations` —
-    * the same interface and plan Iceberg/Delta use, so this entry pins
-    * the surface a warehouse user actually types. The merged result is
+    * the same interface and plan Iceberg's merge-on-read mode uses, so
+    * this entry pins the surface a warehouse user actually types. Only
+    * the changed rows are written: matched rows as deletes by position
+    * plus their new images, unmatched source rows as inserts; target
+    * rows no clause touches are not rewritten. The merged result is
     * deterministic (load ids, fixed guard), so the oracle replays the
     * same three-way split relationally.
     */
@@ -1416,9 +1418,11 @@ object EtlOps {
 
   /** SQL `UPDATE` — the single-table statement form (README.md:28):
     * in-place column rewrite behind a predicate, through Spark's
-    * `RewriteUpdateTable` group-based path over the same v2 catalog as
-    * [[sqlMergeInto]]. The rewrite unions untouched rows with updated
-    * rows and replaces the group — one distributed pass, no per-row RPC.
+    * `RewriteUpdateTable` delta path over the same v2 catalog as
+    * [[sqlMergeInto]]. The rewrite filters the scan (rows plus their
+    * positions) by the predicate and commits each selected row as a
+    * delete by position plus its new image; untouched rows stay where
+    * they are — one distributed pass, no per-row RPC.
     */
   def sqlUpdate(spark: SparkSession, sfDir: String): DataFrame = {
     val target = seededStateTable(spark, sfDir, "orders_upd")
@@ -1433,8 +1437,8 @@ object EtlOps {
 
   /** SQL `DELETE FROM` — the retention/redaction statement (the GDPR
     * shape a raw store needs): predicate delete through
-    * `RewriteDeleteFromTable`'s group-based path — the kept rows are
-    * re-written, the group is swapped atomically.
+    * `RewriteDeleteFromTable`'s delta path — the commit marks the
+    * matching positions deleted and writes no row.
     */
   def sqlDelete(spark: SparkSession, sfDir: String): DataFrame = {
     val target = seededStateTable(spark, sfDir, "orders_del")
@@ -1448,7 +1452,8 @@ object EtlOps {
     * (version 1 = the seed load) against current state after an UPDATE —
     * the audit-diff every warehouse history feature exists to serve.
     * Versioned and current scans are two independent snapshot reads of
-    * shared immutable pages; no copy, no log replay.
+    * shared immutable pages, each skipping the rows its own version's
+    * bitmaps mark deleted; no copy, no log replay.
     */
   def sqlTimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
     val target = seededStateTable(spark, sfDir, "orders_tt") // commit 1

@@ -1,14 +1,13 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
 
 import graft.Materialize
-import graft.Materialize.scratchDir
+import graft.Materialize.{listDir, scratchDir}
 
 /** Structured Streaming surface — SURVEY.md §2.9. The reference is
   * batch-per-run, but its semantics — append-only raw collections,
@@ -107,14 +106,6 @@ object StreamOps {
       Files.setLastModifiedTime(staged,
         java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 1000L))
     }
-  }
-
-  /** `Files.list` with the stream handle closed — the bare stream leaks a
-    * directory fd per call (r15, advisor item).
-    */
-  private def listDir(dir: Path): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.toVector finally s.close()
   }
 
   /** Run `body` with the stateful-shard count pinned to `n` — the
@@ -343,7 +334,6 @@ object StreamOps {
 
   def streamDedupNear(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     graft.plans.TextKernels.register(spark)
     graft.plans.MinHashSig.register(spark)
     val cap = graft.operators.LlmOps.LshMaxBucket
@@ -686,7 +676,6 @@ object StreamOps {
     */
   def streamTimerSessions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
@@ -885,7 +874,6 @@ object StreamOps {
     */
   def streamRecentEvents(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set(
       "spark.sql.streaming.stateStore.providerClass",
@@ -1446,7 +1434,6 @@ object StreamOps {
 
   def streamTransitions(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
     val evs: Dataset[FunnelEvW] =
       stagedQuarterStream(spark, sfDir, "stream_transitions")
         // watermark feeds the TTL timers only; arrival is event-time

@@ -251,7 +251,7 @@ class EtlTextSpec extends SparkTestBase {
     assert(br.currentState === "closed", "the true probe drives the close")
   }
 
-  test("sql_merge_into: all three MERGE verbs apply; plan is group-based ReplaceData") {
+  test("sql_merge_into: all three MERGE verbs apply; plan is delta-based WriteDelta") {
     spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
     spark.sql("DROP TABLE IF EXISTS graftcat.spec.t")
     spark.sql("CREATE TABLE graftcat.spec.t (k BIGINT, v DOUBLE, load_id INT)")
@@ -266,15 +266,15 @@ class EtlTextSpec extends SparkTestBase {
          WHEN MATCHED AND s.v > 400000.0 THEN DELETE
          WHEN MATCHED THEN UPDATE SET v = s.v, load_id = s.load_id
          WHEN NOT MATCHED THEN INSERT (k, v, load_id) VALUES (s.k, s.v, s.load_id)"""
-    // plan pin BEFORE executing: the rewrite must produce the group-based
-    // row-level plan (ReplaceData over the v2 table), not a fallback.
+    // plan pin BEFORE executing: the rewrite must produce the delta-based
+    // row-level plan (WriteDelta over the v2 table), not a fallback.
     // `.analyzed` only — optimizedPlan/executedPlan EXECUTE commands
     // eagerly (QueryExecution.commandExecuted), and MERGE isn't idempotent
     val analyzed = spark.sessionState
       .executePlan(spark.sessionState.sqlParser.parsePlan(stmt))
       .analyzed.toString
-    assert(analyzed.contains("ReplaceData"),
-      s"expected group-based ReplaceData rewrite, got:\n$analyzed")
+    assert(analyzed.contains("WriteDelta") && !analyzed.contains("ReplaceData"),
+      s"expected delta-based WriteDelta rewrite, got:\n$analyzed")
     spark.sql(stmt)
     val out = spark.table("graftcat.spec.t").orderBy("k")
       .as[(Long, Double, Int)].collect().toSeq
@@ -283,7 +283,7 @@ class EtlTextSpec extends SparkTestBase {
     assert(out === Seq((1L, 10.0, 1), (2L, 999.0, 2), (4L, 40.0, 2)))
   }
 
-  test("sql UPDATE and DELETE rewrite group-based over the v2 table and apply exactly") {
+  test("sql UPDATE and DELETE rewrite delta-based over the v2 table and apply exactly") {
     spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
     spark.sql("DROP TABLE IF EXISTS graftcat.spec.dml")
     spark.sql("CREATE TABLE graftcat.spec.dml (k BIGINT, v DOUBLE)")
@@ -295,8 +295,8 @@ class EtlTextSpec extends SparkTestBase {
       val analyzed = spark.sessionState
         .executePlan(spark.sessionState.sqlParser.parsePlan(stmt))
         .analyzed.toString
-      assert(analyzed.contains("ReplaceData"),
-        s"expected group-based ReplaceData rewrite for: $stmt\n$analyzed")
+      assert(analyzed.contains("WriteDelta") && !analyzed.contains("ReplaceData"),
+        s"expected delta-based WriteDelta rewrite for: $stmt\n$analyzed")
     }
     spark.sql(upd)
     assert(spark.table("graftcat.spec.dml").orderBy("k").as[(Long, Double)]
@@ -474,6 +474,94 @@ class EtlTextSpec extends SparkTestBase {
         assert(Math.floorMod(row.getLong(0), 4L) === p.bucket.toLong,
           s"version $v: key ${row.getLong(0)} in a page of bucket ${p.bucket}")
     }
+    val got = spark.table(t).as[(Long, String)].collect().toMap
+    assert(got.size === 102 && got(-10L) === "m" && got(55L) === "m" && got(-49L) === "-49")
+  }
+
+  /** The pages version `v` of `table` adds over version v - 1, and the
+    * bytes of the bitmaps it does not share with v - 1.
+    */
+  private def addedAt(table: graft.plans.MergeableMemTable, v: Int)
+      : (Seq[graft.plans.LivePage], Long) = {
+    val (prev, cur) = (table.snapshotAt(v - 1)._2, table.snapshotAt(v)._2)
+    val prevIds = prev.map(_.id).toSet
+    val prevBitmaps = prev.flatMap(p => Option(p.deleted)).toSet
+    (cur.filterNot(p => prevIds(p.id)),
+      cur.flatMap(p => Option(p.deleted)).filterNot(prevBitmaps).map(8L * _.length).sum)
+  }
+
+  test("MergeableCatalog delta writes: UPDATE, DELETE and MERGE store only the rows they change") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
+    val t = "graftcat.spec.delta"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v DOUBLE, n INT)")
+    val n = 10240 // four seed pages of 2,560 rows
+    spark.range(0, n, 1, 4)
+      .selectExpr("id AS k", "id * 0.5 AS v", "CAST(id % 7 AS INT) AS n")
+      .writeTo(t).append() // v1
+    val table = catalogTable("spec", "delta")
+    def keys(pages: Seq[graft.plans.LivePage]): Seq[Long] =
+      pages.flatMap(_.rows(3).map(_.getLong(0))).sorted
+    // UPDATE of k rows: one page set of the k new images, ≤ n/8 B of bitmap
+    spark.sql(s"UPDATE $t SET v = -v, n = 99 WHERE k % 10 = 0") // v2
+    val (upd, updBits) = addedAt(table, 2)
+    val k = n / 10
+    assert(keys(upd) === (0L until n by 10), "the UPDATE stores its rows and no other")
+    assert(upd.map(_.sizeInBytes).sum <= 40L * k, s"${upd.map(_.sizeInBytes).sum} B for $k rows")
+    assert(updBits > 0 && updBits <= n / 8, s"$updBits B of bitmap for $n rows")
+    assert(table.snapshotAt(1)._2.map(_.page).forall(table.snapshotAt(2)._2.map(_.page).contains),
+      "the seed pages are shared, not copied")
+    // DELETE in one seed page: no page added, one bitmap copied
+    spark.sql(s"DELETE FROM $t WHERE k >= 7680 AND k % 2 = 1") // v3
+    val (del, delBits) = addedAt(table, 3)
+    assert(del.isEmpty, "a DELETE adds no page")
+    assert(delBits === 2560 / 8, "only the touched page's bitmap is new")
+    assert(table.snapshotAt(3)._2.count(p => table.snapshotAt(2)._2.contains(p)) ===
+      table.snapshotAt(2)._2.length - 1, "untouched pages and bitmaps are shared")
+    // MERGE: 200 updates, 100 guarded deletes, 300 inserts
+    spark.range(0, 300).selectExpr("id * 7 + 1 AS k", "CAST(id AS DOUBLE) AS v")
+      .union(spark.range(n, n + 300).selectExpr("id AS k", "1.0 AS v"))
+      .createOrReplaceTempView("spec_delta_src")
+    spark.sql(
+      s"""MERGE INTO $t t USING spec_delta_src s ON t.k = s.k
+          WHEN MATCHED AND s.v >= 200 THEN DELETE
+          WHEN MATCHED THEN UPDATE SET v = s.v, n = 7
+          WHEN NOT MATCHED THEN INSERT (k, v, n) VALUES (s.k, s.v, 0)""") // v4
+    val (merged, _) = addedAt(table, 4)
+    assert(keys(merged) === ((0L until 200).map(_ * 7 + 1) ++ (n.toLong until n + 300L)).sorted,
+      "the MERGE stores its updated and inserted rows and no other")
+    val deleted = (7680L until n by 2).map(_ + 1).toSet ++ (200L until 300).map(_ * 7 + 1)
+    val updated = (0L until 200).map(i => (i * 7 + 1) -> i.toDouble).toMap
+    val expected = ((0L until n).filterNot(deleted).map { key =>
+      key -> updated.getOrElse(key, if (key % 10 == 0) -key * 0.5 else key * 0.5)
+    } ++ (n.toLong until n + 300L).map(_ -> 1.0)).sorted
+    assert(spark.table(t).schema.fieldNames.toSeq === Seq("k", "v", "n"),
+      "plain reads do not carry the row position")
+    assert(spark.table(t).orderBy("k").select("k", "v").as[(Long, Double)].collect().toSeq
+      === expected)
+  }
+
+  test("MergeableCatalog bucketed MERGE: each new page holds one bucket and only merged rows") {
+    spark.conf.set("spark.sql.catalog.graftcat", "graft.plans.MergeableCatalog")
+    val t = "graftcat.spec.bucketed_delta"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
+    spark.range(-50, 50).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+      .repartition(3).writeTo(t).append() // v1
+    spark.range(-10, 60, 5).selectExpr("id AS k", "'m' AS v")
+      .createOrReplaceTempView("spec_bucketed_delta_src")
+    spark.sql(
+      s"""MERGE INTO $t t USING spec_bucketed_delta_src s ON t.k = s.k
+          WHEN MATCHED THEN UPDATE SET v = s.v
+          WHEN NOT MATCHED THEN INSERT (k, v) VALUES (s.k, s.v)""") // v2
+    val table = catalogTable("spec", "bucketed_delta")
+    val (added, _) = addedAt(table, 2)
+    assert(added.nonEmpty)
+    for (p <- added; row <- p.rows(2))
+      assert(Math.floorMod(row.getLong(0), 4L) === p.bucket.toLong,
+        s"key ${row.getLong(0)} in a new page of bucket ${p.bucket}")
+    assert(added.flatMap(_.rows(2).map(_.getLong(0))).sorted === (-10L until 60 by 5),
+      "the new pages hold the merged rows and no other")
     val got = spark.table(t).as[(Long, String)].collect().toMap
     assert(got.size === 102 && got(-10L) === "m" && got(55L) === "m" && got(-49L) === "-49")
   }

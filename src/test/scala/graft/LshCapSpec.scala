@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Observation}
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.operators.{LlmOps, SimOps}

@@ -1098,7 +1098,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("sim_pca scatter: outer product is chained codegen Generates, no interpreted lambdas (r15)") {
-    import org.apache.spark.sql.functions.col
     val p = plan(SimOps.pcaScatterStage(embeddings(spark, sf0001)))
     // the corpus-sized stage must not build the 4096-element product
     // array with higher-order-function lambdas (CodegenFallback); the
@@ -1131,7 +1130,6 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("walk pair census: pivot + literal pair fanout — no self-join, no sort, no HOF lambdas (r15)") {
-    import org.apache.spark.sql.functions._
     val census = GraphOps.walkPairsRaw(
       orders(spark, sf0001), lineitem(spark, sf0001))
     val root = census.queryExecution.executedPlan match {
