@@ -15,7 +15,12 @@ import java.nio.file.{Files, Paths}
   * caches it did not release, broadcast variables), read right after the
   * build, so blocks the ContextCleaner has not collected yet still count;
   * then the bytes of the `MergeableCatalog` pages and deletion bitmaps
-  * the build added to the catalog's tables, over all their versions. Usage:
+  * the build added to the catalog's tables, over all their versions. The
+  * frame is then run once through the `noop` sink, and the third line is
+  * `action blocks: <MB> rdd, <MB> broadcast, <MB> largest`: the blocks
+  * that action created and left behind, the last figure the largest
+  * single broadcast block among them. A lazy entry makes its broadcast
+  * relations only when it runs, so only this line sees them. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -47,16 +52,23 @@ object Explain {
           val df = try fn(spark, sfDir) finally sc.clearJobGroup()
           GraftBus.drain(sc)
           val jobs = sc.statusTracker.getJobIdsForGroup(name).length
-          val left = GraftBus.blocks(sc).filter { case (id, _) => !before(id) }
-          def mb(kind: BlockId => Boolean) =
-            left.collect { case (id, bytes) if kind(id) => bytes }.sum / 1e6
+          val built = GraftBus.blocks(sc)
+          val left = built.filter { case (id, _) => !before(id) }
+          def mb(blocks: Map[BlockId, Long], kind: BlockId => Boolean) =
+            blocks.collect { case (id, bytes) if kind(id) => bytes }.sum / 1e6
           val catalog = (graft.plans.MergeableCatalog.stored -- storedBefore.keySet)
             .values.sum / 1e6
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
+          df.write.format("noop").mode("overwrite").save()
+          val ran = GraftBus.blocks(sc).filter { case (id, _) => !built.contains(id) }
+          val largest =
+            ran.collect { case (id, b) if id.isBroadcast => b }.foldLeft(0L)(math.max) / 1e6
           Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"),
-            f"jobs: $jobs\nblocks: ${mb(_.isRDD)}%.1f rdd, " +
-              f"${mb(_.isBroadcast)}%.1f broadcast, $catalog%.1f catalog\n$plan")
+            f"jobs: $jobs\nblocks: ${mb(left, _.isRDD)}%.1f rdd, " +
+              f"${mb(left, _.isBroadcast)}%.1f broadcast, $catalog%.1f catalog\n" +
+              f"action blocks: ${mb(ran, _.isRDD)}%.2f rdd, " +
+              f"${mb(ran, _.isBroadcast)}%.2f broadcast, $largest%.2f largest\n$plan")
           System.err.println(s"[explain] $name -> ${name}_$suffix.txt")
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")

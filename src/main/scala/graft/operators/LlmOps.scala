@@ -99,27 +99,38 @@ object LlmOps {
     * itself, so visibility costs no extra pass over the data. (Caveat: if
     * the ENTIRE result is empty, AQE's runtime empty-relation propagation
     * replaces the join subtree — CollectMetrics included — and the metric
-    * never fires; on any non-degenerate corpus some pair survives.)
+    * never fires; on any non-degenerate corpus some pair survives.) The
+    * verify broadcasts the candidate pairs' endpoint ids, never shingle
+    * sets (see [[dedupNearCapped]]).
     */
   def dedupNear(documents: DataFrame): DataFrame =
     dedupNearCapped(documents, LshMaxBucket, None)
 
   /** The 100 TB form of [[dedupNear]] — identical semantics (spec-pinned
     * identity; same oracle), different DAG economics. The recompute form
-    * re-evaluates the shingle kernel once per DAG branch (bands + both
-    * verify sides) — cheapest at bench scale, where the sets are
-    * document-sized and re-hashing beats extra exchanges (BASELINE.md
-    * round-5 measurement). At corpus scale those re-runs dominate, so the
-    * pruned form (a) MATERIALIZES the kernel output once
-    * (localCheckpoint here; a persisted signature table in production)
-    * and (b) PRUNES the verify stage to candidate docs only: the
-    * candidate-pair id set (collision-bounded, tiny) broadcast-semi-joins
-    * the shingle table map-side, so the verify shuffle carries only
-    * candidates' sets — not the whole corpus — on each side.
+    * runs the shingle kernel twice per document, once for the bands and
+    * once for the verify — cheapest at bench scale, where the sets are
+    * document-sized and re-hashing beats a materialization (BASELINE.md
+    * round-5 measurement). At corpus scale the rerun dominates, so the
+    * pruned form MATERIALIZES the kernel output once and the candidate
+    * pair set (localCheckpoints here; persisted tables in production),
+    * and its verify streams the materialized shingle table. Both forms
+    * share the one verify, so both shuffle only candidates' sets.
     */
   def dedupNearPruned(documents: DataFrame): DataFrame =
     dedupNearCapped(documents, LshMaxBucket, None, pruned = true)
 
+  /** The near-dup pipeline behind [[dedupNear]], [[dedupNearPruned]], the
+    * recall audit and the threshold sweep: `maxBucket` caps LSH buckets,
+    * `overflow` counts the dropped ones, `minJac` is the verify cutoff.
+    *
+    * The verify explodes each candidate pair into its two
+    * (doc_a, doc_b, doc_id) endpoint rows and broadcasts those — ids
+    * only, collision-bounded. The shingle table streams past them and
+    * the matches regroup by pair, so only candidates' sets reach a
+    * shuffle. This relies on doc_id being unique (FIXTURES.md): each pair
+    * then gathers exactly one set per endpoint.
+    */
   private[graft] def dedupNearCapped(
       documents: DataFrame, maxBucket: Int,
       overflow: Option[Observation], pruned: Boolean = false,
@@ -165,25 +176,17 @@ object LlmOps {
             struct(x.as("doc_a"), y.as("doc_b")))))).as("pair"))
       .select(col("pair.doc_a").as("doc_a"), col("pair.doc_b").as("doc_b"))
       .distinct()
-    // pruned mode: materialize the pair set (it feeds three consumers —
-    // the verify join and both id-prune sides) and narrow the verify
-    // inputs to candidate docs via a broadcast semi-join, so only
-    // candidates' shingle sets ride the verify shuffle
     val cand = if (pruned) candAll.localCheckpoint(eager = false) else candAll
-    val verifySrc =
-      if (pruned) {
-        val candIds = cand
-          .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-          .distinct()
-        withSh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      } else withSh
-    val sa = verifySrc.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val sb = verifySrc.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+    // doc_a < doc_b, so the lower endpoint's set is sh_a
+    val ends = cand.select(col("doc_a"), col("doc_b"),
+      explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
+    val sets = withSh.join(broadcast(ends), "doc_id")
+      .groupBy("doc_a", "doc_b")
+      .agg(min_by(col("sh"), col("doc_id")).as("sh_a"),
+        max_by(col("sh"), col("doc_id")).as("sh_b"))
     val inter = size(array_intersect(col("sh_a"), col("sh_b")))
     val jac = inter.cast("double") / (size(col("sh_a")) + size(col("sh_b")) - inter)
-    cand
-      .join(sa, "doc_a")
-      .join(sb, "doc_b")
+    sets
       .select(col("doc_a"), col("doc_b"), round(jac, 6).as("jac"))
       .filter(col("jac") >= minJac)
       .orderBy("doc_a", "doc_b")

@@ -553,13 +553,16 @@ object TextOps {
     * document frequency — past the stopword head, still high-df enough to
     * rank many candidates); per term, the top-10 documents by score.
     *
-    * Scale shape: tf / dl / df are the same three hash aggregates tf-idf
-    * runs (one token explode feeds all three); the query-term cut is a
-    * TakeOrderedAndProject top-12 of the df AGGREGATE (never a full
-    * vocabulary sort); query terms and the two corpus scalars broadcast;
-    * the only post-aggregate shuffle is the per-term top-k window over
-    * candidate rows. At 100 TB the candidate table is |terms|-bounded per
-    * doc, not corpus-quadratic.
+    * Scale shape: the corpus is tokenized twice. The first pass is the
+    * df aggregate, cut by a TakeOrderedAndProject top-12 (never a full
+    * vocabulary sort) and collected: the 3 query terms are a summary
+    * small enough to ride in the plan as literals. The second pass is
+    * ONE aggregate by doc_id that counts dl and each term's tf, unpivoted
+    * to one row per (doc, term). Nothing is joined by token or doc_id, so
+    * no hash relation is built; only the 1-row n_docs scalar broadcasts.
+    * tot_toks is a sum of dl over the term's whole window partition, which
+    * the per-term top-10 window then reuses: the unpivot is the one
+    * post-aggregate shuffle, |terms| rows per doc.
     */
   def textBm25(documents: DataFrame): DataFrame = {
     val k1 = 1.2
@@ -567,20 +570,25 @@ object TextOps {
     val toks = documents
       .select(col("doc_id"), explode(split(lower(col("text")), " ")).as("token"))
       .filter(col("token") =!= "")
-    val tf = toks.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
-    val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-    val dfreq = toks.select("doc_id", "token").distinct()
+    val top = toks.select("doc_id", "token").distinct()
       .groupBy("token").agg(count(lit(1)).as("df"))
-    val qterms = dfreq.orderBy(desc("df"), asc("token")).limit(12)
-      .withColumn("r",
-        row_number().over(Window.orderBy(desc("df"), asc("token")))) // 12-row window
-      .filter(col("r") >= 10)
-      .select(col("token"), col("df"))
-    val scalars = documents.agg(countDistinct(col("doc_id")).as("n_docs"))
-      .crossJoin(toks.agg(count(lit(1)).as("tot_toks")))
-    val scored = tf.join(broadcast(qterms), "token")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(scalars))
+      .orderBy(desc("df"), asc("token")).limit(12)
+      .collect().drop(9).map(r => (r.getString(0), r.getLong(1))).toSeq
+    // "" is never a token: under 10 distinct tokens every tf is 0 and the
+    // frame comes out empty, typed like any other
+    val terms = if (top.nonEmpty) top else Seq(("", 0L))
+    val perDoc = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"),
+      terms.indices.map(i => count(when(col("token") === terms(i)._1, 1)).as(s"tf$i")): _*)
+    val nDocs = documents.agg(countDistinct(col("doc_id")).as("n_docs"))
+    val scored = perDoc
+      .select(col("doc_id"), col("dl"), explode(array(terms.indices.map { i =>
+        struct(lit(terms(i)._1).as("term"), lit(terms(i)._2).as("df"), col(s"tf$i").as("tf"))
+      }: _*)).as("q"))
+      .select(col("doc_id"), col("dl"), col("q.*"))
+      // every doc group, a null doc_id's too, sits once in each partition
+      .withColumn("tot_toks", sum(col("dl")).over(Window.partitionBy("term")))
+      .filter(col("tf") > 0 && col("doc_id").isNotNull)
+      .crossJoin(broadcast(nDocs))
       .withColumn("avgdl", col("tot_toks").cast("double") / col("n_docs"))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + 0.5) / (col("df") + 0.5)))
@@ -589,8 +597,6 @@ object TextOps {
           (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))), 6))
     val w = Window.partitionBy("term").orderBy(desc("score"), asc("doc_id"))
     scored
-      .select(col("token").as("term"), col("doc_id"), col("tf"), col("dl"),
-        col("score"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 10)
       .select(col("term"), col("rnk"), col("doc_id"), col("tf"), col("dl"),

@@ -401,8 +401,8 @@ object StreamOps {
     * below the batch entry's 0.6 operating point (the spec seeds
     * exactly such a pair and pins it `verified = 0`). This entry joins
     * the streamed pair set back to the exact shingle sets — candidate
-    * docs only, broadcast-semi pruned (the dedupNearPruned shape:
-    * streamed pairs are collision-bounded and tiny, so the verify
+    * docs only, pruned by a broadcast left-semi join on their ids
+    * (streamed pairs are collision-bounded and tiny, so the verify
     * shuffle carries candidates, not the corpus) — and emits each pair
     * with its exact Jaccard and a 0/1 `verified` flag at the batch
     * threshold. At 100 TB this is the standing audit query over the

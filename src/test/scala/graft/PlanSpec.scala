@@ -198,6 +198,10 @@ class PlanSpec extends SparkTestBase {
     }
   }
 
+  test("dedup_near: the verify broadcasts candidate endpoint ids, never shingle sets") {
+    assertOneIdBroadcast(LlmOps.dedupNear(documents(spark, sf0001)))
+  }
+
   test("dedup_simhash: signature kernel evaluated ONCE, and the fused pipeline is join-free") {
     val p = plan(SimOps.dedupSimhash(documents(spark, sf0001)))
     // the one-bigint signature rides the band shuffle and the pair stream
@@ -921,11 +925,31 @@ class PlanSpec extends SparkTestBase {
   }
 
   test("text_bm25: the query-term cut is a top-12 TakeOrdered of the df aggregate, never a vocabulary sort") {
-    val p = plan(operators.TextOps.textBm25(documents(spark, sf0001)))
-    assert(p.contains("TakeOrderedAndProject"),
-      s"vocabulary cut must be TakeOrderedAndProject:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"query terms and scalars must broadcast:\n$p")
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // the query terms are collected while the frame is built: capture
+    // the plan of that collect
+    val built = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        built.synchronized(built += qe.executedPlan.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val df = try {
+      val df = operators.TextOps.textBm25(documents(spark, sf0001))
+      org.apache.spark.GraftBus.drain(spark.sparkContext)
+      df
+    } finally spark.listenerManager.unregister(listener)
+    assert(built.exists(_.contains("TakeOrderedAndProject")),
+      s"vocabulary cut must be TakeOrderedAndProject:\n${built.mkString("\n")}")
+    // scoring reads the 3 collected terms as literals: no relation by
+    // token or doc_id is hashed, and one token explode feeds the scoring
+    df.collect()
+    val p = plan(df).split("== Initial Plan ==").head
+    assert(!p.contains("BroadcastHashJoin"), s"scoring must build no hash join:\n$p")
+    assert("explode\\(split".r.findAllIn(p).length == 1,
+      s"scoring must tokenize documents once:\n$p")
   }
 
   test("pipeline_dsir: the bucket weight table broadcasts onto the token scan") {

@@ -44,6 +44,46 @@ class RetrievalSamplingSpec extends SparkTestBase {
     }
   }
 
+  // The expected rows below are the output of the join-based scorer this
+  // one replaced (query terms and dl broadcast-joined by token and
+  // doc_id), so each case pins result identity on an edge of the cut.
+  private type Bm25Row = (String, Int, Long, Long, Long, Double)
+  private def bm25(docs: (Long, String)*): Seq[Bm25Row] =
+    TextOps.textBm25(docs.toDF("doc_id", "text")).as[Bm25Row].collect().toSeq
+
+  test("text_bm25: under 10 distinct tokens the result is empty, typed as usual") {
+    val df = TextOps.textBm25(Seq((1L, "a b c"), (2L, "a b")).toDF("doc_id", "text"))
+    assert(df.collect().isEmpty)
+    assert(df.schema.simpleString ===
+      "struct<term:string,rnk:int,doc_id:bigint,tf:bigint,dl:bigint,score:double>")
+  }
+
+  test("text_bm25: exactly 11 distinct tokens score 2 terms") {
+    assert(bm25((1L, "a b c d e f g h i j k k"), (2L, "a b c d e f g h i j"),
+      (3L, "a b c d e f g h i"), (4L, "a b c d e f g h j k")) === Seq(
+      ("j", 1, 2L, 1L, 10L, 0.36027), ("j", 2, 4L, 1L, 10L, 0.36027),
+      ("j", 3, 1L, 1L, 12L, 0.333389),
+      ("k", 1, 1L, 2L, 12L, 0.909409), ("k", 2, 4L, 1L, 10L, 0.700133)))
+  }
+
+  test("text_bm25: a df tie across ranks 9-13 is cut by token") {
+    // i..m all have df 2: ranks 10-12 are j, k, l
+    assert(bm25((1L, "a b c d e f g h m l k j i"), (2L, "a b c d e f g h i j"),
+      (3L, "a b c d e f g h k l m"), (4L, "a b c d e f g h")) === Seq(
+      ("j", 1, 2L, 1L, 10L, 0.706918), ("j", 2, 1L, 1L, 13L, 0.631625),
+      ("k", 1, 3L, 1L, 11L, 0.679902), ("k", 2, 1L, 1L, 13L, 0.631625),
+      ("l", 1, 3L, 1L, 11L, 0.679902), ("l", 2, 1L, 1L, 13L, 0.631625)))
+  }
+
+  test("text_bm25: an empty document counts in n_docs but adds no tokens") {
+    assert(bm25((1L, "a b c d e f g h i j k l x"), (2L, "a b c d e f g h i j k l x x"),
+      (3L, "a b c d e f g h i j y"), (4L, "")) === Seq(
+      ("j", 1, 3L, 1L, 11L, 0.335034), ("j", 2, 1L, 1L, 13L, 0.309959),
+      ("j", 3, 2L, 1L, 14L, 0.298778),
+      ("k", 1, 1L, 1L, 13L, 0.602361), ("k", 2, 2L, 1L, 14L, 0.580632),
+      ("l", 1, 1L, 1L, 13L, 0.602361), ("l", 2, 2L, 1L, 14L, 0.580632)))
+  }
+
   test("text_hashing_trick: buckets match an independent md5 computation") {
     val docs = Seq((1L, "alpha beta alpha")).toDF("doc_id", "text")
     val got = TextOps.textHashingTrick(docs)

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeLike
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites — one JVM-wide SparkSession (sbt
@@ -10,6 +13,21 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   lazy val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `df` and asserts that its final adaptive plan has exactly one
+    * broadcast exchange and that it carries no array column: the shape
+    * of the near-dup verify, which broadcasts candidate ids and streams
+    * the shingle sets. */
+  def assertOneIdBroadcast(df: DataFrame): Unit = {
+    df.collect()
+    val ran = df.queryExecution.executedPlan
+    val broadcasts = new AdaptiveSparkPlanHelper {}.collect(ran) {
+      case e: BroadcastExchangeLike => e
+    }
+    assert(broadcasts.length == 1, s"expected one broadcast exchange:\n$ran")
+    assert(!broadcasts.head.output.exists(_.dataType.isInstanceOf[ArrayType]),
+      s"the broadcast must carry ids, not arrays:\n$ran")
+  }
 }
 
 object SparkTestBase {
