@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.GraftBus
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.storage.BlockId
 import java.nio.file.{Files, Paths}
 
@@ -20,7 +22,12 @@ import java.nio.file.{Files, Paths}
   * `action blocks: <MB> rdd, <MB> broadcast, <MB> largest`: the blocks
   * that action created and left behind, the last figure the largest
   * single broadcast block among them. A lazy entry makes its broadcast
-  * relations only when it runs, so only this line sees them. Usage:
+  * relations only when it runs, so only this line sees them. The fourth
+  * line is `codegen: N compiles, <ms> ms build; M compiles, <ms> ms
+  * action`: the Janino compiles of generated classes, and their compile
+  * time, while the frame was built and while it ran. A class Spark's
+  * codegen cache still holds costs no compile, so an entry reads lower
+  * after others that ran the same code. Usage:
   *   runMain graft.Explain <sfDir> <outDir> <suffix> [names,comma,separated]
   * Environment mirrors Bench (SPARK_GRAFT_CPUS master/shuffle width) so the
   * dumped plans are the ones the bench actually executes.
@@ -47,10 +54,12 @@ object Explain {
         try {
           val sc = spark.sparkContext
           val before = GraftBus.blocks(sc).keySet
+          val compiledBefore = compiled()
           val storedBefore = graft.plans.MergeableCatalog.stored
           sc.setJobGroup(name, name)
           val df = try fn(spark, sfDir) finally sc.clearJobGroup()
           GraftBus.drain(sc)
+          val compiledBuilt = compiled()
           val jobs = sc.statusTracker.getJobIdsForGroup(name).length
           val built = GraftBus.blocks(sc)
           val left = built.filter { case (id, _) => !before(id) }
@@ -61,6 +70,9 @@ object Explain {
           val plan = df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode)
           df.write.format("noop").mode("overwrite").save()
+          val compiledRan = compiled()
+          def compiles(from: (Long, Long), to: (Long, Long)) =
+            f"${to._1 - from._1} compiles, ${(to._2 - from._2) / 1e6}%.0f ms"
           val ran = GraftBus.blocks(sc).filter { case (id, _) => !built.contains(id) }
           val largest =
             ran.collect { case (id, b) if id.isBroadcast => b }.foldLeft(0L)(math.max) / 1e6
@@ -68,7 +80,9 @@ object Explain {
             f"jobs: $jobs\nblocks: ${mb(left, _.isRDD)}%.1f rdd, " +
               f"${mb(left, _.isBroadcast)}%.1f broadcast, $catalog%.1f catalog\n" +
               f"action blocks: ${mb(ran, _.isRDD)}%.2f rdd, " +
-              f"${mb(ran, _.isBroadcast)}%.2f broadcast, $largest%.2f largest\n$plan")
+              f"${mb(ran, _.isBroadcast)}%.2f broadcast, $largest%.2f largest\n" +
+              s"codegen: ${compiles(compiledBefore, compiledBuilt)} build; " +
+              s"${compiles(compiledBuilt, compiledRan)} action\n$plan")
           System.err.println(s"[explain] $name -> ${name}_$suffix.txt")
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name failed: ${e.getMessage}")
@@ -76,4 +90,9 @@ object Explain {
       }
     spark.stop()
   }
+
+  /** The generated classes this JVM has compiled so far, and their
+    * total compile time in ns. */
+  private def compiled(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 }

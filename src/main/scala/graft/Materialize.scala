@@ -7,11 +7,12 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one owner of cache lifetimes and scratch space. The code that
-  * persists a frame releases it here, also when its body throws; every
-  * scratch directory lives under one root and every tree delete is the
-  * one below.
+  * persists or checkpoints a frame releases it here, also when its body
+  * throws; every scratch directory lives under one root and every tree
+  * delete is the one below.
   */
 object Materialize {
 
@@ -21,6 +22,18 @@ object Materialize {
     */
   def releasing[T](cached: DataFrame)(body: DataFrame => T): T =
     try body(cached) finally cached.unpersist()
+
+  /** Drops the blocks behind `checkpointed`, a frame `localCheckpoint`
+    * returned (its plan is the `LogicalRDD` over the checkpointed RDD),
+    * and waits until they are gone. Anything that still reads the frame
+    * fails afterwards: release only a checkpoint nothing reads any more.
+    */
+  def releaseCheckpoint(checkpointed: DataFrame): Unit =
+    checkpointed.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = true)
+      case other => throw new IllegalArgumentException(
+        s"not a localCheckpoint frame: ${other.nodeName}")
+    }
 
   /** `<java.io.tmpdir>/graft_etl/<sfKey>/<tag>`: the scratch location of
     * `tag` for the inputs in `sfDir` (sfKey is sfDir with every

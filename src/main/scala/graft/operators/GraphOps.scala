@@ -186,9 +186,9 @@ object GraphOps {
     // it compounds (the per-round form this replaces was the r4 fix for
     // UNBOUNDED lineage — the cadence keeps that property at half the
     // barriers)
-    finish(Supersteps.fixed(nodes.select(col("id"), lit(1.0 / n).as("rank")),
+    finish(Supersteps.last(nodes.select(col("id"), lit(1.0 / n).as("rank")),
       rounds, everySecond = true)((ranks, _) =>
-      superstepPartitioned(adj, ranks, n, damping)).last)
+      superstepPartitioned(adj, ranks, n, damping)))
   }
 
   /** The exit metric of the residual loops (pagerank, HITS): the L1
@@ -358,9 +358,9 @@ object GraphOps {
   private def componentsLoop(
       adj: DataFrame, nodes: DataFrame, rounds: Int): DataFrame =
     // every-second-hop checkpoint cadence (the loopPartitioned trade)
-    Supersteps.fixed(nodes.select(col("id"), col("id").as("label")),
+    Supersteps.last(nodes.select(col("id"), col("id").as("label")),
         rounds, everySecond = true)((labels, _) =>
-      minLabelHop(adj, labels).select("id", "label")).last
+      minLabelHop(adj, labels).select("id", "label"))
       .groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("component")
@@ -431,14 +431,14 @@ object GraphOps {
     val init = nodes.select(col("id"),
       when(col("id") % 64 === 0, lit(0L)).otherwise(lit(INF)).as("dist"))
     // every-second-hop checkpoint cadence (the loopPartitioned trade)
-    Supersteps.fixed(init, rounds, everySecond = true) { (dist, _) =>
+    Supersteps.last(init, rounds, everySecond = true) { (dist, _) =>
       val nbr = adj.join(dist, col("src") === col("id"))
         .select(explode(col("dsts")).as("nid"), (col("dist") + 1).as("nd"))
         .groupBy(col("nid"))
         .agg(min(col("nd")).as("nbr"))
       dist.join(nbr, col("id") === col("nid"))
         .select(col("id"), least(col("dist"), col("nbr")).as("dist"))
-    }.last
+    }
       .groupBy(when(col("dist") >= INF, lit(-1L)).otherwise(col("dist")).as("hops"))
       .agg(count(lit(1)).as("n_nodes"), min(col("id")).as("min_node"))
       .orderBy("hops")
@@ -794,8 +794,8 @@ object GraphOps {
     // vote chain per consumer (the multi-consumer pathology measured
     // for HITS, 17.6 s lazy vs 8.3 s; the every-second-hop cadence
     // here measured 17.1 s vs ~4.3 s per-round at sf0.1, BASELINE r9)
-    Supersteps.fixed(nodes.select(col("id"), col("id").as("label")), rounds)(
-      (labels, _) => lpaVote(adj, labels)).last
+    Supersteps.last(nodes.select(col("id"), col("id").as("label")), rounds)(
+      (labels, _) => lpaVote(adj, labels))
 
   /** The mode-vote loop + census, shared by the in-query build and the
     * stored-layout serving path (the componentsLoop convention).
@@ -1467,11 +1467,12 @@ object GraphOps {
       .persist()
 
   /** One biased superstep as a closed-form draw over the cached arrays
-    * role: join the O(walkers) state to `adj` on cur (the role's own
-    * partitioning — per step only the state frame moves), then solve
-    * the inverse-CDF crossing j* = min{ j : S(j) > u·T } directly,
-    * where S(j) is the ascending-by-c cumulative weight with the
-    * single 1/p spike at r = rank of prev in N(cur):
+    * role, appending the drawn node to the walker's `path` (the nodes it
+    * has visited, start first): join the O(walkers) state to `adj` on
+    * cur (the role's own partitioning — per step only the state frame
+    * moves), then solve the inverse-CDF crossing j* = min{ j : S(j) >
+    * u·T } directly, where S(j) is the ascending-by-c cumulative weight
+    * with the single 1/p spike at r = rank of prev in N(cur):
     *   S(j) = j·(1/q)               for j <  r
     *   S(j) = (j−1)·(1/q) + 1/p     for j >= r
     *   T    = S(n),  n = outdeg(cur).
@@ -1530,8 +1531,9 @@ object GraphOps {
       .withColumn("jstar",
         when(col("jA") < col("r"), col("jA"))
           .otherwise(greatest(col("r"), col("jB"))))
-      .select(col("start"), col("cur").as("prev"),
-        element_at(col("nbrs"), col("jstar").cast("int")).as("cur"))
+      .withColumn("nxt", element_at(col("nbrs"), col("jstar").cast("int")))
+      .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"),
+        array_append(col("path"), col("nxt")).as("path"))
   }
 
   /** The second-order draw loop shared by the in-query and stored
@@ -1542,8 +1544,11 @@ object GraphOps {
     * loop returns or throws), so per step only the O(walkers) state
     * frame moves — by the state-side hash build of [[biasedStepDraw]]:
     * without it the small cached role read as the broadcast side and
-    * was collected and broadcast once per step. Every step is
-    * checkpointed: each state feeds the next draw AND its output slice.
+    * was collected and broadcast once per step. The state carries the
+    * walker's path, so the output is the last state's path exploded by
+    * position and the loop runs on [[Supersteps.last]]: each step is
+    * checkpointed and releases the step before it, so one state's blocks
+    * outlive the loop instead of every step's.
     */
   private[graft] def biasedWalkLoop(edgesIn: DataFrame,
       steps: Int, retP: Double, outQ: Double): DataFrame =
@@ -1557,18 +1562,13 @@ object GraphOps {
           element_at(col("nbrs"), (conv(substring(
               md5(concat_ws("|", col("src"), lit(1), col("src"))), 1, 8),
             16, 10).cast("long") % size(col("nbrs")) + 1).cast("int")).as("nxt"))
-        .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"))
-      // states(i) is the state after step i + 1
-      val states = Supersteps.fixed(step1, steps - 1)((state, i) =>
-        biasedStepDraw(state, adj, i + 1, retP, outQ))
-      // slice 0 reads off the step-1 CHECKPOINT (prev = start = src there),
-      // not off `adj`: the role is released before the caller's action,
-      // so a lazy projection over it would recompute the groupBy
-      (states.head.select(col("start"), lit(0).as("step"), col("prev").as("node")) +:
-        states.zipWithIndex.map { case (state, i) =>
-          state.select(col("start"), lit(i + 1).as("step"), col("cur").as("node")) })
-        .reduce(_ unionByName _)
-        .select(col("start").as("start_id"), col("step"), col("node"))
+        .select(col("start"), col("cur").as("prev"), col("nxt").as("cur"),
+          array(col("cur"), col("nxt")).as("path"))
+      // round i draws step i + 1
+      Supersteps.last(step1, steps - 1)((state, i) =>
+          biasedStepDraw(state, adj, i + 1, retP, outQ))
+        .select(col("start").as("start_id"),
+          posexplode(col("path")).as(Seq("step", "node")))
         .orderBy("start_id", "step")
     }
 

@@ -142,8 +142,13 @@ object LlmOps {
     // cluster before hashing. The explicit partition count matters: a
     // column-only repartition is AQE-coalescible, and this shuffle is tiny
     // in BYTES (ids + text) while huge in downstream CPU, so AQE would
-    // collapse it to one task and serialize all the hashing.
+    // collapse it to one task and serialize all the hashing. A null
+    // doc_id can reach no output (collect_list and the verify's join drop
+    // it), and dropping it here keeps the verify's inferred isnotnull from
+    // sinking below this exchange on that branch alone: both branches then
+    // read one exchange, which AQE reuses instead of scanning twice.
     val spread = documents.select(col("doc_id"), col("text"))
+      .filter(col("doc_id").isNotNull)
       .repartition(documents.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
     val shingled = spread.select(col("doc_id"), shingleSet(col("text")).as("sh"))
     // pruned mode: run the shingle kernel exactly ONCE and reuse the

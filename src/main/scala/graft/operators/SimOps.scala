@@ -1096,7 +1096,7 @@ object SimOps {
     // job barrier (~0.5 s of fixed cost at any data size) — halves the
     // loop's barrier count while still truncating growth (measured vs
     // per-round: same result, less wall clock)
-    Supersteps.fixed(nodes.select(col("id"), col("id").as("label")), rounds,
+    Supersteps.last(nodes.select(col("id"), col("id").as("label")), rounds,
         everySecond = true) { (labels, _) =>
       val nbrMin = edges.join(labels, col("src") === col("id"))
         .select(col("dst").as("nid"), col("label").as("nl"))
@@ -1105,7 +1105,7 @@ object SimOps {
       labels.join(nbrMin, col("id") === col("nid"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-    }.last
+    }
       .groupBy(col("label").as("cluster"))
       .agg(count(lit(1)).as("n_members"), max(col("id")).as("max_member"))
       .filter(col("n_members") >= 2)

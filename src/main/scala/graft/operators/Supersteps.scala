@@ -5,12 +5,15 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** The one superstep driver of the iterative loops — the Pregel shape:
   * a superstep per round, plus a vote to halt for the loops that run to
   * convergence. It owns the three rules every loop used to re-spell:
   *  - lineage: the initial state and the rounds on the loop's measured
   *    cadence are eagerly localCheckpoint'ed, so round k plans against a
-  *    flat scan instead of re-evaluating rounds 1..k-1;
+  *    flat scan instead of re-evaluating rounds 1..k-1; a loop that reads
+  *    only its final state ([[last]]) keeps one checkpoint at a time;
   *  - the observed exit: a converging round is ONE checkpoint job with
   *    its exit metric riding it as an `observe()` — detection never
   *    costs a second action;
@@ -32,8 +35,39 @@ object Supersteps {
       step: (DataFrame, Int) => DataFrame): IndexedSeq[DataFrame] =
     (1 to rounds).scanLeft(checkpoint(init)) { (state, r) =>
       val next = step(state, r)
-      if (!everySecond || r % 2 == 0 || r == rounds) checkpoint(next) else next
+      if (checkpointsAt(r, rounds, everySecond)) checkpoint(next) else next
     }
+
+  /** [[fixed]] for a loop that reads only its final state: the same
+    * rounds on the same cadence, returning the state after round
+    * `rounds`. Each checkpoint releases its predecessor once it is taken,
+    * so the loop holds one state's blocks at a time instead of every
+    * round's until the ContextCleaner gets to them; a round that throws
+    * releases the one it holds. A loop whose output reads an earlier
+    * state carries what it needs forward in the state (the biased walk's
+    * path) or stays on [[fixed]].
+    */
+  def last(init: DataFrame, rounds: Int, everySecond: Boolean = false)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var held = checkpoint(init)
+    try (1 to rounds).foldLeft(held) { (state, r) =>
+      val next = step(state, r)
+      if (!checkpointsAt(r, rounds, everySecond)) next
+      else {
+        val prev = held
+        held = checkpoint(next)
+        Materialize.releaseCheckpoint(prev)
+        held
+      }
+    } catch { case e: Throwable =>
+      Materialize.releaseCheckpoint(held)
+      throw e
+    }
+  }
+
+  /** The cadence: every round, or every second round plus the last. */
+  private def checkpointsAt(r: Int, rounds: Int, everySecond: Boolean): Boolean =
+    !everySecond || r % 2 == 0 || r == rounds
 
   /** `frame` checkpointed in one job that also observes `metric` (named
     * `name`), and the metric's value — the one way a loop reads a

@@ -68,7 +68,7 @@ class ContractSpec extends SparkTestBase {
     val strays = for {
       f <- sources if f != owner
       text = java.nio.file.Files.readString(f)
-      needle <- Seq(".unpersist(", "Files.walk(", "Files.list(", "java.io.tmpdir")
+      needle <- Seq(".unpersist(", "LogicalRDD", "Files.walk(", "Files.list(", "java.io.tmpdir")
       if text.contains(needle)
     } yield s"$f: $needle"
     assert(strays.isEmpty, strays.mkString("\n"))

@@ -1139,11 +1139,21 @@ class OperatorSpec extends SparkTestBase {
     val edges = spark.range(8).select(col("id").as("src"),
       when(col("id") === 5, raise_error(lit("edge 5 is broken")))
         .otherwise(col("id") + 1).as("dst"))
+    def rddBlocks() = org.apache.spark.GraftBus.blocks(spark.sparkContext).keySet.filter(_.isRDD)
+    val blocksBefore = rddBlocks()
     val e = intercept[Exception](GraphOps.biasedWalkLoop(edges, 4, 2.0, 0.5))
     assert(e.toString.contains("edge 5 is broken") ||
       Option(e.getCause).exists(_.toString.contains("edge 5 is broken")), e.toString)
     assert(spark.sharedState.cacheManager.isEmpty,
       "the biased walk's neighbor role is still cached after the loop threw")
+    // the role's cache is released by a non-blocking unpersist, and a
+    // task that finished before the failure may have cached its partition
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    eventually(timeout(10.seconds)) {
+      val left = rddBlocks() -- blocksBefore
+      assert(left.isEmpty, s"the failed walk left RDD blocks: $left")
+    }
     // a graph build that throws: the adjacency is persisted before the
     // count() that materializes it overflows doubling the customer id
     val orders = Seq((1L, Long.MaxValue / 2 + 1)).toDF("o_orderkey", "o_custkey")

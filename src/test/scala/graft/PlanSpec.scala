@@ -202,6 +202,26 @@ class PlanSpec extends SparkTestBase {
     assertOneIdBroadcast(LlmOps.dedupNear(documents(spark, sf0001)))
   }
 
+  test("dedup_near: documents is scanned and repartitioned once, both branches read that exchange") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val df = LlmOps.dedupNear(documents(spark, sf0001))
+    df.collect()
+    // a reused exchange is a leaf here, so its subtree is not counted again
+    val ran = df.queryExecution.executedPlan
+    val stages = new AdaptiveSparkPlanHelper {}
+    val scans = stages.collect(ran) {
+      case s: FileSourceScanExec
+        if s.relation.location.rootPaths.exists(_.toString.contains("documents")) => s
+    }
+    val spreads = stages.collect(ran) {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(scans.length == 1, s"documents scanned ${scans.length} times:\n$ran")
+    assert(spreads.length == 1, s"${spreads.length} repartition exchanges run:\n$ran")
+  }
+
   test("dedup_simhash: signature kernel evaluated ONCE, and the fused pipeline is join-free") {
     val p = plan(SimOps.dedupSimhash(documents(spark, sf0001)))
     // the one-bigint signature rides the band shuffle and the pair stream
@@ -993,7 +1013,8 @@ class PlanSpec extends SparkTestBase {
     try {
       adj.count()
       val state = edgesIn.select(col("src").as("start"), col("src").as("prev"),
-        col("dst").as("cur")).distinct().localCheckpoint()
+        col("dst").as("cur")).distinct()
+        .withColumn("path", array(col("prev"), col("cur"))).localCheckpoint()
       // at the session's own threshold the cached role's exact size is
       // under it: unhinted, the planner broadcast the O(E) role per step
       for (threshold <- Seq(prev, "-1")) {
@@ -1044,7 +1065,8 @@ class PlanSpec extends SparkTestBase {
     // prev = the node itself, cur = its smallest neighbor
     val state = edgesIn.groupBy(col("src"))
       .agg(min(col("dst")).as("cur"))
-      .select(col("src").as("start"), col("src").as("prev"), col("cur"))
+      .select(col("src").as("start"), col("src").as("prev"), col("cur"),
+        array(col("src"), col("cur")).as("path"))
       .localCheckpoint()
     val (t, retP, outQ) = (2, 2.0, 0.5)
     val wCum = Window.partitionBy("start").orderBy("c")
@@ -1068,6 +1090,7 @@ class PlanSpec extends SparkTestBase {
       .filter(col("cum") > col("u") * col("tot"))
       .groupBy(col("start"))
       .agg(min(col("cur")).as("prev"), min(col("c")).as("cur"))
+      .withColumn("path", array(col("start"), col("prev"), col("cur")))
     val adj = GraphOps.biasedNeighborRole(edgesIn)
     val newForm = GraphOps.biasedStepDraw(state, adj, t, retP, outQ)
     val diff = oldForm.exceptAll(newForm).count() +
